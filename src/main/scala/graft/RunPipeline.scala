@@ -170,7 +170,7 @@ import graft.pipeline.CheckpointedRun
  *                                  # command skips them (byte-identical artifacts stay
  *                                  # put), any spec/source change rebuilds them.
  *   [--run-id run1] [--spans-col spans] [--clean-spans-col spans]
- *   [--buckets 64] [--group-size 8] [--salted true]
+ *   [--buckets 64] [--group-size 8]
  * }}}
  *
  * The run is resumable: work is committed per bucket group with a state row
@@ -800,7 +800,6 @@ object RunPipeline {
     val minFreq = a.getOrElse("min-freq", "2").toLong
     val nBuckets = a.getOrElse("buckets", "64").toInt
     val groupSize = a.getOrElse("group-size", "8").toInt
-    val salted = a.getOrElse("salted", "true").toBoolean
     val correctorName = a.getOrElse("corrector", "noisy")
     val dedupMode = a.getOrElse("dedup", "none")
     val sampleFrac = a.get("sample").map(_.toDouble)
@@ -956,7 +955,7 @@ object RunPipeline {
     }
 
     val lineage = s"input=$input clean=$clean corrector=$correctorName minFreq=$minFreq " +
-      s"buckets=$nBuckets groupSize=$groupSize salted=$salted dedup=$dedupMode" +
+      s"buckets=$nBuckets groupSize=$groupSize dedup=$dedupMode" +
       sampleFrac.map(f => s" sample=$f").getOrElse("") +
       gateSpec.map(g => s" gate=$g").getOrElse("") +
       gopherSpec.map(g => s" gopher=$g").getOrElse("") +
@@ -993,20 +992,22 @@ object RunPipeline {
         s"|${bloomDedup.getOrElse("")}" +
         s"|${sourceMix.getOrElse("")}|$mixSourceCol").getBytes("UTF-8"))
       .take(4).map("%02x".format(_)).mkString
-    // docs_in comes from the staged bucketed copy WHILE it exists (an
-    // empty-projection parquet count — footers only), inside the timed run;
-    // a post-run docs.count() would re-execute the whole upstream plan a
-    // second time outside wall_sec. It is the POST-dedup count; the raw
-    // input count and the dedup delta are reported alongside so artifact
-    // consumers can compute the dedup ratio without re-reading the input.
-    // All three are null (not 0) when an already-complete run resumes —
-    // nothing was staged or processed, and a literal 0 would read as "the
-    // input was empty".
-    var docsIn: Option[Long] = None
+    // docs_in is observed on the staging write inside the timed run (or
+    // counted off a committed stage a resume reuses); a post-run
+    // docs.count() would re-execute the whole upstream plan a second time
+    // outside wall_sec. It is the POST-dedup count; the raw input count and
+    // the dedup delta are reported alongside so artifact consumers can
+    // compute the dedup ratio without re-reading the input. All three are
+    // null (not 0) when an already-complete run resumes — nothing was staged
+    // or processed, and a literal 0 would read as "the input was empty".
+    // The run-wide totals are the state rows the run read at its start plus
+    // the rows it committed, not a second read of the state table.
+    var summary = CheckpointedRun.Summary(None, graft.model.CerMetrics(0L, 0L, 0.0))
     val m = CheckpointedRun.run(spark, docs, cleanDocs, corrector, output, state, runId,
       spansCol = spansCol, nBuckets = nBuckets, groupSize = groupSize,
-      salted = salted, lineage = lineage, cleanSpansCol = cleanSpansCol,
-      stageToken = stageToken, onStaged = staged => docsIn = Some(staged.count()))
+      lineage = lineage, cleanSpansCol = cleanSpansCol,
+      stageToken = stageToken, onSummary = s => summary = s)
+    val docsIn = summary.docsIn
     // pre-curation count: a footer-metadata parquet count of the raw input
     // (no curation plan attached); skipped entirely on a no-op resume, and
     // equal to docs_in by definition when no curation step is active
@@ -1026,7 +1027,7 @@ object RunPipeline {
           bpeTrain.isEmpty) None
       else Some(exportArtifacts(spark, output, spansCol,
         shardsSpec, packSpec, corruptSpec, bpeEncode, bpeTrain, stageToken))
-    val total = CheckpointedRun.metrics(spark, state, runId)
+    val total = summary.total
     val sec = (System.nanoTime() - t0) / 1e9
 
     // shared artifact-format helpers: Locale.ROOT numbers (non-finite →

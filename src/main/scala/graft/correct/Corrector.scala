@@ -1,6 +1,6 @@
 package graft.correct
 
-import graft.model.SpanRow
+import graft.model.{Span, SpanRow}
 
 /**
  * Correction kernel contract: a pure, serializable per-partition transform
@@ -23,6 +23,34 @@ trait Corrector extends Serializable {
   def correctTexts(texts: Iterator[String]): Iterator[String] =
     texts.map(correctText)
 
+  /** Doc-level transform: the text spans of each doc corrected in place,
+    * media untouched, span order kept. Texts go through the BATCHED hook
+    * ([[correctTexts]]) across a bounded group of docs, so a kernel that
+    * amortizes per-batch setup (broadcast trie probe, neural decode) gets
+    * real batches, not one call per span. The one doc-level batching loop:
+    * streaming (`StreamingOps.correctDocs`) and the checkpointed batch run
+    * both call it, over their own doc types. */
+  final def correctDocs[D](docs: Iterator[D], spansOf: D => Seq[Span],
+                           withSpans: (D, Seq[Span]) => D): Iterator[D] =
+    docs.grouped(256).flatMap { group => // bounded: ~256 docs of text per batch
+      val nText = group.iterator.map(spansOf(_).count(_.kind == Span.KindText)).sum
+      if (nText == 0) group
+      else {
+        val texts = group.iterator.flatMap(
+          spansOf(_).iterator.filter(_.kind == Span.KindText).map(_.text))
+        val corrected = correctTexts(texts).toArray
+        require(corrected.length == nText,
+          s"corrector returned ${corrected.length} outputs for $nText inputs")
+        var k = 0
+        group.map { d =>
+          withSpans(d, spansOf(d).map { s =>
+            if (s.kind == Span.KindText) { val t = corrected(k); k += 1; s.copy(text = t) }
+            else s
+          })
+        }
+      }
+    }
+
   /** Partition transform: text spans through the kernel, media untouched.
     * One narrow pass — no filter/union split, no second scan. */
   final def correctPartition(rows: Iterator[SpanRow]): Iterator[SpanRow] = {
@@ -30,7 +58,7 @@ trait Corrector extends Serializable {
     // order. Grouped to bound memory on pathological partitions.
     rows.grouped(1024).flatMap { group =>
       val textIdx = group.iterator.zipWithIndex.collect {
-        case (r, i) if r.kind == graft.model.Span.KindText => i
+        case (r, i) if r.kind == Span.KindText => i
       }.toArray
       if (textIdx.isEmpty) group
       else {

@@ -31,6 +31,7 @@ final case class PairRow(doc_id: String, offset: Int, split: String, text_noisy:
 /** CER metrics (reference: avg normalized distance + percent perfect,
   * eval.py:64-68, dictionary_corrector.py:154-155). */
 final case class CerMetrics(n: Long, nPerfect: Long, sumNormDist: Double) {
+  def +(o: CerMetrics): CerMetrics = CerMetrics(n + o.n, nPerfect + o.nPerfect, sumNormDist + o.sumNormDist)
   def avgDistance: Double     = if (n == 0) 0.0 else sumNormDist / n
   def percentPerfect: Double  = if (n == 0) 0.0 else nPerfect.toDouble / n
 }

@@ -1,9 +1,12 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.TaskContext
+import org.apache.spark.sql.{Column, DataFrame, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.util.AccumulatorV2
 import graft.correct.Corrector
-import graft.model.CerMetrics
+import graft.model.{CerMetrics, Span}
+import graft.text.DamerauLevenshtein
 
 /**
  * Checkpointed, resumable correction run (SURVEY.md §7 step 6; reference
@@ -20,11 +23,42 @@ import graft.model.CerMetrics
  * run reprocesses at most the one uncommitted group, and because every
  * upstream stage is deterministic (hash-seeded generator/channel), the
  * resumed output is byte-identical to an unkilled run (tested).
+ *
+ * Dataflow of [[run]]:
+ *
+ *   state rows (read once) → stage [[StagedDoc]] rows once, partitioned by
+ *   bucket: each input doc with the clean table's text spans of the same
+ *   `doc_id` (left join on a plain projection, or the same row's spans) →
+ *   per group, ONE narrow job: pruned read → text spans corrected in place
+ *   ([[Corrector.correctDocs]]) → spans sorted by offset
+ *   ([[CorrectionPipeline.sortSpans]]) → each corrected text span scored
+ *   against the clean texts at its offset into a [[BucketCer]] accumulator
+ *   → write `(doc_id, spans, bucket)` → state rows from the accumulator.
+ *
+ * No explode, shuffle, cache or metrics join in the group job. The
+ * explode → correct → reassemble composition in [[CorrectionPipeline]] is
+ * the equivalence witness (CheckpointEquivalenceSpec).
  */
 object CheckpointedRun {
 
   final case class StateRow(run_id: String, bucket: Int, status: String,
                             rows: Long, cer_sum: Double, perfect: Long, lineage: String)
+
+  /** A clean text span of a staged doc: the `clean` array's element. */
+  final case class CleanText(offset: Int, text: String)
+
+  /** A staged row: the input doc's spans, the clean table's text spans of
+    * the same `doc_id` (null when the clean table has no such doc), and the
+    * doc's bucket. */
+  final case class StagedDoc(doc_id: String, spans: Seq[Span], clean: Seq[CleanText], bucket: Int)
+
+  /** A corrected output row, before its spans are sorted. */
+  final case class BucketDoc(doc_id: String, spans: Seq[Span], bucket: Int)
+
+  /** What one [[run]] saw of the whole run: the docs it staged (None when
+    * nothing remained to do) and the totals of every committed bucket — the
+    * state rows read at the start plus the ones this invocation committed. */
+  final case class Summary(docsIn: Option[Long], total: CerMetrics)
 
   /** Injected-failure hook for kill-and-resume tests. */
   final class KilledException(msg: String) extends RuntimeException(msg)
@@ -46,59 +80,163 @@ object CheckpointedRun {
       .digest(s.getBytes("UTF-8")).take(6).map(b => f"$b%02x").mkString
   }
 
+  /** The stage token [[run]] uses when the caller passes none: [[planToken]]
+    * of the input columns the stage is built from, so another source OR
+    * another spans column gets its own stage. */
+  def defaultStageToken(docs: DataFrame, cleanDocs: DataFrame, spansCol: String,
+                        cleanSpansCol: String): String =
+    if (cleanDocs eq docs) planToken(docs.select(col("doc_id"), col(spansCol), col(cleanSpansCol)))
+    else planToken(docs.select(col("doc_id"), col(spansCol))) +
+      planToken(cleanDocs.select(col("doc_id"), col(cleanSpansCol)))
+
   /** Normalized DL distance as a NATIVE column expression — the column form
     * of [[graft.text.DamerauLevenshtein.normalized]] (same equality shortcut
     * and empty-`clean` guard) built on the codegen'd `dl_distance`
     * expression instead of a ScalaUDF, so per-bucket metrics stay inside the
     * whole-stage-codegen span with no per-row serde. Requires
     * [[org.apache.spark.sql.graft.DamerauLevenshteinExpr.register]]
-    * (idempotent; [[run]] calls it). `length()` counts code points
-    * (UTF8String.numChars), matching the kernel's codePointCount. */
+    * (idempotent). `length()` counts code points (UTF8String.numChars),
+    * matching the kernel's codePointCount. [[run]] scores with the
+    * row-level twin [[normalizedDist]]. */
   def normalizedDistCol(noisy: Column, clean: Column): Column =
     when(noisy === clean, 0.0)
       .when(length(clean) === 0, 1.0) // unequal (first branch) + empty clean
       .otherwise(
         call_function("dl_distance", noisy, clean).cast("double") / length(clean))
 
+  /** [[normalizedDistCol]] on plain strings, branch for branch; NaN where the
+    * column is null (a null text on either side, unless the clean text is
+    * empty). */
+  def normalizedDist(noisy: String, clean: String): Double =
+    if (noisy != null && noisy == clean) 0.0
+    else if (clean != null && clean.isEmpty) 1.0
+    else if (noisy == null || clean == null) Double.NaN
+    else DamerauLevenshtein.normalized(noisy, clean)
+
+  private def committed(spark: SparkSession, dir: String): Boolean = {
+    val marker = new org.apache.hadoop.fs.Path(dir, "_SUCCESS")
+    marker.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(marker)
+  }
+
   /** Write `docs` + bucket column partitioned by `bucket`, exactly once:
     * skipped when a committed (_SUCCESS) stage already exists — a stage
     * interrupted mid-write has no marker and is overwritten on resume. */
-  def stageBucketed(spark: SparkSession, docs: DataFrame, stagingDir: String, nBuckets: Int): Unit = {
-    val dir = new org.apache.hadoop.fs.Path(stagingDir)
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new org.apache.hadoop.fs.Path(dir, "_SUCCESS"))) {
+  def stageBucketed(spark: SparkSession, docs: DataFrame, stagingDir: String, nBuckets: Int): Unit =
+    if (!committed(spark, stagingDir)) {
       docs.withColumn("bucket", bucketOf(nBuckets))
         .write.mode(SaveMode.Overwrite).partitionBy("bucket").parquet(stagingDir)
     }
-  }
 
   /** Stage the clean tables's exploded TEXT spans `(doc_id, offset,
-    * text_clean)` partitioned by bucket — the CER-metrics side of the same
-    * once-not-per-group rule as [[stageBucketed]]. */
+    * text_clean)` partitioned by bucket. [[run]] no longer calls it (the
+    * clean texts ride in the input stage); the traced benchmark run does. */
   def stageCleanSpans(spark: SparkSession, cleanDocs: DataFrame, stagingDir: String,
-                      nBuckets: Int, cleanSpansCol: String): Unit = {
-    val dir = new org.apache.hadoop.fs.Path(stagingDir)
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new org.apache.hadoop.fs.Path(dir, "_SUCCESS"))) {
+                      nBuckets: Int, cleanSpansCol: String): Unit =
+    if (!committed(spark, stagingDir)) {
       CorrectionPipeline.explodeSpans(cleanDocs, cleanSpansCol)
         .filter(col("kind") === graft.model.Span.KindText)
         .select(col("doc_id"), col("offset"), col("text").as("text_clean"))
         .withColumn("bucket", bucketOf(nBuckets))
         .write.mode(SaveMode.Overwrite).partitionBy("bucket").parquet(stagingDir)
     }
-  }
 
-  /** Buckets already committed for this run. */
-  def doneBuckets(spark: SparkSession, stateDir: String, runId: String): Set[Int] = {
+  /** The `done` state rows of this run (empty when there is no state yet). */
+  private def doneRows(spark: SparkSession, stateDir: String, runId: String): Seq[StateRow] = {
     val path = new org.apache.hadoop.fs.Path(stateDir)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(path)) Set.empty
+    if (!path.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(path)) Nil
     else {
       import spark.implicits._
-      spark.read.parquet(stateDir).as[StateRow]
+      spark.read.schema(org.apache.spark.sql.Encoders.product[StateRow].schema)
+        .parquet(stateDir).as[StateRow]
         .filter(s => s.run_id == runId && s.status == "done")
-        .map(_.bucket).collect().toSet
+        .collect().toSeq
     }
+  }
+
+  private def totalOf(rows: Seq[StateRow]): CerMetrics =
+    rows.foldLeft(CerMetrics(0L, 0L, 0.0))((t, r) => t + CerMetrics(r.rows, r.perfect, r.cer_sum))
+
+  /** Buckets already committed for this run. */
+  def doneBuckets(spark: SparkSession, stateDir: String, runId: String): Set[Int] =
+    doneRows(spark, stateDir, runId).map(_.bucket).toSet
+
+  /** The staged layout of [[run]]: `(doc_id, spans, clean)`, where `spans`
+    * is the input's `spansCol` and `clean: array<struct<offset, text>>` holds
+    * the clean table's text spans of the same `doc_id`. A separate clean
+    * table comes in by a left join on a plain projection (no explode, no
+    * aggregate, so the stage keeps the input's split count and Spark picks
+    * broadcast or shuffle); when `cleanDocs eq docs`, `clean` is a
+    * projection of the same row's `cleanSpansCol`. Clean spans with a null
+    * offset, and every clean span of a null `doc_id`, are left out: they
+    * never match an equi-join key. */
+  private def stagedDocs(docs: DataFrame, cleanDocs: DataFrame, spansCol: String,
+                         cleanSpansCol: String): DataFrame = {
+    def cleanTexts(spans: Column): Column =
+      transform(filter(spans, s => s("kind") === Span.KindText && s("offset").isNotNull),
+        s => struct(s("offset").as("offset"), s("text").as("text")))
+    if (cleanDocs eq docs)
+      docs.select(col("doc_id"), col(spansCol).as("spans"),
+        when(col("doc_id").isNotNull, cleanTexts(col(cleanSpansCol))).as("clean"))
+    else
+      docs.select(col("doc_id"), col(spansCol).as("spans"))
+        .join(cleanDocs.select(col("doc_id"), cleanTexts(col(cleanSpansCol)).as("clean")),
+          Seq("doc_id"), "left")
+  }
+
+  /** `(rows, perfect, cer_sum)` pair sums per bucket, accumulated inside a
+    * group job's write. That job is one narrow result stage, so Spark
+    * applies each successful task's update exactly once. Sums are kept per
+    * (bucket, partition) and added in partition order by [[byBucket]], so
+    * they do not depend on the order in which tasks finish. */
+  private final class BucketCer extends AccumulatorV2[(Int, Int, Double), Map[(Int, Int), CerMetrics]] {
+    private val sums = scala.collection.mutable.HashMap.empty[(Int, Int), CerMetrics]
+    override def isZero: Boolean = sums.isEmpty
+    override def copy(): BucketCer = { val c = new BucketCer; c.sums ++= sums; c }
+    override def reset(): Unit = sums.clear()
+    /** One pair of `bucket` scored in `partition`; NaN for a null distance,
+      * which counts as a row but adds to neither sum. */
+    override def add(v: (Int, Int, Double)): Unit = {
+      val (bucket, partition, dist) = v
+      val m = sums.getOrElse((bucket, partition), CerMetrics(0L, 0L, 0.0))
+      sums((bucket, partition)) =
+        if (dist.isNaN) m.copy(n = m.n + 1)
+        else CerMetrics(m.n + 1, m.nPerfect + (if (dist == 0.0) 1 else 0), m.sumNormDist + dist)
+    }
+    override def merge(other: AccumulatorV2[(Int, Int, Double), Map[(Int, Int), CerMetrics]]): Unit =
+      other.value.foreach { case (k, m) => sums(k) = sums.get(k).fold(m)(_ + m) }
+    override def value: Map[(Int, Int), CerMetrics] = sums.toMap
+    def byBucket: Map[Int, CerMetrics] =
+      sums.toSeq.sortBy(_._1).groupMapReduce(_._1._1)(_._2)(_ + _)
+  }
+
+  /**
+   * The group job's transform over staged rows ([[stagedDocs]] plus
+   * `bucket`): drops docs with an empty or null span array (explode drops
+   * them too), corrects text spans in place, scores every corrected text
+   * span against each clean text at its offset into `cer` (duplicate clean
+   * offsets count once per pair, as the `(doc_id, offset)` inner join does),
+   * and sorts each doc's spans by offset. Returns `(doc_id, spans, bucket)`
+   * with no shuffle.
+   */
+  private def correctStaged(staged: DataFrame, corrector: Corrector, cer: BucketCer): DataFrame = {
+    val spark = staged.sparkSession
+    import spark.implicits._
+    staged.filter(size(col("spans")) > 0).as[StagedDoc]
+      .mapPartitions { docs =>
+        val partition = TaskContext.getPartitionId()
+        corrector.correctDocs[StagedDoc](docs, _.spans, (d, s) => d.copy(spans = s)).map { d =>
+          if (d.clean != null && d.clean.nonEmpty) {
+            val byOffset = d.clean.groupBy(_.offset)
+            d.spans.foreach { s =>
+              if (s.kind == Span.KindText) byOffset.get(s.offset).foreach(_.foreach { c =>
+                cer.add((d.bucket, partition, normalizedDist(s.text, c.text)))
+              })
+            }
+          }
+          BucketDoc(d.doc_id, d.spans, d.bucket)
+        }
+      }
+      .select(col("doc_id"), CorrectionPipeline.sortSpans(col("spans")).as("spans"), col("bucket"))
   }
 
   /**
@@ -107,8 +245,8 @@ object CheckpointedRun {
    * @param docs        input table `(doc_id, <spansCol>, ...)` — noisy spans in
    * @param cleanDocs   clean table for CER metrics (may be the same table)
    * @param failAfterGroups  test hook: throw KilledException after N groups commit
-   * @param onStaged  invoked once with the staged bucketed input (cheap
-   *                  metrics reads; not called when nothing remains to do)
+   * @param onSummary   invoked once, at the end, with the docs staged and
+   *                    the whole run's totals (see [[Summary]])
    * @return per-run metrics summed over the buckets THIS invocation processed
    */
   def run(spark: SparkSession,
@@ -121,116 +259,96 @@ object CheckpointedRun {
           spansCol: String = "noisy_spans",
           nBuckets: Int = 16,
           groupSize: Int = 4,
-          salted: Boolean = false,
           lineage: String = "",
           cleanSpansCol: String = "spans",
           stageToken: String = "",
           failAfterGroups: Option[Int] = None,
-          onStaged: DataFrame => Unit = _ => ()): CerMetrics = {
+          onSummary: Summary => Unit = _ => ()): CerMetrics = {
     import spark.implicits._
-    org.apache.spark.sql.graft.DamerauLevenshteinExpr.register(spark)
 
     // normalize: stage dirs are SIBLINGS of outDir by string concatenation —
     // a trailing slash would nest them inside the output and break the
     // prefix-based cleanup sweep
     val outDir = outDir0.stripSuffix("/")
-    val done = doneBuckets(spark, stateDir, runId)
-    val remaining = (0 until nBuckets).filterNot(done)
+    // the state table is read once: it gives both the remaining work and
+    // the totals of the buckets committed before this invocation
+    val prior = doneRows(spark, stateDir, runId)
+    val remaining = (0 until nBuckets).filterNot(prior.map(_.bucket).toSet)
     val groups = remaining.grouped(groupSize).toSeq
     var totals = CerMetrics(0, 0, 0.0)
-    if (groups.isEmpty) { cleanupStages(spark, outDir); return totals }
+    if (groups.isEmpty) {
+      cleanupStages(spark, outDir)
+      onSummary(Summary(None, totalOf(prior)))
+      return totals
+    }
 
     // Stage the bucketed input ONCE, partitioned by bucket. The bucket
     // predicate is a derived column (pmod(xxhash64(doc_id))) that can never
     // push down to the original source, so filtering `docs` directly would
     // re-read and re-derive the ENTIRE upstream plan once per group — at
     // 100 TB that multiplies total work by the group count. Staging turns
-    // each group job into a partition-pruned read of only its buckets.
+    // each group job into a partition-pruned read of only its buckets, and
+    // the clean texts ride in the same rows, so no group job joins.
     // The stage is committed atomically (_SUCCESS) and the upstream plan is
     // deterministic, so a resumed run reuses or identically rewrites it.
-    // nBuckets and the stage token are part of the directory names: a resume
+    // nBuckets and the stage token are part of the directory name: a resume
     // with a DIFFERENT bucketing must not filter a stage built under the old
     // one (it would silently drop every bucket id the old stage never
     // produced), and a resume against a DIFFERENT input or clean table must
     // not reuse the previous source's staged rows. Callers may pass an
     // explicit token (RunPipeline fingerprints its paths); by DEFAULT the
-    // token is a fingerprint of the input plans themselves, so a stage left
-    // by a killed run over a different source with the same outDir/nBuckets
-    // is never silently reused. The clean side is staged the same way — its
-    // exploded text spans would otherwise be re-derived once per group by
-    // the metrics join. All stages under this outDir are deleted once every
-    // bucket is committed.
+    // token is a fingerprint of the input plans and spans columns, so a
+    // stage left by a killed run over a different source with the same
+    // outDir/nBuckets is never silently reused. The `v2` in the name is the layout: a stage
+    // committed by the earlier layout (input columns only, clean spans in a
+    // second stage) has another name and is never read as this one — it
+    // would score no CER pairs. All stages under this outDir are deleted
+    // once every bucket is committed.
     val token = if (stageToken.nonEmpty) stageToken
-                else planToken(docs) + (if (cleanDocs eq docs) "" else planToken(cleanDocs))
-    val suffix = s"b$nBuckets-$token"
-    val stagingDir = s"$outDir.staging-$suffix"
-    val cleanStagingDir = s"$outDir.staging-clean-$suffix"
-    stageBucketed(spark, docs, stagingDir, nBuckets)
+                else defaultStageToken(docs, cleanDocs, spansCol, cleanSpansCol)
+    val stagingDir = s"$outDir.staging-v2-b$nBuckets-$token"
+    // docs_in is observed on the staging write itself; a committed stage
+    // reused on resume is counted instead (parquet footers only)
+    val writeStage = !committed(spark, stagingDir)
+    val observed = Observation()
+    val input = if (writeStage) docs.observe(observed, count(lit(1)).as("docs")) else docs
+    val stageFrame = stagedDocs(input, if (cleanDocs eq docs) input else cleanDocs,
+      spansCol, cleanSpansCol)
+    stageBucketed(spark, stageFrame, stagingDir, nBuckets)
     // staged reads carry EXPLICIT schemas: a legitimately-empty stage (an
-    // aggressive curation config dropping every doc, or a media-only corpus
-    // with zero text spans on the clean side) writes a directory with no
-    // part files, and schema inference would fail the whole run on it
-    import org.apache.spark.sql.types.{IntegerType, StringType, StructType}
-    val staged = spark.read.schema(docs.schema.add("bucket", IntegerType))
+    // aggressive curation config dropping every doc) writes a directory
+    // with no part files, and schema inference would fail the whole run
+    val staged = spark.read
+      .schema(stageFrame.schema.add("bucket", org.apache.spark.sql.types.IntegerType))
       .parquet(stagingDir)
-    // metrics hook: callers that want an input count read it off the staged
-    // copy (footer-level, no column materialization) instead of re-scanning
-    // the original upstream plan after the run
-    onStaged(staged)
-    // when the clean side IS the input plan, derive its spans from the
-    // already-staged parquet instead of re-evaluating the upstream a 2nd time
-    val cleanSource = if (cleanDocs eq docs) staged.drop("bucket") else cleanDocs
-    stageCleanSpans(spark, cleanSource, cleanStagingDir, nBuckets, cleanSpansCol)
-    val cleanStaged = spark.read.schema(new StructType()
-        .add("doc_id", StringType).add("offset", IntegerType)
-        .add("text_clean", StringType).add("bucket", IntegerType))
-      .parquet(cleanStagingDir)
+    val docsIn = if (writeStage) observed.get("docs").asInstanceOf[Long] else staged.count()
 
     groups.zipWithIndex.foreach { case (group, gi) =>
       failAfterGroups.foreach(k => if (gi >= k) throw new KilledException(s"injected kill before group $gi"))
 
-      val bucketed = staged.filter(col("bucket").isin(group: _*))
-      val corrected = CorrectionPipeline
-        .correct(CorrectionPipeline.explodeSpans(bucketed.drop("bucket"), spansCol), corrector)
-        .cache()
-      try {
-        val assembled = (if (salted) CorrectionPipeline.reassembleSalted(corrected)
-                         else CorrectionPipeline.reassemble(corrected))
-          .withColumn("bucket", bucketOf(nBuckets))
-        // data commit (atomic at job level)
-        assembled.write.mode(SaveMode.Append).partitionBy("bucket").parquet(outDir)
-
-        // per-bucket metrics vs the staged clean spans (partition-pruned)
-        val clean = cleanStaged.filter(col("bucket").isin(group: _*))
-          .select(col("doc_id"), col("offset"), col("text_clean"))
-        val perBucket = corrected.toDF()
-          .filter(col("kind") === "text")
-          .join(clean, Seq("doc_id", "offset"))
-          .withColumn("bucket", bucketOf(nBuckets))
-          .withColumn("dist", normalizedDistCol(col("text"), col("text_clean")))
-          .groupBy(col("bucket"))
-          .agg(count(lit(1)).as("rows"),
-            sum(col("dist")).as("cer_sum"),
-            sum(when(col("dist") === 0.0, 1L).otherwise(0L)).as("perfect"))
-          .collect()
-          .map(r => StateRow(runId, r.getInt(0), "done", r.getLong(1), r.getDouble(2), r.getLong(3), lineage))
-        // buckets with zero text spans still need a done-marker
-        val covered = perBucket.map(_.bucket).toSet
-        val markers = group.filterNot(covered).map(b => StateRow(runId, b, "done", 0L, 0.0, 0L, lineage))
-        val stateRows = perBucket.toSeq ++ markers
-        spark.createDataset(stateRows).write.mode(SaveMode.Append).parquet(stateDir)
-        totals = CerMetrics(
-          totals.n + stateRows.map(_.rows).sum,
-          totals.nPerfect + stateRows.map(_.perfect).sum,
-          totals.sumNormDist + stateRows.map(_.cer_sum).sum)
-      } finally corrected.unpersist()
+      // data commit (atomic at job level) with the per-bucket metrics
+      // accumulated inside the same job
+      val cer = new BucketCer
+      spark.sparkContext.register(cer, "checkpoint.cer")
+      correctStaged(staged.filter(col("bucket").isin(group: _*)), corrector, cer)
+        .write.mode(SaveMode.Append).partitionBy("bucket").parquet(outDir)
+      // buckets with zero text spans still get a done-marker
+      val perBucket = cer.byBucket
+      val stateRows = group.map { b =>
+        val m = perBucket.getOrElse(b, CerMetrics(0L, 0L, 0.0))
+        StateRow(runId, b, "done", m.n, m.sumNormDist, m.nPerfect, lineage)
+      }
+      // one task, one file: a handful of rows is not worth a writer per core
+      spark.createDataset(stateRows).coalesce(1).write.mode(SaveMode.Append).parquet(stateDir)
+      totals = totals + totalOf(stateRows)
     }
     // every bucket is committed — the stages are dead weight now (a kill
     // before this point leaves them for the resume to reuse). Sweeping all
     // `<outDir>.staging*` siblings also reclaims stages abandoned under a
-    // different bucketing/token, and covers the resume-after-kill-between-
-    // last-commit-and-cleanup path (groups.isEmpty calls this too).
+    // different bucketing/token or layout, and covers the resume-after-kill-
+    // between-last-commit-and-cleanup path (groups.isEmpty calls this too).
     cleanupStages(spark, outDir)
+    onSummary(Summary(Some(docsIn), totalOf(prior) + totals))
     totals
   }
 
@@ -247,11 +365,9 @@ object CheckpointedRun {
     }
   }
 
-  /** Aggregate metrics for a completed run from its state table. */
-  def metrics(spark: SparkSession, stateDir: String, runId: String): CerMetrics = {
-    import spark.implicits._
-    val rows = spark.read.parquet(stateDir).as[StateRow]
-      .filter(s => s.run_id == runId && s.status == "done").collect()
-    CerMetrics(rows.map(_.rows).sum, rows.map(_.perfect).sum, rows.map(_.cer_sum).sum)
-  }
+  /** Aggregate metrics for a completed run from its state table. [[run]]
+    * reports the same totals through its [[Summary]] without this second
+    * read; the traced benchmark run and the specs call it. */
+  def metrics(spark: SparkSession, stateDir: String, runId: String): CerMetrics =
+    totalOf(doneRows(spark, stateDir, runId))
 }

@@ -6,13 +6,18 @@ import graft.correct.Corrector
 import graft.model._
 
 /**
- * The flagship dataflow (SURVEY.md §3.3 / §7 step 3):
+ * The flagship dataflow (SURVEY.md §3.3 / §7 step 3), in two forms:
  *
- *   docs → explode(spans) → correct text spans (mapPartitions kernel,
- *   media untouched) → reassemble per doc in original span order →
- *   span-sequence equality / CER metrics.
+ *  - in place, per doc row (production, [[CheckpointedRun.run]]): text
+ *    spans corrected inside each doc ([[graft.correct.Corrector.correctDocs]],
+ *    media untouched) → spans sorted by [[sortSpans]] → CER scored in the
+ *    same pass. Narrow: no shuffle at all.
+ *  - explode → correct text spans (mapPartitions kernel) → reassemble per
+ *    doc in offset order → CER join ([[run]], [[cer]]). Kept as the
+ *    equivalence witness of the in-place form (CheckpointEquivalenceSpec)
+ *    and for the traced benchmark run, which times these layers one by one.
  *
- * Scale notes (the 100 TB design):
+ * Notes on the explode form:
  *  - explode is narrow; the ONE shuffle is the reassembly groupBy(doc_id).
  *  - reassembly uses `sort_array(collect_list(struct(offset, ...)))` —
  *    never bare collect_list, whose post-shuffle order is nondeterministic
@@ -49,6 +54,16 @@ object CorrectionPipeline {
   private def spanStruct(prefix: Column): Column =
     struct(prefix("kind").as("kind"), prefix("text").as("text"),
       prefix("media_ref").as("media_ref"), prefix("offset").as("offset"))
+
+  /** A doc's spans in the order [[reassemble]] gives them: the same
+    * `sort_array` over `struct(offset, kind, text, media_ref)` (so ties on a
+    * duplicate offset break by kind, then text), projected back to contract
+    * field order. */
+  def sortSpans(spans: Column): Column =
+    transform(
+      sort_array(transform(spans, s => struct(s("offset").as("offset"), s("kind").as("kind"),
+        s("text").as("text"), s("media_ref").as("media_ref")))),
+      spanStruct(_))
 
   /**
    * Reassemble `(doc_id, spans)` with spans in original `offset` order.

@@ -67,34 +67,13 @@ object StreamingOps {
 
   /** Correct text spans inside each doc row; media spans untouched.
     * Narrow, stateless — works identically on batch and streaming Datasets.
-    * Span texts are routed through the corrector's BATCHED hook
-    * ([[Corrector.correctTexts]]) across a bounded group of docs, mirroring
-    * `Corrector.correctPartition`: a kernel that amortizes per-batch setup
-    * (broadcast trie probe, neural decode) gets real batches here too, not
-    * one call per span. */
+    * Span texts are routed through the corrector's BATCHED hook by the
+    * shared doc-level loop ([[Corrector.correctDocs]]), the same one the
+    * checkpointed batch run uses. */
   def correctDocs(docs: Dataset[Doc], corrector: Corrector): Dataset[Doc] = {
     val spark = docs.sparkSession
     import spark.implicits._
-    docs.mapPartitions { it =>
-      it.grouped(256).flatMap { group => // bounded: ~256 docs of text per batch
-        val nText = group.iterator.map(_.spans.count(_.kind == Span.KindText)).sum
-        if (nText == 0) group
-        else {
-          val texts = group.iterator.flatMap(
-            _.spans.iterator.filter(_.kind == Span.KindText).map(_.text))
-          val corrected = corrector.correctTexts(texts).toArray
-          require(corrected.length == nText,
-            s"corrector returned ${corrected.length} outputs for $nText inputs")
-          var k = 0
-          group.map { d =>
-            Doc(d.doc_id, d.spans.map { s =>
-              if (s.kind == Span.KindText) { val t = corrected(k); k += 1; s.copy(text = t) }
-              else s
-            })
-          }
-        }
-      }
-    }
+    docs.mapPartitions(corrector.correctDocs[Doc](_, _.spans, (d, s) => Doc(d.doc_id, s)))
   }
 
   /** Streaming exact dedup: keep the first doc per content fingerprint within

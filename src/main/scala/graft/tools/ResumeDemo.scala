@@ -29,17 +29,17 @@ object ResumeDemo {
     // killed run
     try {
       CheckpointedRun.run(spark, docs, docs, corrector, s"$base/a/out", s"$base/a/state", "demo",
-        nBuckets = 8, groupSize = 2, salted = true, lineage = s"gen:n=$n", failAfterGroups = Some(2))
+        nBuckets = 8, groupSize = 2, lineage = s"gen:n=$n", failAfterGroups = Some(2))
     } catch {
       case _: CheckpointedRun.KilledException =>
         println(s"KILLED after 2 groups; done buckets = ${CheckpointedRun.doneBuckets(spark, s"$base/a/state", "demo").toSeq.sorted}")
     }
     // resume
     CheckpointedRun.run(spark, docs, docs, corrector, s"$base/a/out", s"$base/a/state", "demo",
-      nBuckets = 8, groupSize = 2, salted = true, lineage = s"gen:n=$n")
+      nBuckets = 8, groupSize = 2, lineage = s"gen:n=$n")
     // control
     CheckpointedRun.run(spark, docs, docs, corrector, s"$base/b/out", s"$base/b/state", "demo",
-      nBuckets = 8, groupSize = 2, salted = true, lineage = s"gen:n=$n")
+      nBuckets = 8, groupSize = 2, lineage = s"gen:n=$n")
 
     val a = spark.read.parquet(s"$base/a/out").drop("bucket")
     val b = spark.read.parquet(s"$base/b/out").drop("bucket")

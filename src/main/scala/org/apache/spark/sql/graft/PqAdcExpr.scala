@@ -172,7 +172,9 @@ class PqAdcKernel(n2Flat: Array[Double], ksub: Int) extends Serializable {
   /** Boxed sim or null — the exact when/otherwise order of the HOF form:
     * a zero denominator returns 0.0 BEFORE the (possibly null) dot side is
     * consulted; any null the evaluated chain touches otherwise nulls the
-    * result. */
+    * result. A LUT index out of range (codes from a codebook with another
+    * `m` or `ksub`) is such a null, as the witness's out-of-range lookup
+    * gives, instead of an exception. */
   def sim(codes: ArrayData, lut: ArrayData, qn: java.lang.Double): java.lang.Double = {
     // cn2: null codes null-poison the fold (transform → aggregate acc+null)
     var cn2 = 0.0
@@ -181,8 +183,9 @@ class PqAdcKernel(n2Flat: Array[Double], ksub: Int) extends Serializable {
       val m = codes.numElements()
       var j = 0
       while (j < m && !cn2Null) {
-        if (codes.isNullAt(j)) cn2Null = true
-        else cn2 += n2Flat(j * ksub + codes.getByte(j).toInt)
+        val idx = if (codes.isNullAt(j)) -1 else j * ksub + codes.getByte(j).toInt
+        if (idx < 0 || idx >= n2Flat.length) cn2Null = true
+        else cn2 += n2Flat(idx)
         j += 1
       }
     }
@@ -197,7 +200,7 @@ class PqAdcKernel(n2Flat: Array[Double], ksub: Int) extends Serializable {
     var j = 0
     while (j < m) {
       val idx = j * ksub + codes.getByte(j).toInt
-      if (lut.isNullAt(idx)) return null
+      if (idx >= lut.numElements() || lut.isNullAt(idx)) return null
       dot += lut.getDouble(idx)
       j += 1
     }

@@ -18,7 +18,7 @@ class CheckpointSpec extends SparkSpec {
 
   // default stage token for runs over `docs` (clean side eq input side)
   private def stagingOf(out: String, n: Int) =
-    s"$out.staging-b$n-${CheckpointedRun.planToken(docs)}"
+    s"$out.staging-v2-b$n-${CheckpointedRun.defaultStageToken(docs, docs, "noisy_spans", "spans")}"
 
   test("clean run: all buckets committed, output covers every doc, metrics match direct pipeline") {
     val (out, state) = freshDirs()
@@ -127,7 +127,7 @@ class CheckpointSpec extends SparkSpec {
     assert(!fs.exists(new org.apache.hadoop.fs.Path(stagingOf(out, 4))),
       "completed run left its stage behind")
     assert(!fs.exists(new org.apache.hadoop.fs.Path(
-      s"$out/.staging-b4-${CheckpointedRun.planToken(docs)}")),
+      s"$out/.staging-v2-b4-${CheckpointedRun.defaultStageToken(docs, docs, "noisy_spans", "spans")}")),
       "stage nested inside the output dir")
     assert(spark.read.parquet(out).select("doc_id").distinct().count() == 250)
   }
@@ -236,11 +236,65 @@ class CheckpointSpec extends SparkSpec {
     val vocab = DictionaryCorrector.trainVocab(docs)
     val bc = DictionaryCorrector.buildModel(spark, vocab, 2L)
     val m = CheckpointedRun.run(spark, docs, docs, DictionaryCorrector.corrector(bc),
-      out, state, "dict", nBuckets = 4, groupSize = 2, salted = true)
+      out, state, "dict", nBuckets = 4, groupSize = 2)
     val direct = CP.cer(CP.correct(CP.explodeSpans(docs, "noisy_spans"),
       DictionaryCorrector.corrector(bc)), docs)
     assert(m.n == direct.n && m.nPerfect == direct.nPerfect)
     assert(math.abs(m.sumNormDist - direct.sumNormDist) < 1e-9)
     bc.destroy()
+  }
+
+  test("a stage committed by the earlier layout is never read: a resume across the change scores every pair") {
+    val (out, state) = freshDirs()
+    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
+    // the earlier layout under the same token: input columns only, clean
+    // spans in a second stage — committed, so it would be reused by name
+    val token = CheckpointedRun.planToken(docs)
+    val oldStage = s"$out.staging-b8-$token"
+    CheckpointedRun.stageBucketed(spark, docs, oldStage, 8)
+    CheckpointedRun.stageCleanSpans(spark, docs, s"$out.staging-clean-b8-$token", 8, "spans")
+    intercept[CheckpointedRun.KilledException] {
+      CheckpointedRun.run(spark, docs, docs, NullCorrector, out, state, "up",
+        nBuckets = 8, groupSize = 3, failAfterGroups = Some(1))
+    }
+    assert(fs.exists(new org.apache.hadoop.fs.Path(s"${stagingOf(out, 8)}/_SUCCESS")))
+    CheckpointedRun.run(spark, docs, docs, NullCorrector, out, state, "up",
+      nBuckets = 8, groupSize = 3)
+    val total = CheckpointedRun.metrics(spark, state, "up")
+    val direct = CP.cer(CP.correct(CP.explodeSpans(docs, "noisy_spans"), NullCorrector), docs)
+    assert(total.n == direct.n && total.nPerfect == direct.nPerfect, s"$total vs $direct")
+    assert(math.abs(total.sumNormDist - direct.sumNormDist) < 1e-9)
+    assert(!fs.exists(new org.apache.hadoop.fs.Path(oldStage)), "old-layout stage not swept")
+    assert(spark.read.parquet(out).select("doc_id").distinct().count() == 250)
+  }
+
+  test("an empty input stages, commits every bucket and reports zero docs") {
+    val (out, state) = freshDirs()
+    val empty = docs.filter(lit(false))
+    var summary: Option[CheckpointedRun.Summary] = None
+    val m = CheckpointedRun.run(spark, empty, empty, NullCorrector, out, state, "e",
+      nBuckets = 4, groupSize = 2, onSummary = s => summary = Some(s))
+    assert(m.n == 0 && summary.flatMap(_.docsIn).contains(0L), s"$summary")
+    assert(CheckpointedRun.doneBuckets(spark, state, "e") == (0 until 4).toSet)
+  }
+
+  test("a fresh one-group run submits exactly three Spark jobs: stage, group, state") {
+    val (out, state) = freshDirs()
+    val small = DocGen.docs(spark, 60).toDF()
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    org.apache.spark.ListenerDrain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      CheckpointedRun.run(spark, small, small, NullCorrector, out, state, "jobs",
+        nBuckets = 4, groupSize = 4)
+      org.apache.spark.ListenerDrain(spark.sparkContext)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    // a re-introduced count, regroup or state re-read shows up here
+    assert(jobs.get == 3, s"${jobs.get} jobs")
   }
 }

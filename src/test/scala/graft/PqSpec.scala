@@ -226,4 +226,33 @@ class PqSpec extends AnyFunSuite {
       .as[(Long, Long, Long, Double)].collect().sortBy(r => (r._1, r._2))
     assert(kernel.toSeq == witness.toSeq)
   }
+  test("pq_adc_sim: codes from a mismatched codebook score null like the witness, never throw") {
+    org.apache.spark.sql.graft.PqAdcExpr.register(spark)
+    // the scorer's codebook: m = 2, ksub = 4 → 8 LUT entries per table
+    val n2 = typedLit(Seq.tabulate(8)(i => 1.0 + i))
+    val lut8 = Seq.tabulate(8)(i => 0.5 * i)
+    val rows = Seq(
+      (Seq[Byte](1, 3), lut8),      // in range: a real score
+      (Seq[Byte](1, 7), lut8),      // ksub = 8 code: 4 + 7 is past the LUT
+      (Seq[Byte](0, 4), lut8),      // 4 + 4 = 8, one past the end
+      (Seq[Byte](1, 2, 0), lut8),   // m = 3 codes against m = 2
+      (Seq[Byte](1, 3), lut8.take(4))) // a query LUT from a smaller codebook
+    val df = rows.toDF("codes", "lut")
+    val kernel = df.select(call_function("pq_adc_sim",
+      col("codes"), col("lut"), n2, lit(1.0), lit(4))).collect().map(r => Option(r.get(0)))
+    assert(kernel(0).isDefined)
+    assert(kernel.drop(1).forall(_.isEmpty), kernel.toSeq)
+    // the HOF witness: out-of-range element_at is null outside ANSI mode
+    val prev = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "false")
+    try {
+      def fold(table: org.apache.spark.sql.Column) =
+        aggregate(transform(col("codes"), (c, j) => element_at(table, j * 4 + c.cast("int") + 1)),
+          lit(0.0), (acc, x) => acc + x)
+      val denom = lit(1.0) * sqrt(fold(n2))
+      val witness = df.select(when(denom === 0.0, 0.0).otherwise(fold(col("lut")) / denom))
+        .collect().map(r => Option(r.get(0)))
+      assert(kernel.toSeq == witness.toSeq)
+    } finally spark.conf.set("spark.sql.ansi.enabled", prev)
+  }
 }
