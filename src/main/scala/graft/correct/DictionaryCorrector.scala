@@ -56,16 +56,7 @@ object DictionaryCorrector {
   final class BroadcastDictionaryCorrector(bc: Broadcast[DictionaryModel]) extends Corrector {
     override def correctTexts(texts: Iterator[String]): Iterator[String] = {
       val model = bc.value
-      val memo = model.memo
-      texts.map { text =>
-        val toks = text.trim.split("\\s+")
-        if (toks.length == 1 && toks(0).isEmpty) ""
-        else toks.map { t =>
-          var c = memo.get(t)
-          if (c == null) { c = model.inferToken(t); Memo.putBounded(memo, t, c) }
-          c
-        }.mkString(" ")
-      }
+      texts.map(Memo.correctSentence(_, model.memo, model.inferToken))
     }
     override def correctText(text: String): String = bc.value.inferSentence(text)
   }

@@ -16,24 +16,27 @@ import graft.text.DamerauLevenshtein
  * bound structurally: candidates are bucketed by length and visited in order
  * of |len(candidate) - len(token)|, so the scan stops as soon as the length
  * gap alone exceeds the best score — typically visiting a few buckets.
+ *
+ * Each candidate's distance is the exact bit-parallel OSA of
+ * [[DamerauLevenshtein.osaPattern]] for tokens of at most 64 code points
+ * (the token compiled once per scan, a dozen word operations per candidate
+ * code point), and the capped row DP above that. Both are exact wherever
+ * the selection can use the value, so the argmin is the same either way.
+ * [[NoisyChannelModel]] falls back to this scan for tokens with no word
+ * within its widths and no split.
  */
 final class DictionaryModel(
     val vocab: Map[String, Long],
     val minFrequency: Long) extends Serializable {
 
   /** Length-bucketed candidates (code-point length), sorted by token so the
-    * in-bucket scan meets ties in deterministic ascending-token order.
-    * Code points are precomputed per candidate (round 7): the scan calls
-    * the DP once per candidate and re-decoding the string each time was
-    * measurable at fallback-scan volumes. */
-  @transient private lazy val byLength: Map[Int, Array[(String, Long, Array[Int])]] =
+    * in-bucket scan meets ties in deterministic ascending-token order. */
+  @transient private lazy val byLength: Map[Int, Array[(String, Long)]] =
     vocab.iterator
       .filter(_._2 >= minFrequency)
       .toArray
       .sortBy(_._1)
-      .map { case (t, f) => (t, f, t.codePoints().toArray) }
-      .groupBy { case (t, _, _) => t.codePointCount(0, t.length) }
-      .map { case (len, arr) => (len, arr) }
+      .groupBy { case (t, _) => t.codePointCount(0, t.length) }
 
   @transient private lazy val maxLen: Int =
     if (byLength.isEmpty) 0 else byLength.keys.max
@@ -54,6 +57,9 @@ final class DictionaryModel(
     if (isEmpty) return token
     val tokenLen = token.codePointCount(0, token.length)
     val tokenCp = token.codePoints().toArray
+    val pattern =
+      if (tokenCp.length <= DamerauLevenshtein.OsaMaxPattern) DamerauLevenshtein.osaPattern(tokenCp)
+      else null
     var bestToken: String = null
     var bestScore = Int.MaxValue
     var bestFreq = -1L
@@ -66,15 +72,15 @@ final class DictionaryModel(
         if (len >= 0 && gap <= bestScore) byLength.get(len).foreach { bucket =>
           var i = 0
           while (i < bucket.length) {
-            val (cand, freq, candCp) = bucket(i)
-            // capped DP (round 7): exact when <= bestScore, any value above
-            // it otherwise — a result > bestScore fails BOTH the strict win
-            // and the tie test exactly as the true distance would, so the
-            // selected (dist, freq, token) argmin is unchanged while each
-            // candidate's band shrinks from |Δlen|+10 to the current best
-            // and dead rows exit early
-            val score = DamerauLevenshtein.distanceBandedCappedCp(
-              tokenCp, candCp, if (bestScore == Int.MaxValue) Int.MaxValue - 1 else bestScore)
+            val (cand, freq) = bucket(i)
+            // the capped DP (tokens over 64 code points) is exact when
+            // <= bestScore and any value above it otherwise — a result
+            // > bestScore fails BOTH the strict win and the tie test exactly
+            // as the true distance would
+            val score =
+              if (pattern != null) pattern.distance(cand)
+              else DamerauLevenshtein.distanceBandedCappedCp(
+                tokenCp, cand.codePoints().toArray, if (bestScore == Int.MaxValue) Int.MaxValue - 1 else bestScore)
             // global argmin by (dist asc, freq desc, token asc) — the full
             // tuple, so the result is independent of bucket visit order and
             // provably equal to the relational min_by path

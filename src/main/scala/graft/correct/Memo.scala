@@ -20,4 +20,21 @@ object Memo {
 
   def putBounded(m: ConcurrentHashMap[String, String], k: String, v: String): Unit =
     if (m.mappingCount() < Cap) { m.put(k, v); () }
+
+  /** One text through a memoized token kernel: whitespace-tokenize (trim +
+    * split), correct each token (memo hit, or `infer` then a bounded
+    * insert), join with single spaces. Null in, null out, as the other text
+    * kernels: a null text span must not fail its whole task. */
+  def correctSentence(text: String, memo: ConcurrentHashMap[String, String],
+                      infer: String => String): String =
+    if (text == null) null
+    else {
+      val toks = text.trim.split("\\s+")
+      if (toks.length == 1 && toks(0).isEmpty) ""
+      else toks.map { t =>
+        var c = memo.get(t)
+        if (c == null) { c = infer(t); putBounded(memo, t, c) }
+        c
+      }.mkString(" ")
+    }
 }

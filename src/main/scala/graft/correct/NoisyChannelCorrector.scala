@@ -6,20 +6,33 @@ import graft.gen.NoiseChannel
 
 /**
  * Noisy-channel corrector (BASELINE.json north_star, SURVEY.md §2.10 U4):
- * for an OOV token pick `argmax_clean P(clean) · P(noisy | clean)` where
- * candidates come from the trie ∩ Levenshtein-automaton search
- * ([[TokenTrie]]) and the channel likelihood uses per-edit-type confusion
- * weights derived from the generative 0.12 channel itself
- * (`make_messy_dataset.py:20-31`): P(edit)=0.12 split uniformly over 4 types;
- * CHANGE/INSERT spread uniformly over the good-char alphabet.
+ * for an OOV token pick `argmax_clean P(clean) · P(noisy | clean)` over the
+ * vocabulary words within edit range, where the channel likelihood uses
+ * per-edit-type confusion weights derived from the generative 0.12 channel
+ * itself (`make_messy_dataset.py:20-31`): P(edit)=0.12 split uniformly over
+ * 4 types; CHANGE/INSERT spread uniformly over the good-char alphabet.
  *
- * This replaces beam-search decoding for token-level correction: the trie
- * bounds the candidate space exactly, so instead of beam-pruning an unbounded
- * decode we score every candidate within edit range with the exact weighted
- * alignment DP — a strictly stronger search at the same asymptotic cost.
- * Search widens progressively (maxDist = 1, 2, .., maxWidth) and stops at the
- * first radius with candidates: nearly all OCR errors sit at distance 1-2, so
- * the common case touches a tiny trie neighborhood.
+ * This replaces beam-search decoding for token-level correction: the
+ * candidate search bounds the candidate space exactly, so instead of
+ * beam-pruning an unbounded decode we score every candidate within edit
+ * range with the exact weighted alignment DP — a strictly stronger search at
+ * the same asymptotic cost. Search widens progressively (maxDist = 1, 2, ..,
+ * maxWidth) and stops at the first radius with candidates: nearly all OCR
+ * errors sit at distance 1-2.
+ *
+ * Which path serves which search:
+ *  - widths 1 to 3 (up to `maxWidth`) for tokens of at most 64 code points:
+ *    the symmetric-delete [[DeleteIndex]], exact by construction (see its
+ *    scaladoc), so its candidate set equals the trie walk's;
+ *  - tokens over 64 code points, widths above [[DeleteIndex.MaxRadius]],
+ *    and vocabularies whose index would exceed [[DeleteIndex.Budget]]
+ *    (2^24 entries, counted before building): the [[TokenTrie]] walk;
+ *  - the split hypothesis: one forward and one reversed trie walk
+ *    ([[TokenTrie.prefixNeighborhoods]]);
+ *  - no candidate within `maxWidth` and no split: the nearest-word scan of
+ *    [[DictionaryModel]].
+ * Every candidate set is selected by the full (score, word) order, so the
+ * source of the set cannot change the winner.
  */
 final class NoisyChannelModel(
     val vocab: Map[String, Long],
@@ -32,6 +45,10 @@ final class NoisyChannelModel(
   @transient private lazy val pruned: Map[String, Long] =
     vocab.filter(_._2 >= minFrequency)
   @transient lazy val trie: TokenTrie = TokenTrie.build(pruned)
+  /** Built on the executor like the trie, never broadcast; None over
+    * [[DeleteIndex.Budget]]. */
+  @transient private[graft] lazy val index: Option[DeleteIndex] =
+    DeleteIndex.build(pruned, math.min(maxWidth, DeleteIndex.MaxRadius))
   /** Code-point-reversed vocabulary trie (round 7): suffix neighborhoods of
     * a token are prefix neighborhoods of its reversal — OSA distance is
     * reversal-invariant (an edit script read right-to-left is a valid
@@ -125,11 +142,22 @@ final class NoisyChannelModel(
 
   def contains(token: String): Boolean = pruned.contains(token)
 
+  /** All (word, freq, dist) within `width` of `token`: the index where it
+    * serves the token and width, the trie otherwise (equal sets). */
+  private[graft] def candidatesWithin(
+      token: String, width: Int): scala.collection.mutable.ArrayBuffer[(String, Long, Int)] =
+    index match {
+      case Some(ix) if width <= ix.radius &&
+          token.codePointCount(0, token.length) <= DeleteIndex.MaxToken =>
+        ix.searchWithin(token, width)
+      case _ => trie.searchWithin(token, width)
+    }
+
   /** Best single-word candidate within `width`, scored by channel × prior;
     * returns (word, score) or null. A single candidate wins unscored — the
     * score only ranks alternatives (callers never compare across calls). */
   private def bestWithin(token: String, width: Int): (String, Double) = {
-    val cands = trie.searchWithin(token, width)
+    val cands = candidatesWithin(token, width)
     if (cands.isEmpty) return null
     if (cands.length == 1) return (cands(0)._1, 0.0)
     val tokenCp = token.codePoints().toArray
@@ -236,7 +264,7 @@ final class NoisyChannelModel(
     }
     // Nothing close as a single word. A successful split (each part within
     // edit 1 + the merge edit) is near-certainly right vs a 3-edit single
-    // word, so the expensive wide trie walks run only when no split exists —
+    // word, so the expensive width-3 searches run only when no split exists —
     // a documented decode heuristic that keeps the unresolved-token path
     // cheap. Widths 3..maxWidth are then searched in full before the
     // dictionary fallback.
@@ -280,16 +308,7 @@ object NoisyChannelModel {
 final class NoisyChannelCorrector(bc: Broadcast[NoisyChannelModel]) extends Corrector {
   override def correctTexts(texts: Iterator[String]): Iterator[String] = {
     val model = bc.value
-    val memo = model.memo
-    texts.map { text =>
-      val toks = text.trim.split("\\s+")
-      if (toks.length == 1 && toks(0).isEmpty) ""
-      else toks.map { t =>
-        var c = memo.get(t)
-        if (c == null) { c = model.inferToken(t); Memo.putBounded(memo, t, c) }
-        c
-      }.mkString(" ")
-    }
+    texts.map(Memo.correctSentence(_, model.memo, model.inferToken))
   }
   override def correctText(text: String): String = bc.value.inferSentence(text)
 }

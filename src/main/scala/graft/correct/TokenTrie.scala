@@ -12,6 +12,12 @@ import scala.collection.mutable
  * search that touches only the fraction of the trie within edit range
  * (BASELINE.json north_star: "broadcast dictionary trie with
  * Levenshtein-automaton candidate generation").
+ *
+ * In [[NoisyChannelModel]] the [[DeleteIndex]] serves widths 1 to 3 for
+ * tokens of at most 64 code points; the trie serves the split hypothesis
+ * ([[prefixNeighborhoods]]), longer tokens, wider searches, and
+ * vocabularies whose index would exceed [[DeleteIndex.Budget]]. It is also
+ * the reference the index's candidate sets are spec-checked against.
  */
 final class TokenTrie private (root: TokenTrie.Node, val maxDepth: Int) extends Serializable {
 
@@ -30,8 +36,7 @@ final class TokenTrie private (root: TokenTrie.Node, val maxDepth: Int) extends 
    * so any out-of-band cell is > maxDist and can neither produce a result nor
    * re-enter the band below the threshold; the subtree prune on the in-band
    * minimum is therefore identical to the full-row prune. Cuts per-node work
-   * from O(|token|) to O(maxDist) — ~2× on the width-1/2 searches that
-   * dominate the correction kernel (measured in tools/KernelBreakdown).
+   * from O(|token|) to O(maxDist).
    */
   def searchWithin(token: String, maxDist: Int): mutable.ArrayBuffer[(String, Long, Int)] = {
     val t = token.codePoints().toArray

@@ -142,6 +142,93 @@ object DamerauLevenshtein {
     if (res > cap) cap + 1 else res
   }
 
+  /** Longest pattern, in code points, that [[osaPattern]] accepts: one bit
+    * per pattern position in a 64-bit word. */
+  val OsaMaxPattern = 64
+
+  /**
+   * A pattern compiled for the bit-parallel OSA distance (Hyyrö 2003, the
+   * shape of rapidfuzz's `osa_hyrroe2003`): the DP column of the whole
+   * pattern lives in the bits of one 64-bit word, so each text code point
+   * costs a fixed dozen word operations whatever the pattern length. The
+   * result is the exact OSA distance, equal to [[distance]] (spec-fuzzed),
+   * not the banded reference form of [[distanceBanded]] — which is why
+   * `distanceBanded`, `normalized` and `dl_distance` do not use it.
+   *
+   * Per-position match masks are keyed by code point in a 128-slot
+   * open-addressing table: a pattern has at most 64 distinct code points,
+   * so the load factor stays at or under one half, and there is no
+   * per-thread table indexed by every UTF-16 value.
+   */
+  final class OsaPattern private[DamerauLevenshtein] {
+    private val keys = Array.fill(128)(-1) // -1: empty (code points are >= 0)
+    private val masks = new Array[Long](128)
+    private val used = new Array[Int](OsaMaxPattern)
+    private var nUsed = 0
+    private var len = 0
+
+    @inline private def slotOf(cp: Int): Int = {
+      var s = (cp * 0x9E3779B1) >>> 25
+      while (keys(s) != cp && keys(s) != -1) s = (s + 1) & 127
+      s
+    }
+
+    private[DamerauLevenshtein] def compile(p: Array[Int]): OsaPattern = {
+      require(p.length <= OsaMaxPattern, s"pattern of ${p.length} code points")
+      var u = 0
+      while (u < nUsed) { keys(used(u)) = -1; masks(used(u)) = 0L; u += 1 }
+      nUsed = 0
+      var i = 0
+      while (i < p.length) {
+        val s = slotOf(p(i))
+        if (keys(s) == -1) { keys(s) = p(i); used(nUsed) = s; nUsed += 1 }
+        masks(s) |= 1L << i
+        i += 1
+      }
+      len = p.length
+      this
+    }
+
+    /** Exact OSA distance between the compiled pattern and `text`. */
+    def distance(text: String): Int = {
+      if (len == 0) return text.codePointCount(0, text.length)
+      val last = 1L << (len - 1)
+      var vp = -1L
+      var vn = 0L
+      var d0 = 0L
+      var pmOld = 0L
+      var dist = len
+      var i = 0
+      while (i < text.length) {
+        val cp = text.codePointAt(i)
+        i += Character.charCount(cp)
+        val pm = masks(slotOf(cp))
+        val tr = ((~d0 & pm) << 1) & pmOld
+        d0 = (((pm & vp) + vp) ^ vp) | pm | vn | tr
+        var hp = vn | ~(d0 | vp)
+        var hn = d0 & vp
+        if ((hp & last) != 0) dist += 1
+        if ((hn & last) != 0) dist -= 1
+        hp = (hp << 1) | 1L
+        hn = hn << 1
+        vp = hn | ~(d0 | hp)
+        vn = hp & d0
+        pmOld = pm
+      }
+      dist
+    }
+  }
+
+  private val osaPatterns = new ThreadLocal[OsaPattern] {
+    override def initialValue(): OsaPattern = new OsaPattern
+  }
+
+  /** `p` (at most [[OsaMaxPattern]] code points) compiled into this thread's
+    * pattern. The object is reused: the next call on the same thread
+    * overwrites it, so score every text against one pattern before
+    * compiling the next. */
+  def osaPattern(p: Array[Int]): OsaPattern = osaPatterns.get().compile(p)
+
   /** Per-thread row workspace for [[distanceBandedCappedCp]] — the
     * dictionary scan calls it once per candidate. */
   private final class CappedRows {

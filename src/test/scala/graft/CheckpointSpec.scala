@@ -2,8 +2,9 @@ package graft
 
 import java.nio.file.Files
 import org.apache.spark.sql.functions._
-import graft.correct.{DictionaryCorrector, NullCorrector}
+import graft.correct.{DictionaryCorrector, DictionaryModel, NoisyChannelCorrector, NoisyChannelModel, NullCorrector}
 import graft.gen.DocGen
+import graft.model.Span
 import graft.pipeline.{CheckpointedRun, CorrectionPipeline => CP}
 
 class CheckpointSpec extends SparkSpec {
@@ -296,5 +297,25 @@ class CheckpointSpec extends SparkSpec {
     } finally spark.sparkContext.removeSparkListener(listener)
     // a re-introduced count, regroup or state re-read shows up here
     assert(jobs.get == 3, s"${jobs.get} jobs")
+  }
+
+  test("a null-text text span comes out null under the noisy and the dictionary corrector") {
+    def t(text: String, off: Int) = Span(Span.KindText, text, "", off)
+    val docs = Seq(EqDoc("nulltext", Seq(t(null, 0), t("helo wrld", 1)),
+      Seq(t("x", 0), t("hello world", 1)))).toDF()
+    val vocab = Map("hello" -> 5L, "world" -> 5L)
+    val noisy = spark.sparkContext.broadcast(new NoisyChannelModel(vocab, 1L, 30))
+    val dict = spark.sparkContext.broadcast(new DictionaryModel(vocab, 1L))
+    Seq("noisy" -> new NoisyChannelCorrector(noisy), "dict" -> DictionaryCorrector.corrector(dict))
+      .foreach { case (name, corrector) =>
+        val (out, state) = freshDirs()
+        val m = CheckpointedRun.run(spark, docs, docs, corrector, out, state, name,
+          spansCol = "noisy", cleanSpansCol = "truth", nBuckets = 2, groupSize = 2)
+        val spans = spark.read.parquet(out).select("spans").as[Seq[Span]].collect().toSeq.flatten
+        assert(spans == Seq(t(null, 0), t("hello world", 1)), name)
+        // the null pair counts in rows, not in cer_sum or perfect
+        assert(m == graft.model.CerMetrics(2, 1, 0.0), s"$name: $m")
+      }
+    noisy.destroy(); dict.destroy()
   }
 }

@@ -136,4 +136,21 @@ class EditDistanceSpec extends AnyFunSuite {
         math.min(distance(noisy, t), k + 1))
     }
   }
+
+  test("bit-parallel OSA ≡ full DP: 100k pairs, 3-symbol alphabet with an astral code point") {
+    val r = new scala.util.Random(49)
+    val alphabet = Array('a'.toInt, 'b'.toInt, 0x1F600) // dense transpositions
+    def rand(len: Int): Array[Int] = Array.fill(len)(alphabet(r.nextInt(alphabet.length)))
+    def str(cps: Array[Int]): String = new String(cps, 0, cps.length)
+    (0 until 100000).foreach { _ =>
+      val p = rand(1 + r.nextInt(OsaMaxPattern))
+      val t = str(rand(r.nextInt(81)))
+      val want = distance(str(p), t)
+      val got = osaPattern(p).distance(t)
+      assert(got == want, s"pattern=${str(p)} text=$t got=$got want=$want")
+    }
+    assert(osaPattern(Array.emptyIntArray).distance("a😀b") == 3)
+    assert(osaPattern("ca".codePoints().toArray).distance("abc") == 3) // OSA, not true DL
+    intercept[IllegalArgumentException](osaPattern(Array.fill(OsaMaxPattern + 1)('a'.toInt)))
+  }
 }

@@ -1,11 +1,18 @@
 package graft
 
 import graft.correct._
-import graft.gen.DocGen
+import graft.gen.{DetRng, DocGen, NoiseChannel}
 import graft.pipeline.{CorrectionPipeline => CP}
 import graft.text.DamerauLevenshtein
 
 class NoisyChannelCorrectorSpec extends SparkSpec {
+
+  private def cpLen(s: String): Int = s.codePointCount(0, s.length)
+
+  /** Every (word, freq, dist) within `d` of `q` by the full OSA DP. */
+  private def brute(words: Map[String, Long], q: String, d: Int): Set[(String, Long, Int)] =
+    words.iterator.map { case (w, f) => (w, f, DamerauLevenshtein.distance(q, w)) }
+      .filter(_._3 <= d).toSet
 
   test("trie search ≡ brute-force distance filter (Levenshtein automaton correctness)") {
     val r = new scala.util.Random(11)
@@ -13,6 +20,7 @@ class NoisyChannelCorrectorSpec extends SparkSpec {
       new String(Array.fill(1 + r.nextInt(8))(('a' + r.nextInt(6)).toChar))
     }.distinct.map(w => (w, 1L + r.nextInt(50))).toMap
     val trie = TokenTrie.build(words)
+    val index = DeleteIndex.build(words, 3).get
     (0 until 120).foreach { _ =>
       val q = new String(Array.fill(1 + r.nextInt(9))(('a' + r.nextInt(7)).toChar))
       (0 to 3).foreach { d =>
@@ -22,8 +30,190 @@ class NoisyChannelCorrectorSpec extends SparkSpec {
             (w, f, DamerauLevenshtein.distance(q, w))
         }.toSet
         assert(got == want, s"q=$q d=$d missing=${want -- got} extra=${got -- want}")
+        val fromIndex = index.searchWithin(q, d).toSet
+        assert(fromIndex == want, s"index q=$q d=$d missing=${want -- fromIndex} extra=${fromIndex -- want}")
       }
     }
+  }
+
+  /** The model's candidate source (index or trie, whichever serves), the
+    * index itself where it can serve, and the trie all equal the brute-force
+    * filter at widths 0-3. */
+  private def assertCandidates(words: Map[String, Long], queries: Seq[String]): Unit = {
+    val m = new NoisyChannelModel(words, 1L, 30)
+    assert(m.index.isDefined)
+    queries.foreach { q =>
+      (0 to 3).foreach { d =>
+        val want = brute(words, q, d)
+        val got = m.candidatesWithin(q, d).toSet
+        assert(got == want, s"q=$q d=$d missing=${want -- got} extra=${got -- want}")
+        assert(m.trie.searchWithin(q, d).toSet == want, s"trie q=$q d=$d")
+        if (cpLen(q) <= DeleteIndex.MaxToken)
+          assert(m.index.get.searchWithin(q, d).toSet == want, s"index q=$q d=$d")
+      }
+    }
+  }
+
+  test("delete index ≡ trie ≡ brute force: short words, repeats, Cyrillic and astral, long tokens") {
+    val r = new scala.util.Random(13)
+    val pool = Array("a", "b", "ж", "д", "😀", "𝔘")
+    def rand(len: Int): String = (0 until len).map(_ => pool(r.nextInt(pool.length))).mkString
+    /** `w` cut or extended to `n` code points, then one code point replaced. */
+    def fit(w: String, n: Int): String = {
+      val cps = (w.codePoints().toArray.take(n) ++ rand(n).codePoints().toArray).take(n)
+      cps(r.nextInt(n)) = pool(r.nextInt(pool.length)).codePointAt(0)
+      new String(cps, 0, n)
+    }
+    // 1-2-code-point words (their variants reach ""), repeated letters
+    val short = ((0 until 60).map(_ => rand(1 + r.nextInt(2))) ++
+      Seq("aaaa", "aaab", "abab", "aaaaaa", "жжж", "😀😀😀😀", "a𝔘a𝔘") ++
+      (0 until 200).map(_ => rand(3 + r.nextInt(6))))
+      .distinct.map(w => w -> (1L + r.nextInt(9))).toMap
+    val maxLen = short.keys.map(cpLen).max
+    val longest = short.keys.filter(cpLen(_) == maxLen).toSeq
+    assertCandidates(short,
+      (0 until 150).map(_ => rand(r.nextInt(10))) ++
+        Seq("", "a", "aa", "aaa", "aaaaa", "abba", "жж", "😀😀😀") ++
+        longest.flatMap(w => Seq(w + rand(3), w + rand(4), fit(w, maxLen + 3), fit(w, maxLen + 4))))
+    // words of 60-67 code points, tokens of 64 (index) and 65 (trie) code points
+    val long = (0 until 40).map(_ => rand(60 + r.nextInt(8))).map(w => w -> (1L + r.nextInt(9))).toMap
+    assertCandidates(long,
+      long.keys.toSeq.flatMap(w => Seq(fit(w, 64), fit(w, 65), w.take(64), rand(64))))
+  }
+
+  test("empty pruned vocabulary: no candidates, every token passes through") {
+    val m = new NoisyChannelModel(Map("cat" -> 1L, "dog" -> 1L), 2L, 30)
+    assert(m.index.get.size == 0)
+    Seq("", "cat", "cax", "😀").foreach { q =>
+      (0 to 3).foreach(d => assert(m.candidatesWithin(q, d).isEmpty, s"q=$q d=$d"))
+      assert(m.inferToken(q) == q)
+    }
+  }
+
+  test("entry budget: just above it no index is built and the trie serves; in budget, count == size") {
+    val r = new scala.util.Random(79)
+    def word(len: Int) = new String(Array.fill(len)(('a' + r.nextInt(20)).toChar))
+    val perWord = DeleteIndex.entryCount(Seq(word(67)), 3)
+    assert(perWord == 1 + 67 + 2211 + 47905)
+    val n = (DeleteIndex.Budget / perWord + 1).toInt
+    val words = Iterator.continually(word(67)).distinct.take(n).map(_ -> 3L).toMap
+    assert(DeleteIndex.entryCount(words.keys, 3) > DeleteIndex.Budget)
+    assert(DeleteIndex.entryCount(words.keys.drop(1), 3) <= DeleteIndex.Budget)
+    val m = new NoisyChannelModel(words, 1L, 30)
+    assert(m.index.isEmpty)
+    words.keys.take(8).foreach { w =>
+      val q = w.take(61) + "zzz" // 64 code points, distance 3 to w
+      (0 to 3).foreach { d =>
+        assert(m.candidatesWithin(q, d).toSet == brute(words, q, d), s"q=$q d=$d")
+      }
+      assert(m.inferToken(q) == w)
+    }
+
+    // in budget: the pre-build count is the built size; a word longer than
+    // MaxToken + radius code points is neither counted nor indexed
+    val vocab = DocGen.lexicon.map(_ -> 1L).toMap + (word(DeleteIndex.MaxToken + 4) -> 1L)
+    val ix = DeleteIndex.build(vocab, 3).get
+    assert(ix.size == DeleteIndex.entryCount(vocab.keys, 3))
+    assert(ix.size == DeleteIndex.entryCount(DocGen.lexicon, 3))
+    assert(ix.size == 282463) // DocGen.lexicon at radius 3
+  }
+
+  test("inferToken ≡ restatement over trie candidates: 20k mutilated lexicon tokens") {
+    val lex = DocGen.lexicon
+    val vocab = lex.take(2500).zipWithIndex.map { case (w, i) => w -> (1L + (i * 7919L) % 97) }.toMap
+    val m = new NoisyChannelModel(vocab, 2L, DocGen.goodChars.length)
+    val totalFreq = math.max(vocab.values.filter(_ >= 2L).sum.toDouble, 1.0)
+    val fallback = new DictionaryModel(vocab, 2L)
+    val paths = scala.collection.mutable.Map.empty[String, Int].withDefaultValue(0)
+    def best(token: String, w: Int): Option[String] = {
+      val c = m.trie.searchWithin(token, w)
+      if (c.isEmpty) None
+      else if (c.length == 1) Some(c(0)._1)
+      else Some(c.map { case (cw, f, _) => (m.channelLogProb(token, cw) + math.log(f / totalFreq), cw) }
+        .reduce((a, b) => if (a._1 > b._1 || (a._1 == b._1 && a._2 < b._2)) a else b)._2)
+    }
+    def restated(token: String): String = {
+      def via(path: String)(o: => Option[String]): Option[String] = {
+        val v = o; if (v.isDefined) paths(path) += 1; v
+      }
+      if (m.contains(token)) { paths("exact") += 1; token }
+      else via("w1")(best(token, 1))
+        .orElse(via("w2")(best(token, 2)))
+        .orElse(via("split")(Option(m.splitCandidate(token)).map(_._1)))
+        .orElse(via("w3")(best(token, 3)))
+        .getOrElse { paths("fallback") += 1; fallback.inferToken(token) }
+    }
+    val rng = new DetRng(61L)
+    (0 until 20000).foreach { i =>
+      val clean =
+        if (i % 5 == 0) lex(rng.nextInt(lex.length)) + lex(rng.nextInt(lex.length))
+        else lex(rng.nextInt(lex.length))
+      val token = NoiseChannel.mutilate(clean, DocGen.goodChars, rng)
+      assert(m.inferToken(token) == restated(token), s"token=$token")
+    }
+    info(paths.toSeq.sorted.mkString(" "))
+    Seq("exact", "w1", "w2", "split", "w3", "fallback").foreach(p => assert(paths(p) > 0, p))
+  }
+
+  test("DictionaryModel.inferToken ≡ capped-DP scan on fallback-shaped tokens") {
+    val vocab = DocGen.lexicon.take(1500).zipWithIndex.map { case (w, i) => w -> (1L + i % 13) }.toMap
+    val dm = new DictionaryModel(vocab, 1L)
+    val words = vocab.toSeq.map { case (w, f) => (w, f, w.codePoints().toArray) }
+    val r = new scala.util.Random(67)
+    val letters = DocGen.goodChars
+    def rand(len: Int): String = new String(Array.fill(len)(letters(r.nextInt(letters.length))), 0, len)
+    /** Witness: the full scan by (dist asc, freq desc, token asc), uncapped. */
+    def scan(token: String): (Int, String) = {
+      val tcp = token.codePoints().toArray
+      val (d, _, w) = words.map { case (w, f, wcp) =>
+        (DamerauLevenshtein.distanceBandedCappedCp(tcp, wcp, Int.MaxValue - 1), -f, w)
+      }.min
+      (d, w)
+    }
+    var checked = 0
+    while (checked < 300) {
+      val token = rand(if (checked % 10 == 0) 65 + r.nextInt(6) else 6 + r.nextInt(25))
+      val (d, want) = scan(token)
+      if (d > 3) { // no word within the noisy-channel widths
+        assert(dm.inferToken(token) == want, s"token=$token")
+        checked += 1
+      }
+    }
+  }
+
+  test("8 threads sharing one model produce the single-thread results") {
+    val lex = DocGen.lexicon
+    val vocab = lex.take(2000).zipWithIndex.map { case (w, i) => w -> (1L + i % 50) }.toMap
+    val rng = new DetRng(71L)
+    val tokens = (0 until 3000).map { i =>
+      val clean = if (i % 4 == 0) lex(rng.nextInt(lex.length)) + lex(rng.nextInt(lex.length))
+                  else lex(rng.nextInt(lex.length))
+      NoiseChannel.mutilate(clean, DocGen.goodChars, rng)
+    }
+    val single = {
+      val m = new NoisyChannelModel(vocab, 1L, DocGen.goodChars.length)
+      tokens.map(m.inferToken)
+    }
+    val shared = new NoisyChannelModel(vocab, 1L, DocGen.goodChars.length) // lazy state cold
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
+    try {
+      val runs = (0 until 8).map { k =>
+        pool.submit(new java.util.concurrent.Callable[Seq[String]] {
+          // each thread walks the tokens from its own starting point
+          def call(): Seq[String] = {
+            val order = tokens.indices.map(i => (i + k * 375) % tokens.length)
+            val out = new Array[String](tokens.length)
+            order.foreach(i => out(i) = shared.inferToken(tokens(i)))
+            out.toSeq
+          }
+        })
+      }
+      runs.zipWithIndex.foreach { case (f, k) =>
+        val got = f.get
+        val bad = got.indices.find(i => got(i) != single(i))
+        assert(bad.isEmpty, bad.map(i => s"thread $k: ${tokens(i)} -> ${got(i)}, not ${single(i)}"))
+      }
+    } finally pool.shutdown()
   }
 
   test("fuzz: hostile unicode (astral plane, combining, huge tokens) never throws, deterministic") {
