@@ -85,14 +85,16 @@ import graft.pipeline.CheckpointedRun
  *                                  #   media-only docs pass; both-or-neither
  *   [--langid-keep en,de]          # comma-separated allowed languages
  *                                  # curation order: sample -> quality gate -> gopher
- *                                  # -> quality model -> LM filter -> DSIR resample
- *                                  # -> decontam -> PII
- *                                  # scrub -> doc
+ *                                  # -> langid -> quality model -> LM filter -> DSIR
+ *                                  # -> decontam -> PII scrub -> bloom dedup -> doc
  *                                  # dedup -> span dedup -> media dedup -> source mix
  *                                  # (narrow/cheap first, shuffle-bearing later; dedup
  *                                  # keys on the REDACTED text when the scrub is on;
  *                                  # span cuts on doc-dedup survivors only; the mix
- *                                  # allocates over the CLEANED per-source counts)
+ *                                  # allocates over the CLEANED per-source counts).
+ *                                  # Single-branch rule: media-only docs pass by an
+ *                                  # `__n` predicate, never a union branch (it re-runs
+ *                                  # the chain above it); a self-join reads once a side
  *   [--bpe-train n[:maxWords]]     # train a BPE merge table over the corrected corpus
  *                                  #   (one distributed word-count agg + the driver-local
  *                                  #   delta merge loop over the top-maxWords words,
@@ -209,8 +211,8 @@ object RunPipeline {
     * contents — plus its normalized length, shared by every curation step
     * (dedup, quality gate, LM filter) so they can never disagree on what a
     * document's text is. Returns the frame tagged with `__txt` and `__n`. */
-  private def tagDocText(docs: org.apache.spark.sql.DataFrame,
-                         spansCol: String): org.apache.spark.sql.DataFrame = {
+  private[graft] def tagDocText(docs: org.apache.spark.sql.DataFrame,
+                                spansCol: String): org.apache.spark.sql.DataFrame = {
     val txt = concat_ws(" ",
       transform(filter(col(spansCol), sp => sp.getField("kind") === graft.model.Span.KindText),
         sp => sp.getField("text")))
@@ -218,6 +220,21 @@ object RunPipeline {
       .withColumn("__n",
         coalesce(length(graft.dedup.Dedup.normalizeText(col("__txt"))), lit(0)))
   }
+
+  /** The media-only passthrough of every text-curation stage, on ONE branch:
+    * no-text rows (`__n === 0`) pass by predicate, text rows where `keep`
+    * holds. A has-text/no-text union would re-run the upstream chain per
+    * branch and add the branches' partition counts to the staging write. */
+  private def keepText(tagged: org.apache.spark.sql.DataFrame,
+                       keep: org.apache.spark.sql.Column): org.apache.spark.sql.DataFrame =
+    tagged.where(col("__n") === 0 || keep).drop("__txt", "__n")
+
+  /** [[keepText]] keeping the text rows whose `doc_id` `survivors` holds: an
+    * `IN` subquery, planned as an existence join, so rows pass exactly as
+    * under a semi join on those ids and duplicate ids multiply nothing. */
+  private def keepTextIds(tagged: org.apache.spark.sql.DataFrame,
+                          survivors: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+    keepText(tagged, col("doc_id").isin(survivors.select(col("doc_id"))))
 
   /** Duplicate collapse over the interleaved-docs table — the standard
     * web-pipeline order (dedup BEFORE the expensive correction kernel; every
@@ -233,8 +250,8 @@ object RunPipeline {
     * `near-simhash[:maxHamming]` — the near modes all run the exact collapse
     * first (inside their Dedup operators) and differ in candidate
     * generation / verification / cluster semantics (see Dedup scaladoc). */
-  private def dedupDocs(docs: org.apache.spark.sql.DataFrame,
-                        spansCol: String, mode: String): org.apache.spark.sql.DataFrame = {
+  private[graft] def dedupDocs(docs: org.apache.spark.sql.DataFrame,
+                               spansCol: String, mode: String): org.apache.spark.sql.DataFrame = {
     import graft.dedup.Dedup
     def arg(default: Double): Double =
       mode.split(":", 2) match {
@@ -243,55 +260,51 @@ object RunPipeline {
       }
     val tagged = tagDocText(docs, spansCol)
     val hasText = tagged.where(col("__n") > 0)
-    val noText = tagged.where(col("__n") === 0)
-    val deduped = mode.takeWhile(_ != ':') match {
-      case "exact" => Dedup.dedupExact(hasText, "doc_id", "__txt")
+    // exact: semi join on the keep ids; near modes: anti join on removed
+    // ids — survivors are closed under doc_id, so their ids decide exactly
+    keepTextIds(tagged, mode.takeWhile(_ != ':') match {
+      case "exact" =>
+        Dedup.exactGroups(hasText, "doc_id", "__txt").select(col("keep_id").as("doc_id"))
       case "near-lsh" => Dedup.dedupNearLsh(hasText, arg(0.9), idCol = "doc_id", textCol = "__txt")
       case "near-cc" => Dedup.dedupNearCC(hasText, arg(0.9), idCol = "doc_id", textCol = "__txt")
       case "near-simhash" =>
         Dedup.dedupNearSimHash(hasText, arg(3.0).toInt, idCol = "doc_id", textCol = "__txt")
       case other => sys.error(
         s"unknown --dedup $other (none|exact|near-lsh[:t]|near-cc[:t]|near-simhash[:d])")
-    }
-    deduped.unionByName(noText).drop("__txt", "__n")
+    })
   }
 
   /** Quality gate over the concatenated text spans (same text key and
     * media-only passthrough policy as [[dedupDocs]]): keep text docs with
     * `quality >= q` and `dup_token_ratio <= d`. Both signals are scan-side
     * narrow expressions — no shuffle. `spec` grammar: `q` or `q:d`. */
-  private def gateDocs(docs: org.apache.spark.sql.DataFrame,
-                       spansCol: String, spec: String): org.apache.spark.sql.DataFrame = {
+  private[graft] def gateDocs(docs: org.apache.spark.sql.DataFrame,
+                              spansCol: String, spec: String): org.apache.spark.sql.DataFrame = {
     val (q, d) = spec.split(":", 2) match {
       case Array(qs, ds) => (qs.toDouble, ds.toDouble)
       case Array(qs) => (qs.toDouble, 0.6)
     }
-    val tagged = tagDocText(docs, spansCol)
-    val kept = graft.streaming.StreamingOps.qualityGate(
-        tagged.where(col("__n") > 0), "__txt", q, d)
-      .drop("quality", "dup_token_ratio", "dup_bigram_frac")
-    kept.unionByName(tagged.where(col("__n") === 0)).drop("__txt", "__n")
+    keepText(graft.streaming.StreamingOps.qualityGateAnnotated(
+        tagDocText(docs, spansCol), "__txt", q, d), col("keep"))
+      .drop("quality", "dup_token_ratio", "dup_bigram_frac", "keep")
   }
 
   /** The full Gopher heuristic gate (Rae'21 App. A) over assembled doc
     * text: one native `gopher_signals` call per doc, thresholds from the
     * `minWords[:minStopHits]` spec (other rules at the paper's defaults).
     * Media-only docs pass, like every text gate in this chain. */
-  private def gopherDocs(docs: org.apache.spark.sql.DataFrame,
-                         spansCol: String, spec: String): org.apache.spark.sql.DataFrame = {
+  private[graft] def gopherDocs(docs: org.apache.spark.sql.DataFrame,
+                                spansCol: String, spec: String): org.apache.spark.sql.DataFrame = {
     val (minW, minS) = spec.split(":", 2) match {
       case Array(w, s) => (w.toLong, s.toLong)
       case Array(w) if w.nonEmpty => (w.toLong, 2L)
       case _ => (50L, 2L)
     }
     import graft.textanalysis.TextAnalysis
-    val tagged = tagDocText(docs, spansCol)
-    val kept = tagged.where(col("__n") > 0)
-      .withColumn("__gsig",
-        TextAnalysis.gopherSignals(docs.sparkSession, coalesce(col("__txt"), lit(""))))
-      .where(TextAnalysis.gopherKeep(col("__gsig"), minWords = minW, minStopHits = minS))
+    val tagged = tagDocText(docs, spansCol).withColumn("__gsig",
+      TextAnalysis.gopherSignals(docs.sparkSession, coalesce(col("__txt"), lit(""))))
+    keepText(tagged, TextAnalysis.gopherKeep(col("__gsig"), minWords = minW, minStopHits = minS))
       .drop("__gsig")
-    kept.unionByName(tagged.where(col("__n") === 0)).drop("__txt", "__n")
   }
 
   /** Benchmark decontamination: drop training docs sharing an n-token
@@ -473,20 +486,15 @@ object RunPipeline {
     * evidence about them (same passthrough policy as the heuristic gate).
     * The model is `<= dim` rows and broadcast; the only doc-keyed traffic
     * is `(doc_id, f, c)` triples — text never shuffles. */
-  private def qualityModelDocs(docs: org.apache.spark.sql.DataFrame, spansCol: String,
-                               modelDir: String, minScore: Long): org.apache.spark.sql.DataFrame = {
+  private[graft] def qualityModelDocs(docs: org.apache.spark.sql.DataFrame, spansCol: String,
+                                      modelDir: String, minScore: Long): org.apache.spark.sql.DataFrame = {
     import graft.textanalysis.QualityClassifier
     val (model, dim) = QualityClassifier.loadCountDiffModel(docs.sparkSession, modelDir)
     val tagged = tagDocText(docs, spansCol)
-    val hasText = tagged.where(col("__n") > 0)
-    val kept = QualityClassifier.countDiffScores(
-        hasText.select(col("doc_id"), col("__txt")), model, dim,
+    keepTextIds(tagged, QualityClassifier.countDiffScores(
+        tagged.where(col("__n") > 0).select(col("doc_id"), col("__txt")), model, dim,
         idCol = "doc_id", textCol = "__txt")
-      .where(col("score_raw") > minScore)
-      .select(col("doc_id"))
-    hasText.join(kept, Seq("doc_id"), "left_semi")
-      .unionByName(tagged.where(col("__n") === 0))
-      .drop("__txt", "__n")
+      .where(col("score_raw") > minScore))
   }
 
   /** DSIR importance resampling (`--dsir-model`/`--dsir-k`): Gumbel-top-k
@@ -496,19 +504,14 @@ object RunPipeline {
     * passthrough policy), so the output holds k text docs PLUS the media
     * passthrough. Distribution matching, not a gate: the budget is spent
     * to REPRODUCE the target's hashed-n-gram distribution. */
-  private def dsirDocs(docs: org.apache.spark.sql.DataFrame, spansCol: String,
-                       modelDir: String, k: Int, alpha: Double): org.apache.spark.sql.DataFrame = {
+  private[graft] def dsirDocs(docs: org.apache.spark.sql.DataFrame, spansCol: String,
+                              modelDir: String, k: Int, alpha: Double): org.apache.spark.sql.DataFrame = {
     import graft.textanalysis.Dsir
     val (counts, dim) = Dsir.loadModel(docs.sparkSession, modelDir)
     val tagged = tagDocText(docs, spansCol)
-    val hasText = tagged.where(col("__n") > 0)
-    val picked = Dsir.resample(
-        hasText.select(col("doc_id"), col("__txt")), counts, k, dim, alpha,
-        idCol = "doc_id", textCol = "__txt")
-      .select(col("doc_id"))
-    hasText.join(picked, Seq("doc_id"), "left_semi")
-      .unionByName(tagged.where(col("__n") === 0))
-      .drop("__txt", "__n")
+    keepTextIds(tagged, Dsir.resample(
+        tagged.where(col("__n") > 0).select(col("doc_id"), col("__txt")), counts, k, dim, alpha,
+        idCol = "doc_id", textCol = "__txt"))
   }
 
   /** Cross-batch Bloom dedup (`--bloom-dedup`): drop text docs whose
@@ -516,8 +519,8 @@ object RunPipeline {
     * sketch. Media-only/empty-text docs pass — their fingerprint is the
     * constant md5("") and the membership question is meaningless for them
     * (the dedup family's passthrough policy). */
-  private def bloomDedupDocs(docs: org.apache.spark.sql.DataFrame, spansCol: String,
-                             dir: String): org.apache.spark.sql.DataFrame = {
+  private[graft] def bloomDedupDocs(docs: org.apache.spark.sql.DataFrame, spansCol: String,
+                                    dir: String): org.apache.spark.sql.DataFrame = {
     import graft.dedup.{Bloom, Dedup}
     val spark = docs.sparkSession
     val (mBits, k) = Bloom.loadMeta(spark, dir)
@@ -525,17 +528,15 @@ object RunPipeline {
     if (mBits / Bloom.WordBits <= Bloom.LiteralProbeMaxWords) {
       // scan-side probe: the sketch rides as one plan literal
       val (words, _, _) = Bloom.load(spark, dir)
-      tagged.where(col("__n") === 0 ||
-          !Bloom.mightContain(Dedup.fingerprint(col("__txt")), words, mBits, k))
-        .drop("__txt", "__n")
+      keepText(tagged, !Bloom.mightContain(Dedup.fingerprint(col("__txt")), words, mBits, k))
     } else {
-      // GB-scale sketch: probe by joining the sparse word table
-      // (identical survivors — BloomSpec equivalence)
-      val table = spark.read.parquet(s"$dir/words")
-      Bloom.dedupAgainstSketchTable(tagged.where(col("__n") > 0), table, mBits, k,
-          textCol = "__txt", idCol = "doc_id")
-        .unionByName(tagged.where(col("__n") === 0))
-        .drop("__txt", "__n")
+      // GB-scale sketch: join the sparse word table (BloomSpec: same survivors);
+      // hits return as a left-join flag, so a null id passes as under the anti join
+      val hits = Bloom.sketchHits(tagged.where(col("__n") > 0),
+        spark.read.parquet(s"$dir/words"), mBits, k, textCol = "__txt", idCol = "doc_id")
+      keepText(tagged.join(hits.select(col("doc_id").as("__hit")),
+          col("doc_id") === col("__hit"), "left"), col("__hit").isNull)
+        .drop("__hit")
     }
   }
 
@@ -643,20 +644,15 @@ object RunPipeline {
     * doc against persisted Cavnar-Trenkle profiles and keep predicted
     * members of the allowed set. Media-only docs pass (no text evidence —
     * the quality-filter family's passthrough policy). */
-  private def langidDocs(docs: org.apache.spark.sql.DataFrame, spansCol: String,
-                         modelDir: String, keep: Set[String]): org.apache.spark.sql.DataFrame = {
+  private[graft] def langidDocs(docs: org.apache.spark.sql.DataFrame, spansCol: String,
+                                modelDir: String, keep: Set[String]): org.apache.spark.sql.DataFrame = {
     import graft.textanalysis.LangProfile
     val profiles = LangProfile.load(docs.sparkSession, modelDir)
     val tagged = tagDocText(docs, spansCol)
-    val hasText = tagged.where(col("__n") > 0)
-    val kept = LangProfile.classify(
-        hasText.select(col("doc_id"), col("__txt")), profiles,
+    keepTextIds(tagged, LangProfile.classify(
+        tagged.where(col("__n") > 0).select(col("doc_id"), col("__txt")), profiles,
         idCol = "doc_id", textCol = "__txt")
-      .filter(col("lang_pred").isin(keep.toSeq: _*))
-      .select(col("doc_id"))
-    hasText.join(kept, Seq("doc_id"), "left_semi")
-      .unionByName(tagged.where(col("__n") === 0))
-      .drop("__txt", "__n")
+      .filter(col("lang_pred").isin(keep.toSeq: _*)))
   }
 
   /** `--shards N[:seed]` → (nShards, seed). */

@@ -113,20 +113,24 @@ object Bloom {
    * shipping the sketch inside every task's plan.
    */
   def dedupAgainstSketchTable(docs: DataFrame, table: DataFrame, mBits: Int, k: Int,
-                              textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
+                              textCol: String = "text", idCol: String = "doc_id"): DataFrame =
+    docs.join(sketchHits(docs, table, mBits, k, textCol, idCol), Seq(idCol), "left_anti")
+
+  /** Ids [[dedupAgainstSketchTable]] drops: all probe bits set (one row per id). */
+  def sketchHits(docs: DataFrame, table: DataFrame, mBits: Int, k: Int,
+                 textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
     val key = Dedup.fingerprint(col(textCol))
     val posArr = array((0 until k).map(i => position(key, i, mBits)): _*)
     val probes = docs.select(col(idCol), explode(posArr).as("pos"))
       .select(col(idCol),
         (col("pos") / WordBits).cast("int").as("w"),
         call_function("shiftleft", lit(1L), (col("pos") % WordBits).cast("int")).as("mask"))
-    val inSketch = probes.join(table, Seq("w"), "left")
+    probes.join(table, Seq("w"), "left")
       .groupBy(col(idCol))
       .agg(min((coalesce(col("bits"), lit(0L))
         .bitwiseAND(col("mask")) =!= 0L).cast("int")).as("__all_set"))
       .where(col("__all_set") === 1)
       .select(col(idCol))
-    docs.join(inSketch, Seq(idCol), "left_anti")
   }
 
   /** Persist a sketch: `dir/words` = the sparse (w, bits) table,
