@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.correct.{DictionaryCorrector, NoisyChannelCorrector, NoisyChannelModel, NullCorrector}
@@ -48,6 +48,7 @@ import graft.pipeline.CheckpointedRun
  *   [--decontam /data/eval[:n]]    # drop training docs sharing an n-token n-gram
  *                                  #   (default n 13) with the eval/benchmark docs table
  *                                  #   (same interleaved-docs shape; GPT-3-style rule)
+ *   [--decontam-format orc]        # the eval table's format (default: --input-format)
  *   [--lm-model /data/lm]          # reference bigram-LM count tables (LmScore.saveModel
  *                                  #   layout: uni/ + bi/ parquet)
  *   [--lm-min-logprob x]           # with --lm-model: drop text docs whose mean bigram
@@ -84,14 +85,10 @@ import graft.pipeline.CheckpointedRun
  *                                  #   and keep only docs predicted in --langid-keep;
  *                                  #   media-only docs pass; both-or-neither
  *   [--langid-keep en,de]          # comma-separated allowed languages
- *                                  # curation order: sample -> quality gate -> gopher
- *                                  # -> langid -> quality model -> LM filter -> DSIR
- *                                  # -> decontam -> PII scrub -> bloom dedup -> doc
- *                                  # dedup -> span dedup -> media dedup -> source mix
- *                                  # (narrow/cheap first, shuffle-bearing later; dedup
- *                                  # keys on the REDACTED text when the scrub is on;
- *                                  # span cuts on doc-dedup survivors only; the mix
- *                                  # allocates over the CLEANED per-source counts).
+ *                                  # curation order: the row order of `curationTable`
+ *                                  # (sample first, source mix last), which also
+ *                                  # gives each stage's flags to the lineage and
+ *                                  # stage token; an unread flag fails the run.
  *                                  # Single-branch rule: media-only docs pass by an
  *                                  # `__n` predicate, never a union branch (it re-runs
  *                                  # the chain above it); a self-join reads once a side
@@ -186,9 +183,12 @@ import graft.pipeline.CheckpointedRun
  */
 object RunPipeline {
 
-  private def parseArgs(args: Array[String]): Map[String, String] =
-    args.sliding(2, 2).collect {
+  /** `--key value` pairs; a dangling flag or a key without `--` fails. */
+  private[graft] def parseArgs(args: Array[String]): Map[String, String] =
+    args.grouped(2).map {
       case Array(k, v) if k.startsWith("--") => k.drop(2) -> v
+      case Array(k, _) => throw new IllegalArgumentException(s"expected a --flag, got '$k'")
+      case Array(k) => throw new IllegalArgumentException(s"$k has no value")
     }.toMap
 
   def main(args: Array[String]): Unit = {
@@ -211,8 +211,7 @@ object RunPipeline {
     * contents — plus its normalized length, shared by every curation step
     * (dedup, quality gate, LM filter) so they can never disagree on what a
     * document's text is. Returns the frame tagged with `__txt` and `__n`. */
-  private[graft] def tagDocText(docs: org.apache.spark.sql.DataFrame,
-                                spansCol: String): org.apache.spark.sql.DataFrame = {
+  private[graft] def tagDocText(docs: DataFrame, spansCol: String): DataFrame = {
     val txt = concat_ws(" ",
       transform(filter(col(spansCol), sp => sp.getField("kind") === graft.model.Span.KindText),
         sp => sp.getField("text")))
@@ -225,15 +224,13 @@ object RunPipeline {
     * no-text rows (`__n === 0`) pass by predicate, text rows where `keep`
     * holds. A has-text/no-text union would re-run the upstream chain per
     * branch and add the branches' partition counts to the staging write. */
-  private def keepText(tagged: org.apache.spark.sql.DataFrame,
-                       keep: org.apache.spark.sql.Column): org.apache.spark.sql.DataFrame =
+  private def keepText(tagged: DataFrame, keep: Column): DataFrame =
     tagged.where(col("__n") === 0 || keep).drop("__txt", "__n")
 
   /** [[keepText]] keeping the text rows whose `doc_id` `survivors` holds: an
     * `IN` subquery, planned as an existence join, so rows pass exactly as
     * under a semi join on those ids and duplicate ids multiply nothing. */
-  private def keepTextIds(tagged: org.apache.spark.sql.DataFrame,
-                          survivors: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+  private def keepTextIds(tagged: DataFrame, survivors: DataFrame): DataFrame =
     keepText(tagged, col("doc_id").isin(survivors.select(col("doc_id"))))
 
   /** Duplicate collapse over the interleaved-docs table — the standard
@@ -250,8 +247,7 @@ object RunPipeline {
     * `near-simhash[:maxHamming]` — the near modes all run the exact collapse
     * first (inside their Dedup operators) and differ in candidate
     * generation / verification / cluster semantics (see Dedup scaladoc). */
-  private[graft] def dedupDocs(docs: org.apache.spark.sql.DataFrame,
-                               spansCol: String, mode: String): org.apache.spark.sql.DataFrame = {
+  private[graft] def dedupDocs(docs: DataFrame, spansCol: String, mode: String): DataFrame = {
     import graft.dedup.Dedup
     def arg(default: Double): Double =
       mode.split(":", 2) match {
@@ -278,8 +274,7 @@ object RunPipeline {
     * media-only passthrough policy as [[dedupDocs]]): keep text docs with
     * `quality >= q` and `dup_token_ratio <= d`. Both signals are scan-side
     * narrow expressions — no shuffle. `spec` grammar: `q` or `q:d`. */
-  private[graft] def gateDocs(docs: org.apache.spark.sql.DataFrame,
-                              spansCol: String, spec: String): org.apache.spark.sql.DataFrame = {
+  private[graft] def gateDocs(docs: DataFrame, spansCol: String, spec: String): DataFrame = {
     val (q, d) = spec.split(":", 2) match {
       case Array(qs, ds) => (qs.toDouble, ds.toDouble)
       case Array(qs) => (qs.toDouble, 0.6)
@@ -293,8 +288,7 @@ object RunPipeline {
     * text: one native `gopher_signals` call per doc, thresholds from the
     * `minWords[:minStopHits]` spec (other rules at the paper's defaults).
     * Media-only docs pass, like every text gate in this chain. */
-  private[graft] def gopherDocs(docs: org.apache.spark.sql.DataFrame,
-                                spansCol: String, spec: String): org.apache.spark.sql.DataFrame = {
+  private[graft] def gopherDocs(docs: DataFrame, spansCol: String, spec: String): DataFrame = {
     val (minW, minS) = spec.split(":", 2) match {
       case Array(w, s) => (w.toLong, s.toLong)
       case Array(w) if w.nonEmpty => (w.toLong, 2L)
@@ -307,11 +301,6 @@ object RunPipeline {
       .drop("__gsig")
   }
 
-  /** Benchmark decontamination: drop training docs sharing an n-token
-    * n-gram with the eval corpus (GPT-3 appendix-C rule). Both sides are
-    * interleaved-docs tables; the shared text key is [[tagDocText]]. Eval
-    * grams are distinct + broadcast — the training text never shuffles.
-    * `spec` grammar: `path` or `path:n`. */
   /** `--decontam` spec → (path, n). The spec carries a PATH, which may
     * itself contain colons (s3a://, hdfs://, file:/) — the :n override is
     * recognized only as a NUMERIC suffix after the last colon, and is
@@ -329,8 +318,13 @@ object RunPipeline {
       case _ => (spec, 13)
     }
 
-  private def decontamDocs(docs: org.apache.spark.sql.DataFrame, spansCol: String,
-                           spec: String, fmt: String): org.apache.spark.sql.DataFrame = {
+  /** Benchmark decontamination: drop training docs sharing an n-token
+    * n-gram with the eval corpus (GPT-3 appendix-C rule). Both sides are
+    * interleaved-docs tables; the shared text key is [[tagDocText]]. Eval
+    * grams are distinct + broadcast — the training text never shuffles.
+    * `spec` grammar: `path` or `path:n`. */
+  private def decontamDocs(docs: DataFrame, spansCol: String,
+                           spec: String, fmt: String): DataFrame = {
     // format note: the eval table reads with --decontam-format (default:
     // the training --input-format) — benchmark dumps are produced once and
     // need not share the training corpus' lake format
@@ -356,8 +350,7 @@ object RunPipeline {
     * doc-drop modes). Scale shape: [[graft.dedup.LineDedup]] — spans reduce
     * to (60-bit md5, doc_id, offset) before any shuffle; the cut is a
     * scan-side array filter on docs that lost a span. */
-  private def spanDedupDocs(docs: org.apache.spark.sql.DataFrame,
-                            spansCol: String, spec: String): org.apache.spark.sql.DataFrame = {
+  private[graft] def spanDedupDocs(docs: DataFrame, spansCol: String, spec: String): DataFrame = {
     val minTokens = spec.toInt
     require(minTokens >= 1, s"--span-dedup minTokens must be >= 1, got $minTokens")
     val units = docs.select(col("doc_id"), explode(col(spansCol)).as("__sp"))
@@ -392,8 +385,7 @@ object RunPipeline {
     * duplicate payload (a tiny fraction; AQE broadcasts when small), then a
     * narrow span-array transform; text spans and span order are untouched,
     * preserving the passthrough discipline of the text dedup family. */
-  private def mediaDedupDocs(docs: org.apache.spark.sql.DataFrame,
-                             spansCol: String, spec: String): org.apache.spark.sql.DataFrame = {
+  private def mediaDedupDocs(docs: DataFrame, spansCol: String, spec: String): DataFrame = {
     val usage = "dhash[:d]+ahash[:d]+vhash[:d]"
     val parts = spec.split("\\+").toSeq.map { part =>
       part.split(":", 2) match {
@@ -418,9 +410,9 @@ object RunPipeline {
     * spans (the [[mediaDedupDocs]] tail, factored so specs can drive it with
     * constructed blob fixtures — the sandbox's deterministic media table
     * derives payloads from refs, so distinct refs never collide there). */
-  private[graft] def rewriteMediaRefs(docs: org.apache.spark.sql.DataFrame,
+  private[graft] def rewriteMediaRefs(docs: DataFrame,
                                       spansCol: String,
-                                      mapping: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+                                      mapping: DataFrame): DataFrame = {
     val remaps = docs.select(col("doc_id"), explode(col(spansCol)).as("__sp"))
       .where(col("__sp.kind") === graft.model.Span.KindMedia)
       .select(col("doc_id"), col("__sp.media_ref").as("media_ref"))
@@ -448,8 +440,7 @@ object RunPipeline {
     * --clean ground-truth table is supplied THAT side is scrubbed too (see
     * run()) — so vocab, corrected corpus, AND the CER pairs all see
     * placeholders, and the CER score measures correction, not redaction. */
-  private def piiScrubDocs(docs: org.apache.spark.sql.DataFrame,
-                           spansCol: String): org.apache.spark.sql.DataFrame =
+  private def piiScrubDocs(docs: DataFrame, spansCol: String): DataFrame =
     docs.withColumn(spansCol, transform(col(spansCol), sp =>
       struct(
         sp.getField("kind").as("kind"),
@@ -465,8 +456,8 @@ object RunPipeline {
     * filter only acts where the model has something to say. The score join
     * carries (doc_id, score) only; the model tables are sized by distinct
     * grams. */
-  private def lmFilterDocs(docs: org.apache.spark.sql.DataFrame, spansCol: String,
-                           modelDir: String, minLp: Double): org.apache.spark.sql.DataFrame = {
+  private def lmFilterDocs(docs: DataFrame, spansCol: String,
+                           modelDir: String, minLp: Double): DataFrame = {
     import graft.textanalysis.LmScore
     val spark = docs.sparkSession
     val (uni, bi) = LmScore.loadModel(spark, modelDir)
@@ -486,8 +477,8 @@ object RunPipeline {
     * evidence about them (same passthrough policy as the heuristic gate).
     * The model is `<= dim` rows and broadcast; the only doc-keyed traffic
     * is `(doc_id, f, c)` triples — text never shuffles. */
-  private[graft] def qualityModelDocs(docs: org.apache.spark.sql.DataFrame, spansCol: String,
-                                      modelDir: String, minScore: Long): org.apache.spark.sql.DataFrame = {
+  private[graft] def qualityModelDocs(docs: DataFrame, spansCol: String,
+                                      modelDir: String, minScore: Long): DataFrame = {
     import graft.textanalysis.QualityClassifier
     val (model, dim) = QualityClassifier.loadCountDiffModel(docs.sparkSession, modelDir)
     val tagged = tagDocText(docs, spansCol)
@@ -504,8 +495,8 @@ object RunPipeline {
     * passthrough policy), so the output holds k text docs PLUS the media
     * passthrough. Distribution matching, not a gate: the budget is spent
     * to REPRODUCE the target's hashed-n-gram distribution. */
-  private[graft] def dsirDocs(docs: org.apache.spark.sql.DataFrame, spansCol: String,
-                              modelDir: String, k: Int, alpha: Double): org.apache.spark.sql.DataFrame = {
+  private[graft] def dsirDocs(docs: DataFrame, spansCol: String,
+                              modelDir: String, k: Int, alpha: Double): DataFrame = {
     import graft.textanalysis.Dsir
     val (counts, dim) = Dsir.loadModel(docs.sparkSession, modelDir)
     val tagged = tagDocText(docs, spansCol)
@@ -519,8 +510,7 @@ object RunPipeline {
     * sketch. Media-only/empty-text docs pass — their fingerprint is the
     * constant md5("") and the membership question is meaningless for them
     * (the dedup family's passthrough policy). */
-  private[graft] def bloomDedupDocs(docs: org.apache.spark.sql.DataFrame, spansCol: String,
-                                    dir: String): org.apache.spark.sql.DataFrame = {
+  private[graft] def bloomDedupDocs(docs: DataFrame, spansCol: String, dir: String): DataFrame = {
     import graft.dedup.{Bloom, Dedup}
     val spark = docs.sparkSession
     val (mBits, k) = Bloom.loadMeta(spark, dir)
@@ -543,7 +533,7 @@ object RunPipeline {
   /** `--bloom-out`: persist the sketch of this batch's SURVIVING text-doc
     * fingerprints, merged into the input sketch when `--bloom-dedup` was
     * given (geometry inherited), else fresh at `mBits`/`k`. */
-  private def bloomOutSketch(docs: org.apache.spark.sql.DataFrame, spansCol: String,
+  private def bloomOutSketch(docs: DataFrame, spansCol: String,
                              outDir: String, inDir: Option[String],
                              mBits: Int, k: Int): Unit = {
     import graft.dedup.{Bloom, Dedup}
@@ -588,18 +578,17 @@ object RunPipeline {
    * Writes `(stage_no, stage, docs, spans, null_cer, pct_perfect)` to
    * `<output>/_telemetry/stage_null_cer` and returns the same rows as a
    * JSON array for the run artifact. Recomputed every invocation (derived
-   * from the input, not from run state).
+   * from the input, not from run state). `curated` is [[RunFlags.curate]].
    */
-  private def stageNullCer(spark: SparkSession, output: String,
-                           stages: Seq[(String, org.apache.spark.sql.DataFrame)],
-                           docs0: org.apache.spark.sql.DataFrame,
-                           clean: String, input: String, fmt: String,
-                           spansCol: String, cleanSpansCol: String): String = {
+  private def stageNullCer(spark: SparkSession, flags: RunFlags,
+                           curated: Seq[DataFrame]): String = {
     import graft.pipeline.CorrectionPipeline
+    import flags._
     org.apache.spark.sql.graft.DamerauLevenshteinExpr.register(spark)
+    val docs0 = curated.head
     val cleanAll = if (clean == input) docs0
                    else graft.sources.CorpusIO.readDocs(spark, clean, fmt, cleanSpansCol)
-    def textSpans(df: org.apache.spark.sql.DataFrame, sc: String, as: String) =
+    def textSpans(df: DataFrame, sc: String, as: String) =
       CorrectionPipeline.explodeSpans(df, sc)
         .filter(col("kind") === graft.model.Span.KindText)
         .select(col("doc_id"), col("offset"), col("text").as(as))
@@ -616,7 +605,9 @@ object RunPipeline {
       .agg(sum(norm).as("__d"), count(lit(1)).as("__s"),
         sum((col("__tn") === col("__tc")).cast("long")).as("__p"))
       .localCheckpoint()
-    val rows = stages.zipWithIndex.map { case ((name, df), i) =>
+    val telemetered = ("input" -> docs0) +: stages.zip(curated.tail).collect {
+      case (s, df) if s.stage.dropsDocs => s.stage.name -> df }
+    val rows = telemetered.zipWithIndex.map { case ((name, df), i) =>
       val r = df.select(col("doc_id")).join(perDoc, Seq("doc_id"), "left")
         .agg(count(lit(1)).as("docs"),
           coalesce(sum(col("__s")), lit(0L)).as("spans"),
@@ -644,8 +635,8 @@ object RunPipeline {
     * doc against persisted Cavnar-Trenkle profiles and keep predicted
     * members of the allowed set. Media-only docs pass (no text evidence —
     * the quality-filter family's passthrough policy). */
-  private[graft] def langidDocs(docs: org.apache.spark.sql.DataFrame, spansCol: String,
-                                modelDir: String, keep: Set[String]): org.apache.spark.sql.DataFrame = {
+  private[graft] def langidDocs(docs: DataFrame, spansCol: String,
+                                modelDir: String, keep: Set[String]): DataFrame = {
     import graft.textanalysis.LangProfile
     val profiles = LangProfile.load(docs.sparkSession, modelDir)
     val tagged = tagDocText(docs, spansCol)
@@ -678,8 +669,8 @@ object RunPipeline {
    * surface in the pipeline (reference `src/util/data_functions.py:31-60`),
    * not as library calls the operator must script.
    *
-   * Resumable as a UNIT: a `_spec` sidecar under `outDir/_export` records
-   * the export spec plus the source stage token; when it matches, the
+   * Resumable as a UNIT: a `_spec` sidecar under `output/_export` records
+   * the export flags plus the source stage token; when it matches, the
    * whole tail is a no-op (artifacts already on disk are byte-identical —
    * every stage is deterministic), and any change to the spec or the
    * upstream sources rebuilds everything with Overwrite semantics.
@@ -693,16 +684,11 @@ object RunPipeline {
    * @return "written" | "skipped" — the resume telemetry for the metrics
    *         line.
    */
-  private def exportArtifacts(spark: SparkSession, outDir: String, spansCol: String,
-                              shards: Option[(Int, String)], pack: Option[Int],
-                              corrupt: Option[(Double, Int)], bpeDir: Option[String],
-                              bpeTrain: Option[(Int, Int)],
-                              stageToken: String): String = {
+  private def exportArtifacts(spark: SparkSession, flags: RunFlags): String = {
     import graft.pipeline.{Packing, Sampling, SpanCorruption}
-    val exportDir = s"$outDir/_export"
-    val specStr = s"shards=${shards.getOrElse("")}|pack=${pack.getOrElse("")}" +
-      s"|corrupt=${corrupt.getOrElse("")}|bpe=${bpeDir.getOrElse("")}" +
-      s"|bpetrain=${bpeTrain.getOrElse("")}|src=$stageToken"
+    import flags._
+    val exportDir = s"$output/_export"
+    val specStr = (exportSpec :+ s"src=$stageToken").mkString("|")
     val hconf = spark.sparkContext.hadoopConfiguration
     val marker = new org.apache.hadoop.fs.Path(s"$exportDir/_spec")
     val fs = marker.getFileSystem(hconf)
@@ -713,7 +699,7 @@ object RunPipeline {
     }
     // the corrected table: underscore-prefixed siblings (_state, _export)
     // are invisible to the parquet scan (Spark's hidden-path filter)
-    val docs = spark.read.parquet(outDir).drop("bucket")
+    val docs = spark.read.parquet(output).drop("bucket")
     val tagged = tagDocText(docs, spansCol)
     shards.foreach { case (n, seed) =>
       // one assignment computation feeds the docs sink AND the manifest
@@ -744,7 +730,7 @@ object RunPipeline {
         tagged.where(col("__n") > 0), numMerges, textCol = "__txt", maxWords = maxWords)
       graft.textanalysis.Bpe.saveMerges(spark, merges, s"$exportDir/bpe_model")
     }
-    bpeDir.foreach { dir =>
+    bpeEncode.foreach { dir =>
       val merges = graft.textanalysis.Bpe.loadMerges(spark, dir)
       graft.textanalysis.Bpe.encodeDocs(tagged, merges, textCol = "__txt")
         .write.mode("overwrite").parquet(s"$exportDir/tokens")
@@ -768,69 +754,160 @@ object RunPipeline {
     * [[graft.pipeline.Sampling.temperatureMix]] on the named source column.
     * Fails fast when the column is missing — a silent identity would ship
     * an "alpha-mixed" corpus that was never mixed. */
-  private def sourceMixDocs(docs: org.apache.spark.sql.DataFrame, sourceCol: String,
-                            alpha: Double, budget: Double): org.apache.spark.sql.DataFrame = {
+  private def sourceMixDocs(docs: DataFrame, sourceCol: String,
+                            alpha: Double, budget: Double): DataFrame = {
     require(docs.columns.contains(sourceCol),
       s"--source-mix needs column '$sourceCol' on the input table " +
         s"(set --mix-source-col; input has ${docs.columns.mkString(",")})")
     graft.pipeline.Sampling.temperatureMix(docs, sourceCol, "doc_id", alpha, budget)
   }
 
-  /** The submitted job, factored from [[main]] so tests drive it with their
-    * own session. Returns the JSON metrics line. */
-  def run(spark: SparkSession, a: Map[String, String]): String = {
-    def req(k: String): String =
-      a.getOrElse(k, sys.error(s"missing required --$k (see scaladoc)"))
+  /** A curation row's view of the run's flags: `v(i)` reads the row's i-th
+    * flag (0 is the main flag) through the run's recording accessor, so a
+    * modifier the row never asks for stays unread. */
+  private[graft] final class StageFlags(flags: Seq[String], get: String => Option[String]) {
+    def apply(i: Int): Option[String] = get(flags(i))
+    /** The main flag with its i-th flag, both or neither: either alone would
+      * be a silent no-op (a "filtered" corpus that was never filtered). */
+    def together(i: Int): Option[(String, String)] = {
+      val (main, other) = (apply(0), apply(i))
+      require(main.isEmpty == other.isEmpty,
+        s"--${flags(0)} and --${flags(i)} must be provided together")
+      main.zip(other)
+    }
+  }
+
+  /** One row of [[curationTable]]: the stage's name (its `--stage-telemetry`
+    * row), its flags (main flag first, then its modifiers), whether it drops
+    * whole docs, and a parse that is `None` when the stage is inactive, else
+    * the canonical spec the lineage and stage token record plus the
+    * transform the chain applies. */
+  private[graft] final case class CurationStage(
+      name: String, flags: Seq[String], dropsDocs: Boolean,
+      parse: StageFlags => Option[(String, DataFrame => DataFrame)])
+
+  /** A row the run's flags activate, with its canonical spec and transform. */
+  private[graft] final case class ActiveStage(stage: CurationStage, spec: String,
+                                              transform: DataFrame => DataFrame)
+
+  // the rows a run consults by name beyond the folds
+  private val PiiScrub = "pii-scrub"
+  private val BloomDedup = "bloom-dedup"
+  private val DocDedup = "dedup"
+
+  /**
+   * The curation stages in curation order: the one place a stage and its
+   * flags are declared. [[run]]'s chain, its `--stage-telemetry` rows, the
+   * lineage, the stage token and the drop predicates are folds over the
+   * active rows, so no flag that shapes the staged rows can miss the resume
+   * fingerprint. Order: narrow row-pure filters first (sample, the
+   * heuristic gates), langid before the model-join filters (CCNet's order:
+   * wrong-language docs pay no classifier or LM join), DSIR over the
+   * cheap-filter survivors, decontam, the PII scrub once every text drop is
+   * decided, then the shuffle-bearing dedup family keyed on the REDACTED
+   * text (cross-batch Bloom before in-batch dedup; span cuts on doc-dedup
+   * survivors only; media decodes on span-dedup survivors only), and source
+   * mixing last, so its allocations are quoted over the cleaned per-source
+   * counts.
+   */
+  private[graft] def curationTable(spansCol: String, fmt: String): Seq[CurationStage] = {
+    def stage(name: String, dropsDocs: Boolean, modifiers: String*)(
+        parse: StageFlags => Option[(String, DataFrame => DataFrame)]) =
+      CurationStage(name, name +: modifiers, dropsDocs, parse)
+    Seq(
+      stage("sample", dropsDocs = true)(v => v(0).map(_.toDouble).map(f =>
+        (f.toString, graft.pipeline.Sampling.deterministicSample(_, "doc_id", f)))),
+      stage("quality-gate", dropsDocs = true)(v => v(0).map(s => (s, gateDocs(_, spansCol, s)))),
+      stage("gopher", dropsDocs = true)(v => v(0).map(s => (s, gopherDocs(_, spansCol, s)))),
+      CurationStage("langid", Seq("langid-model", "langid-keep"), dropsDocs = true,
+        v => v.together(1).map { case (m, ks) =>
+          val keep = ks.split(",").map(_.trim).filter(_.nonEmpty).toSet
+          require(keep.nonEmpty, "--langid-keep must name at least one language")
+          (s"$m@${keep.toSeq.sorted.mkString("+")}", langidDocs(_, spansCol, m, keep))
+        }),
+      stage("quality-model", dropsDocs = true, "quality-model-min")(v => v(0).map { dir =>
+        val min = v(1).getOrElse("0").toLong
+        (s"$dir>$min", qualityModelDocs(_, spansCol, dir, min))
+      }),
+      CurationStage("lm", Seq("lm-model", "lm-min-logprob"), dropsDocs = true,
+        v => v.together(1).map { case (m, lp) =>
+          (s"$m>=${lp.toDouble}", lmFilterDocs(_, spansCol, m, lp.toDouble))
+        }),
+      CurationStage("dsir", Seq("dsir-model", "dsir-k", "dsir-alpha"), dropsDocs = true,
+        v => v.together(1).map { case (m, ks) =>
+          val (k, alpha) = (ks.toInt, v(2).getOrElse("0.5").toDouble)
+          (s"$m@$k:$alpha", dsirDocs(_, spansCol, m, k, alpha))
+        }),
+      stage("decontam", dropsDocs = true, "decontam-format")(v => v(0).map { s =>
+        val evalFmt = v(1).getOrElse(fmt)
+        (s"$s@$evalFmt", decontamDocs(_, spansCol, s, evalFmt))
+      }),
+      stage(PiiScrub, dropsDocs = false)(v => v(0).filter(_.toBoolean).map(s =>
+        (s, piiScrubDocs(_, spansCol)))),
+      stage(BloomDedup, dropsDocs = true)(v => v(0).map(d => (d, bloomDedupDocs(_, spansCol, d)))),
+      stage(DocDedup, dropsDocs = true)(v => v(0).filter(_ != "none").map(m =>
+        (m, dedupDocs(_, spansCol, m)))),
+      stage("span-dedup", dropsDocs = false)(v => v(0).map(s =>
+        (s, spanDedupDocs(_, spansCol, s)))),
+      stage("media-dedup", dropsDocs = false)(v => v(0).map(s =>
+        (s, mediaDedupDocs(_, spansCol, s)))),
+      stage("source-mix", dropsDocs = true, "mix-source-col")(v => v(0).map { s =>
+        val (alpha, budget) = parseSourceMixSpec(s)
+        val sourceCol = v(1).getOrElse("source")
+        (s"$alpha:$budget@$sourceCol", sourceMixDocs(_, sourceCol, alpha, budget))
+      }))
+  }
+
+  /**
+   * One run's flags, parsed before any Spark work through one accessor that
+   * records each key it is asked for. A key nothing reads (a typo, or a
+   * modifier given without its stage) fails the run instead of shipping an
+   * uncurated corpus; that check runs last, after every both-or-neither
+   * rule. A pure function of the map, built once per [[run]].
+   */
+  private[graft] final class RunFlags(a: Map[String, String]) {
+    private val read = scala.collection.mutable.Set.empty[String]
+    private def get(k: String): Option[String] = { read += k; a.get(k) }
+    private def getOr(k: String, default: => String): String = get(k).getOrElse(default)
+    private def req(k: String): String =
+      get(k).getOrElse(sys.error(s"missing required --$k (see scaladoc)"))
+
     // trailing slashes normalized so path equality (clean == input) and the
     // stage-directory naming don't depend on how the operator typed the path
     val input = req("input").stripSuffix("/")
     val output = req("output").stripSuffix("/")
-    val state = a.getOrElse("state", s"$output/_state")
-    val clean = a.getOrElse("clean", input).stripSuffix("/")
-    val runId = a.getOrElse("run-id", "run1")
-    val spansCol = a.getOrElse("spans-col", "spans")
+    val state = getOr("state", s"$output/_state")
+    val clean = getOr("clean", input).stripSuffix("/")
+    val runId = getOr("run-id", "run1")
+    val spansCol = getOr("spans-col", "spans")
     // when the clean side IS the input (omitted, or explicitly the same
     // path), its spans live in the same (possibly non-default) column
-    val cleanSpansCol = a.getOrElse("clean-spans-col",
-      if (clean == input) spansCol else "spans")
-    val minFreq = a.getOrElse("min-freq", "2").toLong
-    val nBuckets = a.getOrElse("buckets", "64").toInt
-    val groupSize = a.getOrElse("group-size", "8").toInt
-    val correctorName = a.getOrElse("corrector", "noisy")
-    val dedupMode = a.getOrElse("dedup", "none")
-    val sampleFrac = a.get("sample").map(_.toDouble)
-    val gateSpec = a.get("quality-gate")
-    val gopherSpec = a.get("gopher")
-    val decontamSpec = a.get("decontam")
-    val piiScrub = a.get("pii-scrub").exists(_.toBoolean)
-    val mediaDedupSpec = a.get("media-dedup")
-    val spanDedupSpec = a.get("span-dedup")
-    val lmModel = a.get("lm-model")
-    val lmMinLp = a.get("lm-min-logprob").map(_.toDouble)
-    val qualityModel = a.get("quality-model")
-    val qualityModelMin = a.getOrElse("quality-model-min", "0").toLong
-    val sourceMix = a.get("source-mix").map(parseSourceMixSpec)
-    val mixSourceCol = a.getOrElse("mix-source-col", "source")
-    val dsirModel = a.get("dsir-model")
-    val dsirK = a.get("dsir-k").map(_.toInt)
-    val dsirAlpha = a.getOrElse("dsir-alpha", "0.5").toDouble
-    val bloomDedup = a.get("bloom-dedup")
-    val bloomOut = a.get("bloom-out")
-    val bloomBits = a.getOrElse("bloom-bits", "1048576").toInt
-    val bloomK = a.getOrElse("bloom-k", "5").toInt
-    val langidModel = a.get("langid-model")
-    val langidKeep = a.get("langid-keep")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    require(langidModel.isEmpty == langidKeep.isEmpty,
-      "--langid-model and --langid-keep must be provided together")
-    require(langidKeep.forall(_.nonEmpty), "--langid-keep must name at least one language")
-    val shardsSpec = a.get("shards").map(parseShardsSpec)
-    val packSpec = a.get("pack").map(_.toInt)
-    val corruptSpec = a.get("span-corrupt").map(parseCorruptSpec)
-    val bpeEncode = a.get("bpe-encode")
+    val cleanSpansCol = getOr("clean-spans-col", if (clean == input) spansCol else "spans")
+    val fmt = getOr("input-format", "parquet")
+    val correctorName = getOr("corrector", "noisy")
+    val minFreq = getOr("min-freq", "2").toLong
+    val vocab = get("vocab")
+    val nBuckets = getOr("buckets", "64").toInt
+    val groupSize = getOr("group-size", "8").toInt
+    /** The active curation rows, in curation order. */
+    val stages: Seq[ActiveStage] = curationTable(spansCol, fmt).flatMap(s =>
+      s.parse(new StageFlags(s.flags, get)).map { case (spec, f) => ActiveStage(s, spec, f) })
+    /** The curated frame after each active stage, `docs0` first. */
+    def curate(docs0: DataFrame): Seq[DataFrame] =
+      stages.scanLeft(docs0)((df, s) => s.transform(df))
+    def active(name: String): Option[ActiveStage] = stages.find(_.stage.name == name)
+    /** `--bloom-out` (out dir, probed input sketch, bits, k). */
+    val bloomOut = get("bloom-out").map(out => (out, active(BloomDedup).map(_.spec),
+      getOr("bloom-bits", "1048576").toInt, getOr("bloom-k", "5").toInt))
+    val stageTelemetry = get("stage-telemetry").exists(_.toBoolean)
+
+    val shards = get("shards").map(parseShardsSpec)
+    val pack = get("pack").map(_.toInt)
+    val corrupt = get("span-corrupt").map(parseCorruptSpec)
+    val bpeEncode = get("bpe-encode")
     // n[:maxWords] — train a BPE merge table over the corrected corpus
     // (driver-local delta loop over the top-maxWords word counts)
-    val bpeTrain = a.get("bpe-train").map { spec =>
+    val bpeTrain = get("bpe-train").map { spec =>
       spec.split(":", 2) match {
         case Array(n, w) => (n.toInt, w.toInt)
         case Array(n) => (n.toInt, 1 << 20)
@@ -842,104 +919,67 @@ object RunPipeline {
     // packing is per-shard by design (each shard's token stream feeds one
     // dataloader); a shard-less pack would be a corpus-global stream over a
     // string id — undefined order, so fail loudly
-    require(packSpec.isEmpty || shardsSpec.nonEmpty,
+    require(pack.isEmpty || shards.nonEmpty,
       "--pack requires --shards (sequences pack per shard, in shard-pos order)")
-    // both-or-neither: --lm-model alone would otherwise be a SILENT no-op
-    // (an operator shipping an "LM-filtered" corpus that was never filtered)
-    require(lmModel.isEmpty == lmMinLp.isEmpty,
-      "--lm-model and --lm-min-logprob must be provided together")
-    // same rule for DSIR: a model with no budget (or a budget with no
-    // model) has no defined behavior — fail loudly, not silently
-    require(dsirModel.isEmpty == dsirK.isEmpty,
-      "--dsir-model and --dsir-k must be provided together")
+    /** The export tail's active flags: the lineage suffix, the `_spec`
+      * marker and whether the tail runs at all (a pack implies shards). */
+    val exportSpec: Seq[String] = Seq(
+      shards.map { case (n, seed) => s"shards=$n:$seed" },
+      pack.map(p => s"pack=$p"),
+      corrupt.map { case (p, m) => s"span-corrupt=$p:$m" },
+      bpeEncode.map(d => s"bpe-encode=$d"),
+      bpeTrain.map { case (n, w) => s"bpe-train=$n:$w" }).flatten
+
+    // what every staged row derives from: the sources, then each active
+    // stage's canonical spec in curation order
+    private val staged = Seq(s"input=$input", s"clean=$clean", s"spans-col=$spansCol",
+      s"clean-spans-col=$cleanSpansCol", s"input-format=$fmt") ++
+      stages.map(s => s"${s.stage.name}=${s.spec}")
+    /** Fingerprint of the staged rows: a resume with another source or
+      * curation rebuilds its stage instead of reusing the previous rows. */
+    val stageToken = java.security.MessageDigest.getInstance("MD5")
+      .digest(staged.mkString("|").getBytes("UTF-8"))
+      .take(4).map("%02x".format(_)).mkString
+    val lineage = (staged ++ Seq(s"corrector=$correctorName", s"minFreq=$minFreq",
+      s"vocab=${vocab.getOrElse("")}", s"buckets=$nBuckets", s"groupSize=$groupSize") ++
+      exportSpec).mkString(" ")
+
+    private val unread = (a.keySet -- read).toSeq.sorted
+    require(unread.isEmpty, "unknown flag, or a modifier without its stage: " +
+      unread.map("--" + _).mkString(" "))
+  }
+
+  /** The submitted job, factored from [[main]] so tests drive it with their
+    * own session. Returns the JSON metrics line. */
+  def run(spark: SparkSession, a: Map[String, String]): String = {
+    val flags = new RunFlags(a)
+    import flags._
 
     val t0 = System.nanoTime()
-    val fmt = a.getOrElse("input-format", "parquet")
     val docs0 = graft.sources.CorpusIO.readDocs(spark, input, fmt, spansCol)
-    // curation order: narrow row-pure filters first (sample, then the
-    // quality gate), the model-join filters (quality classifier, LM) and
-    // decontam next, the PII scrub after all text drops are decided (scrub
-    // only survivors), the shuffle-bearing dedup family after that — keying
-    // on the redacted text by design — and source mixing last (allocations
-    // over the cleaned counts)
-    val sampled = sampleFrac.fold(docs0)(f =>
-      graft.pipeline.Sampling.deterministicSample(docs0, "doc_id", f))
-    val gated = gateSpec.fold(sampled)(s => gateDocs(sampled, spansCol, s))
-    val gophered = gopherSpec.fold(gated)(s => gopherDocs(gated, spansCol, s))
-    // language gate right after the heuristic gates (CCNet's order: langid
-    // before the model-based filters — wrong-language docs should not pay
-    // classifier/LM joins)
-    val langGated = (for { m <- langidModel; ks <- langidKeep }
-      yield langidDocs(gophered, spansCol, m, ks)).getOrElse(gophered)
-    val modelGated = qualityModel.fold(langGated)(
-      dir => qualityModelDocs(langGated, spansCol, dir, qualityModelMin))
-    val lmFiltered = (for { m <- lmModel; lp <- lmMinLp }
-      yield lmFilterDocs(modelGated, spansCol, m, lp)).getOrElse(modelGated)
-    // DSIR after the gates (resample the budget over docs that survived the
-    // cheap filters), before the shuffle-bearing stages (every doc the
-    // resample drops costs no decontam/dedup work)
-    val dsired = (for { m <- dsirModel; k <- dsirK }
-      yield dsirDocs(lmFiltered, spansCol, m, k, dsirAlpha)).getOrElse(lmFiltered)
-    val decontamed = decontamSpec.fold(dsired)(
-      spec => decontamDocs(dsired, spansCol, spec,
-        a.getOrElse("decontam-format", fmt)))
-    val scrubbed = if (piiScrub) piiScrubDocs(decontamed, spansCol) else decontamed
-    // cross-batch Bloom dedup BEFORE in-batch dedup: drops docs already
-    // shipped by earlier batches; in-batch duplicates still need the
-    // regular dedup family below
-    val bloomed = bloomDedup.fold(scrubbed)(d => bloomDedupDocs(scrubbed, spansCol, d))
-    val textDeduped = if (dedupMode == "none") bloomed
-                      else dedupDocs(bloomed, spansCol, dedupMode)
-    // span dedup after doc dedup: whole-doc drops first, then boilerplate
-    // spans are cut from the SURVIVORS only
-    val spanDeduped = spanDedupSpec.fold(textDeduped)(
-      s => spanDedupDocs(textDeduped, spansCol, s))
-    // media dedup after all text-side drops: it rewrites refs on the
-    // surviving docs only, so every doc the text-side curation dropped
-    // costs no media decode
-    val mediaDeduped = mediaDedupSpec.fold(spanDeduped)(
-      s => mediaDedupDocs(spanDeduped, spansCol, s))
-    // source mixing LAST: the recipe's alpha-share is quoted over the
-    // CLEANED corpus (mixing before dedup would let duplicate mass inflate
-    // a source's allocation), and the mix itself is a broadcast-allocation
-    // scan-side filter — cheap wherever it runs
-    val docs = sourceMix.fold(mediaDeduped) { case (alpha, budget) =>
-      sourceMixDocs(mediaDeduped, mixSourceCol, alpha, budget) }
+    // each prefix of the chain is that stage's surviving population
+    val curated = curate(docs0)
+    val docs = curated.last
     // accumulate the cross-batch sketch over the SURVIVING docs (merged
     // into the input sketch when one was probed) — written every
     // invocation so a resumed run still ships the artifact
-    bloomOut.foreach(out =>
-      bloomOutSketch(docs, spansCol, out, bloomDedup, bloomBits, bloomK))
+    bloomOut.foreach { case (out, in, bits, k) =>
+      bloomOutSketch(docs, spansCol, out, in, bits, k) }
     // per-stage quality telemetry (opt-in): null-CER of each ACTIVE
     // doc-drop stage's surviving population — which gate moved quality
-    val stageCer: Option[String] =
-      if (!a.get("stage-telemetry").exists(_.toBoolean)) None
-      else Some(stageNullCer(spark, output, Seq(
-          "input" -> Some(docs0),
-          "sample" -> sampleFrac.map(_ => sampled),
-          "quality-gate" -> gateSpec.map(_ => gated),
-          "gopher" -> gopherSpec.map(_ => gophered),
-          "langid" -> langidModel.map(_ => langGated),
-          "quality-model" -> qualityModel.map(_ => modelGated),
-          "lm" -> (for { _ <- lmModel; _ <- lmMinLp } yield lmFiltered),
-          "dsir" -> (for { _ <- dsirModel; _ <- dsirK } yield dsired),
-          "decontam" -> decontamSpec.map(_ => decontamed),
-          "bloom-dedup" -> bloomDedup.map(_ => bloomed),
-          "dedup" -> (if (dedupMode == "none") None else Some(textDeduped)),
-          "source-mix" -> sourceMix.map(_ => docs)
-        ).collect { case (n, Some(df)) => (n, df) },
-        docs0, clean, input, fmt, spansCol, cleanSpansCol))
+    val stageCer = if (stageTelemetry) Some(stageNullCer(spark, flags, curated)) else None
     val cleanDocs0 = if (clean == input) docs
                      else graft.sources.CorpusIO.readDocs(spark, clean, fmt, cleanSpansCol)
     // the truth table must see the same redaction as the input, or every
     // placeholder scores as character errors and the vocab learns raw PII
-    val cleanDocs = if (piiScrub && clean != input) piiScrubDocs(cleanDocs0, cleanSpansCol)
+    val cleanDocs = if (active(PiiScrub).nonEmpty && clean != input)
+                      piiScrubDocs(cleanDocs0, cleanSpansCol)
                     else cleanDocs0
 
     val corrector = correctorName match {
       case "null" => NullCorrector
       case "dictionary" | "noisy" =>
-        val vocabDf = a.get("vocab")
+        val vocabDf = vocab
           .map(spark.read.parquet(_))
           .getOrElse(DictionaryCorrector.trainVocab(cleanDocs, cleanSpansCol, splitFilter = None))
         if (correctorName == "dictionary")
@@ -950,44 +990,6 @@ object RunPipeline {
       case other => sys.error(s"unknown --corrector $other (noisy|dictionary|null)")
     }
 
-    val lineage = s"input=$input clean=$clean corrector=$correctorName minFreq=$minFreq " +
-      s"buckets=$nBuckets groupSize=$groupSize dedup=$dedupMode" +
-      sampleFrac.map(f => s" sample=$f").getOrElse("") +
-      gateSpec.map(g => s" gate=$g").getOrElse("") +
-      gopherSpec.map(g => s" gopher=$g").getOrElse("") +
-      (for { m <- langidModel; ks <- langidKeep }
-        yield s" langid=$m@${ks.toSeq.sorted.mkString("+")}").getOrElse("") +
-      decontamSpec.map(d => s" decontam=$d").getOrElse("") +
-      (if (piiScrub) " pii-scrub" else "") +
-      spanDedupSpec.map(s => s" span-dedup=$s").getOrElse("") +
-      mediaDedupSpec.map(s => s" media-dedup=$s").getOrElse("") +
-      (for { m <- lmModel; lp <- lmMinLp } yield s" lm=$m>=$lp").getOrElse("") +
-      qualityModel.map(m => s" quality-model=$m>$qualityModelMin").getOrElse("") +
-      (for { m <- dsirModel; k <- dsirK } yield s" dsir=$m@$k:$dsirAlpha").getOrElse("") +
-      bloomDedup.map(d => s" bloom-dedup=$d").getOrElse("") +
-      sourceMix.map { case (al, b) => s" source-mix=$al:$b@$mixSourceCol" }.getOrElse("") +
-      shardsSpec.map { case (n, seed) => s" shards=$n:$seed" }.getOrElse("") +
-      packSpec.map(s => s" pack=$s").getOrElse("") +
-      corruptSpec.map { case (p, m) => s" span-corrupt=$p:$m" }.getOrElse("") +
-      bpeEncode.map(d => s" bpe-encode=$d").getOrElse("") +
-      bpeTrain.map { case (n, w) => s" bpe-train=$n:$w" }.getOrElse("")
-    // stage token fingerprints the SOURCES: a resume of this output dir with
-    // a different input/clean table (or spans columns, or dedup setting)
-    // must rebuild its stages instead of silently reusing the previous
-    // source's rows
-    val stageToken = java.security.MessageDigest.getInstance("MD5")
-      .digest((s"$input|$clean|$spansCol|$cleanSpansCol|$dedupMode" +
-        s"|${sampleFrac.getOrElse("")}|${gateSpec.getOrElse("")}" +
-        s"|${gopherSpec.getOrElse("")}" +
-        s"|${langidModel.getOrElse("")}|${langidKeep.map(_.toSeq.sorted.mkString("+")).getOrElse("")}" +
-        s"|${lmModel.getOrElse("")}|${lmMinLp.getOrElse("")}" +
-        s"|${decontamSpec.getOrElse("")}|$fmt|$piiScrub" +
-        s"|${mediaDedupSpec.getOrElse("")}|${spanDedupSpec.getOrElse("")}" +
-        s"|${qualityModel.getOrElse("")}|$qualityModelMin" +
-        s"|${dsirModel.getOrElse("")}|${dsirK.getOrElse("")}|$dsirAlpha" +
-        s"|${bloomDedup.getOrElse("")}" +
-        s"|${sourceMix.getOrElse("")}|$mixSourceCol").getBytes("UTF-8"))
-      .take(4).map("%02x".format(_)).mkString
     // docs_in is observed on the staging write inside the timed run (or
     // counted off a committed stage a resume reuses); a post-run
     // docs.count() would re-execute the whole upstream plan a second time
@@ -1007,22 +1009,15 @@ object RunPipeline {
     // pre-curation count: a footer-metadata parquet count of the raw input
     // (no curation plan attached); skipped entirely on a no-op resume, and
     // equal to docs_in by definition when no curation step is active
-    val curationOff = dedupMode == "none" && sampleFrac.isEmpty && gateSpec.isEmpty &&
-      gopherSpec.isEmpty && langidModel.isEmpty &&
-      decontamSpec.isEmpty && (lmModel.isEmpty || lmMinLp.isEmpty) &&
-      qualityModel.isEmpty && (dsirModel.isEmpty || dsirK.isEmpty) &&
-      bloomDedup.isEmpty && sourceMix.isEmpty
     val docsInPre: Option[Long] =
       if (docsIn.isEmpty) None
-      else if (curationOff) docsIn
+      else if (!stages.exists(_.stage.dropsDocs)) docsIn
       else Some(docs0.count())
     // training-export tail: strictly after every bucket is committed (it
     // reads the corrected output table), inside the timed run
     val exportStatus: Option[String] =
-      if (shardsSpec.isEmpty && corruptSpec.isEmpty && bpeEncode.isEmpty &&
-          bpeTrain.isEmpty) None
-      else Some(exportArtifacts(spark, output, spansCol,
-        shardsSpec, packSpec, corruptSpec, bpeEncode, bpeTrain, stageToken))
+      if (exportSpec.isEmpty) None
+      else Some(exportArtifacts(spark, flags))
     val total = summary.total
     val sec = (System.nanoTime() - t0) / 1e9
 
@@ -1031,17 +1026,12 @@ object RunPipeline {
     def num(fmt: String, v: Double) = Portable.jsonNum(fmt, v)
     def jsonStr(x: String) = Portable.jsonStr(x)
     def optLong(o: Option[Long]) = o.map(_.toString).getOrElse("null")
-    // docs_removed = the full curation delta (sample + gate + dedup);
-    // dedup_removed keeps its original single-step meaning and is null when
-    // sample/gate are also active (the delta is then not attributable)
+    // docs_removed = the full curation delta; dedup_removed keeps its
+    // original single-step meaning and is null when another doc-drop stage
+    // is also active (the delta is then not attributable)
     val docsRemoved = for (pre <- docsInPre; post <- docsIn) yield pre - post
     val dedupRemoved =
-      if (sampleFrac.isEmpty && gateSpec.isEmpty && gopherSpec.isEmpty &&
-          langidModel.isEmpty &&
-          decontamSpec.isEmpty && (lmModel.isEmpty || lmMinLp.isEmpty) &&
-          qualityModel.isEmpty && (dsirModel.isEmpty || dsirK.isEmpty) &&
-          bloomDedup.isEmpty && sourceMix.isEmpty)
-        docsRemoved
+      if (stages.forall(s => !s.stage.dropsDocs || s.stage.name == DocDedup)) docsRemoved
       else None
     s"""{"run_id":${jsonStr(runId)},"docs_in":${optLong(docsIn)},""" +
       s""""docs_in_pre":${optLong(docsInPre)},"docs_removed":${optLong(docsRemoved)},""" +
