@@ -584,7 +584,7 @@ object RunPipeline {
                            curated: Seq[DataFrame]): String = {
     import graft.pipeline.CorrectionPipeline
     import flags._
-    org.apache.spark.sql.graft.DamerauLevenshteinExpr.register(spark)
+    org.apache.spark.sql.graft.NativeFunctions.register(spark)
     val docs0 = curated.head
     val cleanAll = if (clean == input) docs0
                    else graft.sources.CorpusIO.readDocs(spark, clean, fmt, cleanSpansCol)

@@ -68,7 +68,7 @@ object SparkEntry {
     * span — see DamerauLevenshteinExpr): true DL, matching the DuckDB oracle's
     * damerau_levenshtein. Registration is idempotent per session. */
   private def dlTrue(s: SparkSession)(a: Column, b: Column): Column = {
-    org.apache.spark.sql.graft.DamerauLevenshteinExpr.register(s)
+    org.apache.spark.sql.graft.NativeFunctions.register(s)
     call_function("dl_distance_true", a, b)
   }
 

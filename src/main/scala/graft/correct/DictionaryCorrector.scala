@@ -116,7 +116,7 @@ object DictionaryCorrector {
       .select(col("token").as("cand"), col("freq"))
     // native codegen'd kernel, not a Scala UDF: the distance runs inside the
     // broadcast theta-join's WholeStageCodegen span with no serde per pair
-    org.apache.spark.sql.graft.DamerauLevenshteinExpr.register(tokens.sparkSession)
+    org.apache.spark.sql.graft.NativeFunctions.register(tokens.sparkSession)
     val dl = (a: Column, b: Column) => call_function("dl_distance", a, b)
     val distinctTokens = tokens.select(col("token")).distinct()
     val inVocab = distinctTokens.join(vocab, col("token") === col("cand"), "left_semi")

@@ -138,7 +138,7 @@ object Dedup {
 
   /**
    * MinHash signatures, one row per doc with columns `h0..h{n-1}`: the
-   * native codegen'd [[org.apache.spark.sql.graft.MinHashSig]] kernel runs
+   * native codegen'd [[org.apache.spark.sql.graft.MinHashKernel]] kernel runs
    * the whole normalize → shingle → md5 → affine-minima pipeline per row, so
    * signature computation is NARROW — a scan-side map with no exchange at
    * all (the exploded form below pays an O(shingles) row blowup through a
@@ -163,7 +163,7 @@ object Dedup {
    */
   def minHashSignatures(docs: DataFrame, shingleK: Int, nHashes: Int,
                         idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    org.apache.spark.sql.graft.MinHashSigExpr.register(docs.sparkSession)
+    org.apache.spark.sql.graft.NativeFunctions.register(docs.sparkSession)
     // (a Fanout.fanout before the kernel was MEASURED SLOWER at sf0.1 —
     // q_lsh_pairs 0.38 → 0.69 s, q_dedup_cc 0.80 → 1.15 s, q_star_pairs
     // 0.38 → 0.66 s warm: the signature chain re-executes per consumer and
@@ -258,7 +258,7 @@ object Dedup {
     * never the k-word text). */
   def overlapVerify(docs: DataFrame, pairs: DataFrame, shingleK: Int = 3,
                     idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    org.apache.spark.sql.graft.ShingleHashExpr.register(docs.sparkSession)
+    org.apache.spark.sql.graft.NativeFunctions.register(docs.sparkSession)
     // Round-7 shape: per-doc SORTED distinct-shingle hash ARRAYS (one
     // narrow `shingle_hashes` kernel call per candidate doc) joined to the
     // pair table, intersection counted per pair by the codegen'd
@@ -300,7 +300,7 @@ object Dedup {
     * row per candidate-doc shingle, intersection = equi-join row count. */
   private[graft] def overlapVerifyExploded(docs: DataFrame, pairs: DataFrame, shingleK: Int = 3,
                                            idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    org.apache.spark.sql.graft.ShingleHashExpr.register(docs.sparkSession)
+    org.apache.spark.sql.graft.NativeFunctions.register(docs.sparkSession)
     val ids = pairs.select(col("id_a").as("id")).union(pairs.select(col("id_b").as("id"))).distinct()
     val sh = docs.join(ids, col(idCol) === col("id"), "left_semi")
       .select(col(idCol).as("id"),
@@ -424,7 +424,7 @@ object Dedup {
     // shingles carry no containment evidence (null text → null signature —
     // the dedup family's passthrough policy; `__n` is ≥ 1 otherwise, the
     // filter is kept as the explicit policy statement).
-    org.apache.spark.sql.graft.ShingleHashExpr.register(spark)
+    org.apache.spark.sql.graft.NativeFunctions.register(spark)
     val es = call_function("ensemble_minhash", col(textCol), lit(shingleK), lit(nHashes))
     // one row per doc (nHashes longs + size): materialize once — the
     // partition collect and BOTH key sides read it. NOTE: a Fanout.fanout
@@ -562,14 +562,14 @@ object Dedup {
   /**
    * N-gram Jaccard similarity between explicit doc pairs (e.g. consecutive
    * ids): |A∩B| / |A∪B| over distinct word shingles via the native
-   * [[org.apache.spark.sql.graft.NgramJaccard]] kernel — one codegen'd call
+   * [[org.apache.spark.sql.graft.NgramJaccardKernel]] kernel — one codegen'd call
    * per pair, no explode, no extra shuffle beyond the pair join itself.
    * Value-identical to [[ngramJaccardPairsColumns]] (equivalence-tested) and
    * the DuckDB oracle.
    */
   def ngramJaccardPairs(pairs: DataFrame, aText: String, bText: String,
                         shingleK: Int, outCol: String = "jaccard"): DataFrame = {
-    org.apache.spark.sql.graft.NgramJaccardExpr.register(pairs.sparkSession)
+    org.apache.spark.sql.graft.NativeFunctions.register(pairs.sparkSession)
     pairs.withColumn(outCol,
       call_function("ngram_jaccard", col(aText), col(bText), lit(shingleK)))
   }
@@ -623,7 +623,7 @@ object Dedup {
 
   /**
    * Per-doc 32-bit SimHash via the native codegen'd
-   * [[org.apache.spark.sql.graft.SimHashSig]] kernel — the scale/bench
+   * [[org.apache.spark.sql.graft.SimHashKernel]] kernel — the scale/bench
    * path: one kernel call per row, NARROW (no explode, no aggregate, no
    * exchange), so the banded near-dup pipeline's only wide op is the
    * band-key self-join. Identical output to [[simHash32]] (interpreted HOF
@@ -632,7 +632,7 @@ object Dedup {
    */
   def simHash32Relational(docs: DataFrame, idCol: String = "doc_id",
                           textCol: String = "text"): DataFrame = {
-    org.apache.spark.sql.graft.SimHashSigExpr.register(docs.sparkSession)
+    org.apache.spark.sql.graft.NativeFunctions.register(docs.sparkSession)
     docs
       .where(col(textCol).isNotNull) // exploded form dropped null-text docs too
       .select(col(idCol), call_function("simhash_sig", col(textCol)).as("simhash"))

@@ -39,8 +39,7 @@ object LineDedup {
     * LineDedupSpec); the coalesce restores the witness's empty array for
     * null text. */
   private def segmentsCol(textCol: Column, width: Int): Column = {
-    org.apache.spark.sql.graft.NgramExpr.register(
-      org.apache.spark.sql.SparkSession.active)
+    org.apache.spark.sql.graft.NativeFunctions.register(org.apache.spark.sql.SparkSession.active)
     coalesce(call_function("token_segments", textCol, lit(width)),
       array().cast("array<string>"))
   }

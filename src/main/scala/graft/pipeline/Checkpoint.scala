@@ -94,7 +94,7 @@ object CheckpointedRun {
     * and empty-`clean` guard) built on the codegen'd `dl_distance`
     * expression instead of a ScalaUDF, so per-bucket metrics stay inside the
     * whole-stage-codegen span with no per-row serde. Requires
-    * [[org.apache.spark.sql.graft.DamerauLevenshteinExpr.register]]
+    * [[org.apache.spark.sql.graft.NativeFunctions.register]]
     * (idempotent). `length()` counts code points (UTF8String.numChars),
     * matching the kernel's codePointCount. [[run]] scores with the
     * row-level twin [[normalizedDist]]. */

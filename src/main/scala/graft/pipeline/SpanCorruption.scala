@@ -55,7 +55,7 @@ object SpanCorruption {
     // for a per-row function. Value-identical: the fuzz spec asserts
     // kernel ≡ relational and the splice-back invariant; `q_span_corrupt`
     // pins the bytes against the DuckDB oracle.
-    org.apache.spark.sql.graft.SpanCorruptExpr.register(docs.sparkSession)
+    org.apache.spark.sql.graft.NativeFunctions.register(docs.sparkSession)
     val sc = call_function("span_corrupt",
       col(idCol).cast("string"), col(textCol),
       lit(math.round(pStart * 65536.0).toInt), lit(maxLen))

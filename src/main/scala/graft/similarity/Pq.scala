@@ -161,7 +161,7 @@ object Pq {
                idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     val d = vecDim(emb, vecCol)
     require(d % m == 0, s"vector dim $d must divide into m=$m subspaces")
-    org.apache.spark.sql.graft.PqAdcExpr.register(emb.sparkSession)
+    org.apache.spark.sql.graft.NativeFunctions.register(emb.sparkSession)
     val cb = collectCodebooks(codebooks, m, ksub)
     val cbFlat = typedLit(cb.flatten.flatten.toSeq)
     val mNulls = typedLit(Seq.fill[Option[Byte]](m)(None))
@@ -230,7 +230,7 @@ object Pq {
     * rule, rounding unchanged outside the kernel). */
   private def adcScoreRank(joined: DataFrame, n2Flat: Column,
                            k: Int, ksub: Int, roundTo: Int): DataFrame = {
-    org.apache.spark.sql.graft.PqAdcExpr.register(joined.sparkSession)
+    org.apache.spark.sql.graft.NativeFunctions.register(joined.sparkSession)
     val scored = joined
       .select(col("query_id"), col("neighbor_id"),
         Portable.roundAt(

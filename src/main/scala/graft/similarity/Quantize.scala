@@ -71,10 +71,10 @@ object Quantize {
   }
 
   /** [[sq8CosineHof]] as the codegen'd native kernel
-    * ([[org.apache.spark.sql.graft.Sq8Cosine]]): one static call per pair,
+    * ([[org.apache.spark.sql.graft.Sq8Kernel]]): one static call per pair,
     * LONG accumulation, identical zero-norm/null semantics. */
   def sq8CosineNative(s: org.apache.spark.sql.SparkSession, a: Column, b: Column): Column = {
-    org.apache.spark.sql.graft.Sq8CosineExpr.register(s)
+    org.apache.spark.sql.graft.NativeFunctions.register(s)
     call_function("sq8_cosine", a, b)
   }
 

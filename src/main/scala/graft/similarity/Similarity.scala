@@ -46,12 +46,12 @@ object Similarity {
   }
 
   /** [[cosine]] as the native codegen'd kernel
-    * ([[org.apache.spark.sql.graft.CosineSim]]): one static call per pair
+    * ([[org.apache.spark.sql.graft.CosineKernel]]): one static call per pair
     * with the same left-to-right fold order, zero-norm and null semantics.
     * Every similarity operator below uses this — the cosine IS the inner
     * loop of brute-force ANN and of candidate re-ranking. */
   def cosineNative(s: org.apache.spark.sql.SparkSession, a: Column, b: Column): Column = {
-    org.apache.spark.sql.graft.CosineSimExpr.register(s)
+    org.apache.spark.sql.graft.NativeFunctions.register(s)
     call_function("cosine_sim", a, b)
   }
 
@@ -122,12 +122,12 @@ object Similarity {
   }
 
   /** [[lshBandKeys]] as the native codegen'd kernel
-    * ([[org.apache.spark.sql.graft.LshBandKeys]]): one static call per row
+    * ([[org.apache.spark.sql.graft.LshBandKernel]]): one static call per row
     * instead of nPlanes interpreted `aggregate(zip_with(...))` folds — the
     * scan-side cost of every LSH path. */
   def lshBandKeysNative(s: org.apache.spark.sql.SparkSession, vec: Column,
                         nBands: Int, bitsPerBand: Int, dim: Int): Column = {
-    org.apache.spark.sql.graft.LshBandKeysExpr.register(s)
+    org.apache.spark.sql.graft.NativeFunctions.register(s)
     call_function("lsh_band_keys", vec, lit(nBands), lit(bitsPerBand), lit(dim))
   }
 

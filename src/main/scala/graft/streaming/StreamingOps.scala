@@ -198,7 +198,7 @@ object StreamingOps {
     require(maxHamming >= 0 && maxHamming < 32, s"maxHamming out of range: $maxHamming")
     val spark = docs.sparkSession
     import spark.implicits._
-    org.apache.spark.sql.graft.SimHashSigExpr.register(spark)
+    org.apache.spark.sql.graft.NativeFunctions.register(spark)
     val nBands = maxHamming + 1
     val bandKeys = (0 until nBands).map { b =>
       val lo = b * 32 / nBands
@@ -443,7 +443,7 @@ object StreamingOps {
     require(taken.isEmpty,
       s"qualityGate output column(s) ${taken.mkString(", ")} already exist on " +
         "the input — rename them before gating (they would be overwritten then dropped)")
-    org.apache.spark.sql.graft.RepetitionSignalsExpr.register(docs.sparkSession)
+    org.apache.spark.sql.graft.NativeFunctions.register(docs.sparkSession)
     val t = coalesce(col(textCol), lit(""))
     docs
       .withColumn("__q", TextAnalysis.qualitySignals(docs.sparkSession, t))

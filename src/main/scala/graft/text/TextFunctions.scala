@@ -99,12 +99,12 @@ object TextFunctions {
     * the functions (idempotent); prefer these on hot paths, the pure-Column
     * forms where no session is at hand. */
   def encodeNative(s: SparkSession, c: Column, alphabet: String): Column = {
-    org.apache.spark.sql.graft.AlphabetCodecExpr.register(s)
+    org.apache.spark.sql.graft.NativeFunctions.register(s)
     call_function("alphabet_encode", c, lit(alphabet))
   }
 
   def decodeNative(s: SparkSession, c: Column, alphabet: String): Column = {
-    org.apache.spark.sql.graft.AlphabetCodecExpr.register(s)
+    org.apache.spark.sql.graft.NativeFunctions.register(s)
     call_function("alphabet_decode", c, lit(alphabet))
   }
 

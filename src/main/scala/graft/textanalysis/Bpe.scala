@@ -373,7 +373,7 @@ object Bpe {
     * distinct-word table (measured in tools/BpeEncodeProbe; bit-equal
     * fuzz-asserted in BpeSpec at 1/16/1k merges). */
   def encodeWords(words: DataFrame, merges: Seq[(String, String)]): DataFrame = {
-    org.apache.spark.sql.graft.BpeEncodeExpr.register(words.sparkSession)
+    org.apache.spark.sql.graft.NativeFunctions.register(words.sparkSession)
     words.select(col("word"),
       call_function("bpe_encode", col("word"),
         typedLit(merges.map(_._1)), typedLit(merges.map(_._2))).as("tokens"))

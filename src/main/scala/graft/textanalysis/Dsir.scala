@@ -69,7 +69,7 @@ object Dsir {
     // aggregated (f, c) rows directly — no corpus-wide (id, f) Exchange
     // (same row set; equivalence spec in DsirSpec, witness form at
     // [[featureTableColumns]])
-    org.apache.spark.sql.graft.TokenCountExpr.register(docs.sparkSession)
+    org.apache.spark.sql.graft.NativeFunctions.register(docs.sparkSession)
     docs.select(col(idCol), explode(call_function("hashed_gram_counts",
         col(textCol), lit(dim), lit(2))).as("__fc"))
       .select(col(idCol), col("__fc.f").as("f"), col("__fc.c").as("c"))

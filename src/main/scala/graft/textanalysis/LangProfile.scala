@@ -67,7 +67,7 @@ object LangProfile {
   def train(docs: DataFrame, k: Int = 300,
             textCol: String = "text", langCol: String = "lang"): DataFrame = {
     require(k >= 1, s"profile size k must be >= 1, got $k")
-    org.apache.spark.sql.graft.TextGramExpr.register(docs.sparkSession)
+    org.apache.spark.sql.graft.NativeFunctions.register(docs.sparkSession)
     // NOTE: a Fanout.fanout of the (lang, text) rows before this explode
     // was MEASURED SLOWER at sf0.1 (q_lang_profile 1.23 → 1.60 s warm):
     // the (lang, gram) key space is small, so the single-partition map-side
@@ -99,7 +99,7 @@ object LangProfile {
                penalty: Long = 0L,
                idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
     require(docK >= 1, s"doc profile size must be >= 1, got $docK")
-    org.apache.spark.sql.graft.TokenCountExpr.register(docs.sparkSession)
+    org.apache.spark.sql.graft.NativeFunctions.register(docs.sparkSession)
     val pen =
       if (penalty > 0L) penalty
       else profiles.agg(max(col("rank"))).head().getLong(0)
@@ -126,7 +126,7 @@ object LangProfile {
   private[graft] def docProfilesWindowed(docs: DataFrame, docK: Int,
                                          idCol: String = "doc_id",
                                          textCol: String = "text"): DataFrame = {
-    org.apache.spark.sql.graft.TextGramExpr.register(docs.sparkSession)
+    org.apache.spark.sql.graft.NativeFunctions.register(docs.sparkSession)
     docProfiles(
       docs.select(col(idCol), explode(grams(col(textCol))).as("gram"))
         .groupBy(col(idCol), col("gram")).agg(count(lit(1)).as("__n")),

@@ -52,7 +52,7 @@ object LmScore {
     // derive all three consumers narrowly from the arrays. The derivations
     // are definitionally ngramArray(text, 1) and ngramArray(text, 2) over
     // the same token array (equality spec-asserted vs the naive reference).
-    org.apache.spark.sql.graft.NgramExpr.register(docs.sparkSession)
+    org.apache.spark.sql.graft.NativeFunctions.register(docs.sparkSession)
     // (a Fanout.fanout before the tokenize was MEASURED SLOWER at sf0.1,
     // q_lm_score 0.90 → 1.06 s warm — the split/filter is too cheap to
     // amortize an exchange; see the Fanout scaladoc for the trade)

@@ -60,7 +60,7 @@ object QualityClassifier {
     // emits the aggregated (f, c) rows directly — the hashed_grams explode +
     // corpus-wide (id, f) Exchange + hash aggregation become one scan-side
     // call (same row set; witness [[featureTableColumns]])
-    org.apache.spark.sql.graft.TokenCountExpr.register(docs.sparkSession)
+    org.apache.spark.sql.graft.NativeFunctions.register(docs.sparkSession)
     graft.pipeline.Fanout.fanout(
         docs.select(col(idCol), col(textCol)), col(idCol))
       .select(col(idCol), explode(call_function("hashed_gram_counts",

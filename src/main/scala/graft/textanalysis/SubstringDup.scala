@@ -71,7 +71,7 @@ object SubstringDup {
                      idCol: String = "doc_id",
                      textCol: String = "text"): DataFrame = {
     require(k >= 1, s"k-gram size must be >= 1, got $k")
-    org.apache.spark.sql.graft.WinnowExpr.register(docs.sparkSession)
+    org.apache.spark.sql.graft.NativeFunctions.register(docs.sparkSession)
     // conditional fan-out before the rolling-hash explode (round 7): the kg
     // subtree re-executes once per consumer (hot-set agg + both self-join
     // sides), each time on the raw scan's partitioning — at probe scale one

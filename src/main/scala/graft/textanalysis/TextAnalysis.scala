@@ -101,13 +101,13 @@ object TextAnalysis {
   /**
    * Native one-pass quality kernel: array of `[alpha_ratio, punct_ratio,
    * stopword_ratio, mean_token_len, quality, n_tokens]` — see
-   * [[org.apache.spark.sql.graft.QualitySignals]]. Scan-side NARROW, one
+   * [[org.apache.spark.sql.graft.QualityKernel]]. Scan-side NARROW, one
    * codegen'd call instead of three interpreted HOF lambdas per row;
    * value-identical to the Column component family above (equivalence-tested
    * in TextAnalysisSpec). Null-in/null-out. Registration is idempotent.
    */
   def qualitySignals(spark: org.apache.spark.sql.SparkSession, text: Column): Column = {
-    org.apache.spark.sql.graft.QualitySignalsExpr.register(spark)
+    org.apache.spark.sql.graft.NativeFunctions.register(spark)
     call_function("quality_signals", text)
   }
 
@@ -136,12 +136,12 @@ object TextAnalysis {
   /**
    * Native one-pass repetition-signal kernel: array of
    * `[dup_token_ratio, top_bigram_char_frac, dup_bigram_frac]` — see
-   * `org.apache.spark.sql.graft.RepetitionSignals`. Scan-side NARROW;
+   * `org.apache.spark.sql.graft.RepetitionKernel`. Scan-side NARROW;
    * value-identical to [[repetitionSignalsRelational]]. Registration is
    * idempotent per session.
    */
   def repetitionSignals(spark: org.apache.spark.sql.SparkSession, text: Column): Column = {
-    org.apache.spark.sql.graft.RepetitionSignalsExpr.register(spark)
+    org.apache.spark.sql.graft.NativeFunctions.register(spark)
     call_function("repetition_signals", text)
   }
 
@@ -180,8 +180,7 @@ object TextAnalysis {
     * query build with one). */
   def ngramArray(textCol: Column, n: Int): Column = {
     require(n >= 1, s"n-gram order must be >= 1, got $n")
-    org.apache.spark.sql.graft.NgramExpr.register(
-      org.apache.spark.sql.SparkSession.active)
+    org.apache.spark.sql.graft.NativeFunctions.register(org.apache.spark.sql.SparkSession.active)
     call_function("token_ngrams", textCol, lit(n))
   }
 
@@ -252,12 +251,12 @@ object TextAnalysis {
   // ---- Gopher quality rules (Rae et al. '21, Appendix A) ----
 
   /** The eight Gopher rule signals as the native one-pass kernel
-    * ([[org.apache.spark.sql.graft.GopherSignals]]): `array<double>` of
+    * ([[org.apache.spark.sql.graft.GopherKernel]]): `array<double>` of
     * [word_count, mean_word_len, symbol_ratio, alpha_word_frac,
     * bullet_line_frac, ellipsis_line_frac, stopword_hits, line_count].
     * Hot-path form; [[gopherSignalsColumns]] is the equivalence witness. */
   def gopherSignals(spark: org.apache.spark.sql.SparkSession, text: Column): Column = {
-    org.apache.spark.sql.graft.GopherSignalsExpr.register(spark)
+    org.apache.spark.sql.graft.NativeFunctions.register(spark)
     call_function("gopher_signals", text)
   }
 

@@ -102,7 +102,7 @@ object Winnowing {
   /** Native-kernel form (O(n) deque; requires registration — idempotent). */
   def winnowNative(spark: SparkSession, text: Column,
                    k: Int = DefaultK, w: Int = DefaultW): Column = {
-    org.apache.spark.sql.graft.WinnowExpr.register(spark)
+    org.apache.spark.sql.graft.NativeFunctions.register(spark)
     call_function("winnow_fingerprints", text, lit(k), lit(w))
   }
 

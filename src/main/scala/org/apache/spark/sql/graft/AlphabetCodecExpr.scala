@@ -2,16 +2,11 @@ package org.apache.spark.sql.graft
 
 import java.util.concurrent.ConcurrentHashMap
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, ImplicitCastInputTypes, Literal, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{AbstractDataType, ArrayType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /**
- * Native Catalyst expressions for the F8/F9 alphabet codec
+ * Native kernels for the F8/F9 alphabet codec
  * (`/root/reference/src/util/data_functions.py:31-39`,
  * `src/model/neural_corrector.py:107-126`): char → index encode and
  * index → char decode with stop-at-INT_EMPTY.
@@ -19,54 +14,10 @@ import org.apache.spark.unsafe.types.UTF8String
  * The portable forms in `graft.text.TextFunctions` are higher-order-function
  * Column trees; Spark evaluates HOF lambdas INTERPRETED, one closure call
  * per character, which dominates the wall time of the encode/decode queries.
- * These expressions run the whole codec as one static JVM kernel per row and
- * stay inside whole-stage codegen (`doGenCode` delegates to the same kernel).
- * Equivalence with the HOF forms is property-tested (TextFunctionsSpec).
- *
- * Lives under `org.apache.spark.sql.graft` because the input-type contract
- * (`AbstractDataType`) is `private[sql]` — same placement as
- * [[DamerauLevenshteinExpr]].
+ * `alphabet_encode`/`alphabet_decode` run the whole codec as one static JVM
+ * kernel per row and stay inside whole-stage codegen. Equivalence with the
+ * HOF forms is property-tested (TextFunctionsSpec).
  */
-case class EncodeAlphabet(child: Expression, alphabet: String)
-  extends UnaryExpression with ImplicitCastInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "alphabet_encode"
-
-  override def nullSafeEval(s: Any): Any =
-    AlphabetCodec.encode(s.asInstanceOf[UTF8String], alphabet)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val alphaRef = ctx.addReferenceObj("alphabet", alphabet, "java.lang.String")
-    defineCodeGen(ctx, ev, c =>
-      s"org.apache.spark.sql.graft.AlphabetCodec.encode($c, $alphaRef)")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-case class DecodeAlphabet(child: Expression, alphabet: String)
-  extends UnaryExpression with ImplicitCastInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(ArrayType(LongType))
-  override def dataType: DataType = StringType
-  override def prettyName: String = "alphabet_decode"
-
-  override def nullSafeEval(a: Any): Any =
-    AlphabetCodec.decode(a.asInstanceOf[ArrayData], alphabet)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val alphaRef = ctx.addReferenceObj("alphabet", alphabet, "java.lang.String")
-    defineCodeGen(ctx, ev, c =>
-      s"org.apache.spark.sql.graft.AlphabetCodec.decode($c, $alphaRef)")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object AlphabetCodec {
   /** Per-alphabet lookup tables, built once per executor JVM. */
   private final class Tables(alphabet: String) {
@@ -142,38 +93,5 @@ object AlphabetCodec {
       }
     }
     UTF8String.fromString(sb.toString)
-  }
-}
-
-object AlphabetCodecExpr {
-  private def literalAlphabet(name: String, e: Expression): String = e match {
-    case Literal(s: UTF8String, StringType) => s.toString
-    case _ => throw new IllegalArgumentException(
-      s"$name expects a foldable string literal alphabet as its 2nd argument")
-  }
-
-  private def info(name: String, usage: String) =
-    new ExpressionInfo(classOf[EncodeAlphabet].getName, null, name, usage,
-      "", "", "", "string_funcs", "4.0.0", "", "built-in")
-
-  /** Idempotent per-session registration:
-    * `alphabet_encode(str, 'abc...')` / `alphabet_decode(arr, 'abc...')`. */
-  def register(spark: SparkSession): Unit = {
-    val fns: Seq[(String, String, Seq[Expression] => Expression)] = Seq(
-      ("alphabet_encode", "char → alphabet-index encode (miss → |alphabet|)",
-        (cs: Seq[Expression]) => EncodeAlphabet(cs(0), literalAlphabet("alphabet_encode", cs(1)))),
-      ("alphabet_decode", "index → char decode, stops at -1, miss → U+FFFD",
-        (cs: Seq[Expression]) => DecodeAlphabet(cs(0), literalAlphabet("alphabet_decode", cs(1)))))
-    fns.foreach { case (name, usage, builder) =>
-      val id = FunctionIdentifier(name)
-      if (!spark.sessionState.functionRegistry.functionExists(id)) {
-        spark.sessionState.functionRegistry.registerFunction(
-          id, info(name, usage),
-          (children: Seq[Expression]) => {
-            require(children.length == 2, s"$name expects 2 arguments")
-            builder(children)
-          })
-      }
-    }
   }
 }

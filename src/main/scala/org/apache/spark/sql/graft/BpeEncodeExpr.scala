@@ -1,8 +1,6 @@
 package org.apache.spark.sql.graft
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, ImplicitCastInputTypes, Literal, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{AbstractDataType, ArrayType, DataType, StringType}
@@ -114,31 +112,5 @@ class BpeMergeTable(ls: Array[String], rs: Array[String]) extends Serializable {
     i = 0
     while (i < syms.size) { out(i) = UTF8String.fromString(syms.get(i)); i += 1 }
     new GenericArrayData(out)
-  }
-}
-
-object BpeEncodeExpr {
-  private def stringArrayLit(name: String, e: Expression): Seq[String] = e match {
-    case Literal(a: ArrayData, ArrayType(StringType, _)) =>
-      a.toArray[UTF8String](StringType).map(u => if (u == null) null else u.toString).toSeq
-    case _ => throw new IllegalArgumentException(
-      s"$name expects foldable array<string> literals for the merge table")
-  }
-
-  /** Idempotent per-session registration: `bpe_encode(word, ls, rs)`. */
-  def register(spark: SparkSession): Unit = {
-    val id = FunctionIdentifier("bpe_encode")
-    if (!spark.sessionState.functionRegistry.functionExists(id)) {
-      spark.sessionState.functionRegistry.registerFunction(
-        id,
-        new ExpressionInfo(classOf[BpeEncode].getName, null, "bpe_encode",
-          "apply a BPE merge table to one word", "", "", "", "string_funcs", "4.0.0", "", "built-in"),
-        (children: Seq[Expression]) => {
-          require(children.length == 3, "bpe_encode expects (word, ls, rs)")
-          BpeEncode(children(0),
-            stringArrayLit("bpe_encode", children(1)),
-            stringArrayLit("bpe_encode", children(2)))
-        })
-    }
   }
 }

@@ -1,11 +1,6 @@
 package org.apache.spark.sql.graft
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, ImplicitCastInputTypes}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{AbstractDataType, ArrayType, DataType, DoubleType}
 
 /**
  * Native cosine similarity over two `array<double>` columns (float arrays
@@ -20,33 +15,6 @@ import org.apache.spark.sql.types.{AbstractDataType, ArrayType, DataType, Double
  *  - null on length mismatch or any null element (`zip_with` null padding /
  *    null poisoning in the HOF form).
  */
-case class CosineSim(left: Expression, right: Expression)
-  extends BinaryExpression with ImplicitCastInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] =
-    Seq(ArrayType(DoubleType), ArrayType(DoubleType))
-  override def dataType: DataType = DoubleType
-  override def nullable: Boolean = true
-  override def prettyName: String = "cosine_sim"
-
-  override def nullSafeEval(a: Any, b: Any): Any =
-    CosineKernel.cosine(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      // freshName: two cosine_sim calls can land in one codegen scope; a
-      // fixed local name would collide and force interpreted fallback.
-      val r = ctx.freshName("r")
-      s"""
-         |Object $r = org.apache.spark.sql.graft.CosineKernel.cosine($a, $b);
-         |if ($r == null) { ${ev.isNull} = true; } else { ${ev.value} = ((Double) $r).doubleValue(); }
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
 object CosineKernel {
   /** Sum of squares, or NaN marker (-1) for a null element — mirrors the
     * HOF form where a null element null-poisons the whole fold. */
@@ -84,22 +52,5 @@ object CosineKernel {
       i += 1
     }
     java.lang.Double.valueOf(dot / denom.doubleValue())
-  }
-}
-
-object CosineSimExpr {
-  /** Idempotent per-session registration: `cosine_sim(a, b)`. */
-  def register(spark: SparkSession): Unit = {
-    val id = FunctionIdentifier("cosine_sim")
-    if (!spark.sessionState.functionRegistry.functionExists(id)) {
-      spark.sessionState.functionRegistry.registerFunction(
-        id,
-        new ExpressionInfo(classOf[CosineSim].getName, null, "cosine_sim",
-          "cosine similarity of two double arrays", "", "", "", "math_funcs", "4.0.0", "", "built-in"),
-        (children: Seq[Expression]) => {
-          require(children.length == 2, "cosine_sim expects 2 arguments")
-          CosineSim(children(0), children(1))
-        })
-    }
   }
 }

@@ -1,9 +1,7 @@
 package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, ImplicitCastInputTypes}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ImplicitCastInputTypes}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{AbstractDataType, DataType, IntegerType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -56,48 +54,6 @@ object DamerauLevenshteinExpr {
     case _ => DamerauLevenshtein.distanceUnrestricted(a.toString, b.toString)
   }
 
-  private def info(name: String, usage: String) =
-    new ExpressionInfo(classOf[DamerauLevenshteinExpr].getName, null, name, usage,
-      "", "", "", "string_funcs", "4.0.0", "", "built-in")
-
-  private[graft] val functions: Seq[(String, String, Int)] = Seq(
-    ("dl_distance", "banded restricted (OSA) Damerau-Levenshtein — reference semantics", 0),
-    ("dl_distance_full", "full-matrix restricted (OSA) Damerau-Levenshtein", 1),
-    ("dl_distance_true", "unrestricted Damerau-Levenshtein (matches DuckDB)", 2))
-
-  /** Idempotent per-session registration (usable without extensions config).
-    * Skips names already present — re-registering is a no-op, not a WARN. */
-  def register(spark: SparkSession): Unit = functions.foreach { case (name, usage, v) =>
-    val id = FunctionIdentifier(name)
-    if (!spark.sessionState.functionRegistry.functionExists(id)) {
-      spark.sessionState.functionRegistry.registerFunction(
-        id, info(name, usage),
-        (children: Seq[Expression]) => {
-          require(children.length == 2, s"$name expects 2 arguments")
-          DamerauLevenshteinExpr(children(0), children(1), v)
-        })
-    }
-  }
-}
-
-/** `SparkSessionExtensions` injector:
-  * `spark.sql.extensions=org.apache.spark.sql.graft.GraftExtensions`. */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    DamerauLevenshteinExpr.functions.foreach { case (name, _, v) =>
-      ext.injectFunction((FunctionIdentifier(name),
-        new ExpressionInfo(classOf[DamerauLevenshteinExpr].getName, name),
-        (children: Seq[Expression]) => {
-          require(children.length == 2, s"$name expects 2 arguments")
-          DamerauLevenshteinExpr(children(0), children(1), v)
-        }))
-    }
-    ext.injectFunction((FunctionIdentifier("dl_distance_within"),
-      new ExpressionInfo(classOf[DlWithinExpr].getName, "dl_distance_within"),
-      (children: Seq[Expression]) => {
-        require(children.length == 3, "dl_distance_within expects 3 arguments")
-        DlWithinExpr(children(0), children(1), children(2))
-      }))
-    ext.injectOptimizerRule(_ => BandedDistanceRewrite)
-  }
+  /** Registers every graft SQL function ([[NativeFunctions.register]]). */
+  def register(spark: SparkSession): Unit = NativeFunctions.register(spark)
 }

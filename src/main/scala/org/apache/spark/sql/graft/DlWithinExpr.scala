@@ -1,9 +1,8 @@
 package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{
-  BinaryComparison, EqualTo, Expression, ExpressionInfo, GreaterThan,
+  BinaryComparison, EqualTo, Expression, GreaterThan,
   GreaterThanOrEqual, ImplicitCastInputTypes, LessThan, LessThanOrEqual,
   Literal, TernaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -54,24 +53,10 @@ object DlWithinExpr {
   def compute(a: UTF8String, b: UTF8String, k: Int): Int =
     DamerauLevenshtein.distanceWithin(a.toString, b.toString, k)
 
-  /** Idempotent per-session registration (mirrors DamerauLevenshteinExpr). */
-  def register(spark: SparkSession): Unit = {
-    val id = FunctionIdentifier("dl_distance_within")
-    if (!spark.sessionState.functionRegistry.functionExists(id)) {
-      spark.sessionState.functionRegistry.registerFunction(
-        id,
-        new ExpressionInfo(classOf[DlWithinExpr].getName, null, "dl_distance_within",
-          "threshold-bounded OSA Damerau-Levenshtein: min(dist, k+1) in O(n*k)",
-          "", "", "", "string_funcs", "4.0.0", "", "built-in"),
-        (children: Seq[Expression]) => {
-          require(children.length == 3, "dl_distance_within expects 3 arguments")
-          DlWithinExpr(children(0), children(1), children(2))
-        })
-    }
-    // The rewrite only fires for sessions that opted in (extensions config
-    // or BandedDistanceRewrite.install) — registration alone just exposes
-    // the function for direct calls.
-  }
+  /** Registers every graft SQL function ([[NativeFunctions.register]]).
+    * The rewrite only fires for sessions that opted in (extensions config or
+    * [[BandedDistanceRewrite.install]]). */
+  def register(spark: SparkSession): Unit = NativeFunctions.register(spark)
 }
 
 /**

@@ -1,18 +1,13 @@
 package org.apache.spark.sql.graft
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, ImplicitCastInputTypes, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{AbstractDataType, ArrayType, DataType, DoubleType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /**
  * Native Gopher-rule kernel: one pass over the text computing the full
  * quality-heuristic signal family of Rae et al. '21 (Gopher, Appendix A —
  * the rule set RefinedWeb/Dolma-class web curation pipelines reuse), minus
- * the repetition rules which already live in [[RepetitionSignals]]:
+ * the repetition rules which already live in [[RepetitionKernel]]:
  *
  *  - `[0]` word count (whitespace tokens, as double)
  *  - `[1]` mean word length: Σ code points per token / word count (0 if none)
@@ -36,23 +31,6 @@ import org.apache.spark.unsafe.types.UTF8String
  * keeps all eight signals NARROW scan-side — the 100 TB shape; the Column
  * form pays five interpreted HOF lambdas + two regex filters per row.
  */
-case class GopherSignals(child: Expression)
-  extends UnaryExpression with ImplicitCastInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-  override def prettyName: String = "gopher_signals"
-
-  override def nullSafeEval(s: Any): Any =
-    GopherKernel.signals(s.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"org.apache.spark.sql.graft.GopherKernel.signals($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object GopherKernel {
 
   /** The paper's stopword list (Gopher Appendix A) — deliberately distinct
@@ -168,22 +146,5 @@ object GopherKernel {
 
     new GenericArrayData(Array(
       wc.toDouble, mwl, symr, alphaf, bulletf, ellipf, stopHits.toDouble, nl.toDouble))
-  }
-}
-
-object GopherSignalsExpr {
-  /** Idempotent per-session registration: `gopher_signals(text)`. */
-  def register(spark: SparkSession): Unit = {
-    val id = FunctionIdentifier("gopher_signals")
-    if (!spark.sessionState.functionRegistry.functionExists(id)) {
-      spark.sessionState.functionRegistry.registerFunction(
-        id,
-        new ExpressionInfo(classOf[GopherSignals].getName, null, "gopher_signals",
-          "Gopher (Rae'21) quality-rule signals: word count, mean word length, symbol ratio, alpha-word/bullet-line/ellipsis-line fractions, stopword hits, line count", "", "", "", "string_funcs", "4.0.0", "", "built-in"),
-        (children: Seq[Expression]) => {
-          require(children.length == 1, "gopher_signals expects (text)")
-          GopherSignals(children.head)
-        })
-    }
   }
 }

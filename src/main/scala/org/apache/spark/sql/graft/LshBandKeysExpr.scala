@@ -2,12 +2,7 @@ package org.apache.spark.sql.graft
 
 import java.util.concurrent.ConcurrentHashMap
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, ImplicitCastInputTypes, Literal, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{AbstractDataType, ArrayType, DataType, DoubleType, IntegerType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /**
@@ -23,24 +18,6 @@ import org.apache.spark.unsafe.types.UTF8String
  * zip_with padding to max(len, dim) with null→0 contributions (`coalesce`),
  * `proj >= 0` sign rule (NaN → 0 bit).
  */
-case class LshBandKeys(child: Expression, nBands: Int, bitsPerBand: Int, dim: Int)
-  extends UnaryExpression with ImplicitCastInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(ArrayType(DoubleType))
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def prettyName: String = "lsh_band_keys"
-
-  override def nullSafeEval(v: Any): Any =
-    LshBandKernel.bandKeys(v.asInstanceOf[ArrayData], nBands, bitsPerBand, dim)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"org.apache.spark.sql.graft.LshBandKernel.bandKeys($c, $nBands, $bitsPerBand, $dim)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object LshBandKernel {
   // (nPlanes, dim) come from plan literals — a handful per workload; the cap
   // bounds the executor-global map against hostile many-config plans (past
@@ -89,28 +66,5 @@ object LshBandKernel {
       b += 1
     }
     new GenericArrayData(keys)
-  }
-}
-
-object LshBandKeysExpr {
-  private def intLit(e: Expression): Int = e match {
-    case Literal(v: Int, IntegerType) => v
-    case _ => throw new IllegalArgumentException(
-      "lsh_band_keys expects foldable integer literals for nBands/bitsPerBand/dim")
-  }
-
-  /** Idempotent per-session registration: `lsh_band_keys(vec, nBands, bitsPerBand, dim)`. */
-  def register(spark: SparkSession): Unit = {
-    val id = FunctionIdentifier("lsh_band_keys")
-    if (!spark.sessionState.functionRegistry.functionExists(id)) {
-      spark.sessionState.functionRegistry.registerFunction(
-        id,
-        new ExpressionInfo(classOf[LshBandKeys].getName, null, "lsh_band_keys",
-          "random-hyperplane LSH band keys of a vector", "", "", "", "hash_funcs", "4.0.0", "", "built-in"),
-        (children: Seq[Expression]) => {
-          require(children.length == 4, "lsh_band_keys expects (vec, nBands, bitsPerBand, dim)")
-          LshBandKeys(children(0), intLit(children(1)), intLit(children(2)), intLit(children(3)))
-        })
-    }
   }
 }

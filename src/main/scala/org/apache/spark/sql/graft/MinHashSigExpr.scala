@@ -3,12 +3,7 @@ package org.apache.spark.sql.graft
 import java.nio.charset.StandardCharsets
 import java.security.MessageDigest
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, ImplicitCastInputTypes, Literal, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.types.{AbstractDataType, ArrayType, DataType, IntegerType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /**
@@ -33,24 +28,6 @@ import org.apache.spark.unsafe.types.UTF8String
  * all), which also removes the only pre-banding aggregation from the LSH
  * pipeline.
  */
-case class MinHashSig(child: Expression, shingleK: Int, nHashes: Int)
-  extends UnaryExpression with ImplicitCastInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "minhash_sig"
-
-  override def nullSafeEval(s: Any): Any =
-    MinHashKernel.signature(s.asInstanceOf[UTF8String], shingleK, nHashes)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"org.apache.spark.sql.graft.MinHashKernel.signature($c, $shingleK, $nHashes)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object MinHashKernel {
   /** Mersenne prime 2^61 - 1 (Dedup.MinHashP). */
   val P: Long = 2305843009213693951L
@@ -121,29 +98,5 @@ object MinHashKernel {
       }
     }
     new GenericArrayData(mins)
-  }
-}
-
-object MinHashSigExpr {
-  private def intLit(name: String, e: Expression): Int = e match {
-    case Literal(v: Int, IntegerType) => v
-    case _ => throw new IllegalArgumentException(
-      s"$name expects foldable integer literals for shingleK/nHashes")
-  }
-
-  /** Idempotent per-session registration: `minhash_sig(text, k, n)`. */
-  def register(spark: SparkSession): Unit = {
-    val id = FunctionIdentifier("minhash_sig")
-    if (!spark.sessionState.functionRegistry.functionExists(id)) {
-      spark.sessionState.functionRegistry.registerFunction(
-        id,
-        new ExpressionInfo(classOf[MinHashSig].getName, null, "minhash_sig",
-          "MinHash signature over word shingles", "", "", "", "hash_funcs", "4.0.0", "", "built-in"),
-        (children: Seq[Expression]) => {
-          require(children.length == 3, "minhash_sig expects (text, shingleK, nHashes)")
-          MinHashSig(children(0),
-            intLit("minhash_sig", children(1)), intLit("minhash_sig", children(2)))
-        })
-    }
   }
 }

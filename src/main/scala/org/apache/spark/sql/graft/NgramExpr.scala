@@ -1,89 +1,34 @@
 package org.apache.spark.sql.graft
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, ImplicitCastInputTypes, Literal, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{AbstractDataType, ArrayType, DataType, IntegerType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /**
- * Native token n-gram builder — the scan-side form of
- * `TextAnalysis.ngramArray`: whitespace tokens of the NORMALIZED text
- * (`Dedup.tokens` + the empty-token filter), then space-joined windows of
- * `n` consecutive tokens; fewer than `n` tokens yields an empty array. The
- * relational form builds each gram with an interpreted `concat_ws` lambda
- * over `n` `element_at` calls — one interpreter round trip per gram with
- * O(n) list indexing inside; this kernel is one codegen'd call per row.
- * Value-identical (equivalence spec in TextAnalysisSpec); null text yields
- * null here vs an empty array relationally — identical after the
- * explode/posexplode every consumer applies.
+ * Native token n-gram builders.
+ *
+ *  - `token_ngrams(text, n)` — the scan-side form of
+ *    `TextAnalysis.ngramArray`: whitespace tokens of the NORMALIZED text
+ *    (`Dedup.tokens` + the empty-token filter), then space-joined windows of
+ *    `n` consecutive tokens; fewer than `n` tokens yields an empty array. The
+ *    relational form builds each gram with an interpreted `concat_ws` lambda
+ *    over `n` `element_at` calls — one interpreter round trip per gram with
+ *    O(n) list indexing inside; this kernel is one codegen'd call per row.
+ *    Value-identical (equivalence spec in TextAnalysisSpec); null text yields
+ *    null here vs an empty array relationally — identical after the
+ *    explode/posexplode every consumer applies.
+ *  - `array_ngrams(arr, n)` — the same over an ALREADY-TOKENIZED
+ *    `array<string>` column, for callers that materialize the token array
+ *    once and derive several gram orders from it (the LmScore single-pass
+ *    shape). Tokens are used as given (no re-normalization, no empty-token
+ *    filter).
+ *  - `token_segments(text, width)` — consecutive NON-overlapping
+ *    `width`-token segments of the normalized text (the
+ *    [[graft.dedup.LineDedup]] unit builder): space-joined groups, last
+ *    segment may be shorter. Tokens are `Dedup.tokens` semantics — the
+ *    UNFILTERED split, so the empty doc yields one empty segment (matching
+ *    `split('', ' ') = ['']`). Null yields null (callers coalesce to the
+ *    witness's empty array).
  */
-case class TokenNgrams(child: Expression, n: Int)
-  extends UnaryExpression with ImplicitCastInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def prettyName: String = "token_ngrams"
-
-  override def nullSafeEval(s: Any): Any =
-    NgramKernel.tokenNgrams(s.asInstanceOf[UTF8String], n)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"org.apache.spark.sql.graft.NgramKernel.tokenNgrams($c, $n)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** [[TokenNgrams]] over an ALREADY-TOKENIZED `array<string>` column — for
-  * callers that materialize the token array once and derive several gram
-  * orders from it (the LmScore single-pass shape). Tokens are used as
-  * given (no re-normalization, no empty-token filter). */
-case class ArrayNgrams(child: Expression, n: Int)
-  extends UnaryExpression with ImplicitCastInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(ArrayType(StringType))
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def prettyName: String = "array_ngrams"
-
-  override def nullSafeEval(a: Any): Any =
-    NgramKernel.arrayNgrams(a.asInstanceOf[ArrayData], n)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"org.apache.spark.sql.graft.NgramKernel.arrayNgrams($c, $n)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** Consecutive NON-overlapping `width`-token segments of the normalized
-  * text (the [[graft.dedup.LineDedup]] unit builder): space-joined groups,
-  * last segment may be shorter. Tokens are `Dedup.tokens` semantics — the
-  * UNFILTERED split, so the empty doc yields one empty segment (matching
-  * `split('', ' ') = ['']`). Null yields null (callers coalesce to the
-  * witness's empty array). */
-case class TokenSegments(child: Expression, width: Int)
-  extends UnaryExpression with ImplicitCastInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def prettyName: String = "token_segments"
-
-  override def nullSafeEval(s: Any): Any =
-    NgramKernel.tokenSegments(s.asInstanceOf[UTF8String], width)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"org.apache.spark.sql.graft.NgramKernel.tokenSegments($c, $width)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object NgramKernel {
 
   private def normalize(text: UTF8String): String = {
@@ -153,51 +98,5 @@ object NgramKernel {
     var i = 0
     while (i < m) { toks(i) = arr.getUTF8String(i).toString; i += 1 }
     grams(toks, n)
-  }
-}
-
-object NgramExpr {
-  private def intLit(name: String, e: Expression): Int = e match {
-    case Literal(v: Int, IntegerType) => v
-    case _ => throw new IllegalArgumentException(
-      s"$name expects a foldable integer literal for n")
-  }
-
-  /** Idempotent per-session registration: `token_ngrams(text, n)` and
-    * `array_ngrams(arr, n)`. */
-  def register(spark: SparkSession): Unit = {
-    val tid = FunctionIdentifier("token_ngrams")
-    if (!spark.sessionState.functionRegistry.functionExists(tid)) {
-      spark.sessionState.functionRegistry.registerFunction(
-        tid,
-        new ExpressionInfo(classOf[TokenNgrams].getName, null, "token_ngrams",
-          "space-joined token n-grams of the normalized text", "", "", "", "string_funcs", "4.0.0", "", "built-in"),
-        (children: Seq[Expression]) => {
-          require(children.length == 2, "token_ngrams expects (text, n)")
-          TokenNgrams(children(0), intLit("token_ngrams", children(1)))
-        })
-    }
-    val sid = FunctionIdentifier("token_segments")
-    if (!spark.sessionState.functionRegistry.functionExists(sid)) {
-      spark.sessionState.functionRegistry.registerFunction(
-        sid,
-        new ExpressionInfo(classOf[TokenSegments].getName, null, "token_segments",
-          "non-overlapping width-token segments of the normalized text", "", "", "", "string_funcs", "4.0.0", "", "built-in"),
-        (children: Seq[Expression]) => {
-          require(children.length == 2, "token_segments expects (text, width)")
-          TokenSegments(children(0), intLit("token_segments", children(1)))
-        })
-    }
-    val aid = FunctionIdentifier("array_ngrams")
-    if (!spark.sessionState.functionRegistry.functionExists(aid)) {
-      spark.sessionState.functionRegistry.registerFunction(
-        aid,
-        new ExpressionInfo(classOf[ArrayNgrams].getName, null, "array_ngrams",
-          "space-joined n-grams over a token array", "", "", "", "string_funcs", "4.0.0", "", "built-in"),
-        (children: Seq[Expression]) => {
-          require(children.length == 2, "array_ngrams expects (arr, n)")
-          ArrayNgrams(children(0), intLit("array_ngrams", children(1)))
-        })
-    }
   }
 }

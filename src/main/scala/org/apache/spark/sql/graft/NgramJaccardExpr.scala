@@ -1,10 +1,5 @@
 package org.apache.spark.sql.graft
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, ImplicitCastInputTypes, Literal}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{AbstractDataType, DataType, DoubleType, IntegerType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /**
@@ -18,25 +13,6 @@ import org.apache.spark.unsafe.types.UTF8String
  *    empty texts are both `{""}` → jaccard 1.0 (matching the column form);
  *  - distinct shingles (set semantics), double division.
  */
-case class NgramJaccard(left: Expression, right: Expression, shingleK: Int)
-  extends BinaryExpression with ImplicitCastInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(StringType, StringType)
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "ngram_jaccard"
-
-  override def nullSafeEval(a: Any, b: Any): Any =
-    NgramJaccardKernel.jaccard(
-      a.asInstanceOf[UTF8String], b.asInstanceOf[UTF8String], shingleK)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) =>
-      s"org.apache.spark.sql.graft.NgramJaccardKernel.jaccard($a, $b, $shingleK)")
-
-  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
 object NgramJaccardKernel {
   private def shingleSet(text: UTF8String, k: Int): java.util.HashSet[String] = {
     val replaced = text.toLowerCase.toString.replaceAll("\\s+", " ")
@@ -74,27 +50,5 @@ object NgramJaccardKernel {
     val other = if (sa.size() <= sb.size()) sb else sa
     while (it.hasNext) if (other.contains(it.next())) ni += 1
     ni.toDouble / (sa.size() + sb.size() - ni)
-  }
-}
-
-object NgramJaccardExpr {
-  /** Idempotent per-session registration: `ngram_jaccard(a, b, k)`. */
-  def register(spark: SparkSession): Unit = {
-    val id = FunctionIdentifier("ngram_jaccard")
-    if (!spark.sessionState.functionRegistry.functionExists(id)) {
-      spark.sessionState.functionRegistry.registerFunction(
-        id,
-        new ExpressionInfo(classOf[NgramJaccard].getName, null, "ngram_jaccard",
-          "word-shingle Jaccard similarity of two texts", "", "", "", "string_funcs", "4.0.0", "", "built-in"),
-        (children: Seq[Expression]) => {
-          require(children.length == 3, "ngram_jaccard expects (a, b, shingleK)")
-          val k = children(2) match {
-            case Literal(v: Int, IntegerType) => v
-            case _ => throw new IllegalArgumentException(
-              "ngram_jaccard expects a foldable integer literal shingleK")
-          }
-          NgramJaccard(children(0), children(1), k)
-        })
-    }
   }
 }

@@ -1,12 +1,10 @@
 package org.apache.spark.sql.graft
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, ImplicitCastInputTypes, Literal, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{AbstractDataType, ArrayType, ByteType, DataType, DoubleType, IntegerType}
+import org.apache.spark.sql.types.{AbstractDataType, ArrayType, ByteType, DataType, DoubleType}
 
 /**
  * Native PQ kernels — the encode/score inner loops of [[graft.similarity.Pq]],
@@ -205,48 +203,5 @@ class PqAdcKernel(n2Flat: Array[Double], ksub: Int) extends Serializable {
       j += 1
     }
     java.lang.Double.valueOf(dot / denom)
-  }
-}
-
-object PqAdcExpr {
-  private def intLit(name: String, e: Expression): Int = e match {
-    case Literal(v: Int, IntegerType) => v
-    case _ => throw new IllegalArgumentException(s"$name expects foldable integer literals")
-  }
-
-  private def doubleArrayLit(name: String, e: Expression): Array[Double] = e match {
-    case Literal(a: ArrayData, ArrayType(DoubleType, _)) => a.toDoubleArray()
-    case _ => throw new IllegalArgumentException(
-      s"$name expects a foldable array<double> literal")
-  }
-
-  /** Idempotent per-session registration: `pq_encode(vec, cbFlat, m, ksub)`
-    * and `pq_adc_sim(codes, lut, n2Flat, qn, ksub)`. */
-  def register(spark: SparkSession): Unit = {
-    val eid = FunctionIdentifier("pq_encode")
-    if (!spark.sessionState.functionRegistry.functionExists(eid)) {
-      spark.sessionState.functionRegistry.registerFunction(
-        eid,
-        new ExpressionInfo(classOf[PqEncodeCodes].getName, null, "pq_encode",
-          "PQ byte codes of a vector against a flat codebook literal", "", "", "", "misc_funcs", "4.0.0", "", "built-in"),
-        (children: Seq[Expression]) => {
-          require(children.length == 4, "pq_encode expects (vec, cbFlat, m, ksub)")
-          PqEncodeCodes(children(0), doubleArrayLit("pq_encode", children(1)),
-            intLit("pq_encode", children(2)), intLit("pq_encode", children(3)))
-        })
-    }
-    val aid = FunctionIdentifier("pq_adc_sim")
-    if (!spark.sessionState.functionRegistry.functionExists(aid)) {
-      spark.sessionState.functionRegistry.registerFunction(
-        aid,
-        new ExpressionInfo(classOf[PqAdcSim].getName, null, "pq_adc_sim",
-          "asymmetric-cosine ADC score from PQ codes and a query LUT", "", "", "", "misc_funcs", "4.0.0", "", "built-in"),
-        (children: Seq[Expression]) => {
-          require(children.length == 5, "pq_adc_sim expects (codes, lut, n2Flat, qn, ksub)")
-          PqAdcSim(children(0), children(1),
-            doubleArrayLit("pq_adc_sim", children(2)), children(3),
-            intLit("pq_adc_sim", children(4)))
-        })
-    }
   }
 }

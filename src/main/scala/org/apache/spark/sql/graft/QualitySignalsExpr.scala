@@ -1,11 +1,6 @@
 package org.apache.spark.sql.graft
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, ImplicitCastInputTypes, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{AbstractDataType, ArrayType, DataType, DoubleType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /**
@@ -33,28 +28,11 @@ import org.apache.spark.unsafe.types.UTF8String
  * (Spark's `trim`/`split` semantics), and the composite combines terms in
  * the exact `Column` association order `((ls·0.3 + a·0.4) + s·0.3) − p·0.5`.
  *
- * Same motivation as [[RepetitionSignals]]: the Column form evaluates three
+ * Same motivation as [[RepetitionKernel]]: the Column form evaluates three
  * interpreted HOF lambdas per row (two tokenizations + a stopword filter);
  * this kernel keeps all six signals NARROW in one codegen'd call — the shape
  * a 100 TB ingest gate needs (stateless scan-side map, no exchange).
  */
-case class QualitySignals(child: Expression)
-  extends UnaryExpression with ImplicitCastInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-  override def prettyName: String = "quality_signals"
-
-  override def nullSafeEval(s: Any): Any =
-    QualityKernel.signals(s.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"org.apache.spark.sql.graft.QualityKernel.signals($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object QualityKernel {
 
   /** The embedded English stopword list — must stay identical to
@@ -131,22 +109,5 @@ object QualityKernel {
       math.max(math.min(lenScore * 0.3 + alpha * 0.4 + stopr * 0.3 - punct * 0.5, 1.0), 0.0)
 
     new GenericArrayData(Array(alpha, punct, stopr, mtl, quality, toks.length.toDouble))
-  }
-}
-
-object QualitySignalsExpr {
-  /** Idempotent per-session registration: `quality_signals(text)`. */
-  def register(spark: SparkSession): Unit = {
-    val id = FunctionIdentifier("quality_signals")
-    if (!spark.sessionState.functionRegistry.functionExists(id)) {
-      spark.sessionState.functionRegistry.registerFunction(
-        id,
-        new ExpressionInfo(classOf[QualitySignals].getName, null, "quality_signals",
-          "document quality signals: alpha/punct/stopword ratios, mean token length, composite quality, token count", "", "", "", "string_funcs", "4.0.0", "", "built-in"),
-        (children: Seq[Expression]) => {
-          require(children.length == 1, "quality_signals expects (text)")
-          QualitySignals(children.head)
-        })
-    }
   }
 }

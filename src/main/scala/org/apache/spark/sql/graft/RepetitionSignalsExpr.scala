@@ -1,11 +1,6 @@
 package org.apache.spark.sql.graft
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, ImplicitCastInputTypes, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{AbstractDataType, ArrayType, DataType, DoubleType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /**
@@ -24,27 +19,10 @@ import org.apache.spark.unsafe.types.UTF8String
  * (`TextAnalysis.repetitionSignalsRelational`) and the DuckDB oracle —
  * equivalence-tested in TextAnalysisSpec.
  *
- * Same motivation as [[SimHashSig]]: the relational form pays two exploded
+ * Same motivation as [[SimHashKernel]]: the relational form pays two exploded
  * hash aggregations (tokens + bigrams) per corpus pass; this kernel keeps
  * the three signals NARROW (scan-side map, no exchange).
  */
-case class RepetitionSignals(child: Expression)
-  extends UnaryExpression with ImplicitCastInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-  override def prettyName: String = "repetition_signals"
-
-  override def nullSafeEval(s: Any): Any =
-    RepetitionKernel.signals(s.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"org.apache.spark.sql.graft.RepetitionKernel.signals($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object RepetitionKernel {
 
   /** Unicode code points — the `length()` semantics of Spark AND DuckDB
@@ -95,22 +73,5 @@ object RepetitionKernel {
       out(2) = dupOcc.toDouble / nBigrams.toDouble
     }
     new GenericArrayData(out)
-  }
-}
-
-object RepetitionSignalsExpr {
-  /** Idempotent per-session registration: `repetition_signals(text)`. */
-  def register(spark: SparkSession): Unit = {
-    val id = FunctionIdentifier("repetition_signals")
-    if (!spark.sessionState.functionRegistry.functionExists(id)) {
-      spark.sessionState.functionRegistry.registerFunction(
-        id,
-        new ExpressionInfo(classOf[RepetitionSignals].getName, null, "repetition_signals",
-          "Gopher-style repetition signals over whitespace tokens", "", "", "", "string_funcs", "4.0.0", "", "built-in"),
-        (children: Seq[Expression]) => {
-          require(children.length == 1, "repetition_signals expects (text)")
-          RepetitionSignals(children.head)
-        })
-    }
   }
 }

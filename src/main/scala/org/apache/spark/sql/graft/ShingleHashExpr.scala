@@ -3,12 +3,7 @@ package org.apache.spark.sql.graft
 import java.nio.charset.StandardCharsets
 import java.security.MessageDigest
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, ImplicitCastInputTypes, Literal, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.types.{AbstractDataType, ArrayType, DataType, IntegerType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /**
@@ -41,72 +36,15 @@ import org.apache.spark.unsafe.types.UTF8String
  *    minhash family `h_i = min over shingles of (base ⊕ mask_i)` with
  *    `Dedup.ensembleMask` masks, plus the distinct-shingle COUNT as the
  *    final element (the LSH-Ensemble size statistic — signature and size in
- *    one pass).
+ *    one pass);
+ *  - `hash_overlap_count(a, b)` → multiset overlap count of two SORTED
+ *    `array<long>` columns: `Σ_v countA(v) · countB(v)` — exactly the row
+ *    count of the equi-join of the two value lists (the `overlapVerify`
+ *    intersection statistic, duplicate hash values included: two distinct
+ *    shingles colliding on the 60-bit hash cross-join in the relational
+ *    form, and this kernel reproduces that product). PRECONDITION: both
+ *    inputs ascending-sorted (callers build them with `sort_array`).
  */
-case class ShingleHashes(child: Expression, shingleK: Int)
-  extends UnaryExpression with ImplicitCastInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "shingle_hashes"
-
-  override def nullSafeEval(s: Any): Any =
-    ShingleHashKernel.shingleHashes(s.asInstanceOf[UTF8String], shingleK)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"org.apache.spark.sql.graft.ShingleHashKernel.shingleHashes($c, $shingleK)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-case class EnsembleMinHash(child: Expression, shingleK: Int, nHashes: Int)
-  extends UnaryExpression with ImplicitCastInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "ensemble_minhash"
-
-  override def nullSafeEval(s: Any): Any =
-    ShingleHashKernel.ensembleSignature(s.asInstanceOf[UTF8String], shingleK, nHashes)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"org.apache.spark.sql.graft.ShingleHashKernel.ensembleSignature($c, $shingleK, $nHashes)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** Multiset overlap count of two SORTED `array<long>` columns:
-  * `Σ_v countA(v) · countB(v)` — exactly the row count of the equi-join
-  * of the two value lists (the `overlapVerify` intersection statistic,
-  * duplicate hash values included: two distinct shingles colliding on the
-  * 60-bit hash cross-join in the relational form, and this kernel
-  * reproduces that product). PRECONDITION: both inputs ascending-sorted
-  * (callers build them with `sort_array`). */
-case class HashOverlapCount(left: Expression, right: Expression)
-  extends org.apache.spark.sql.catalyst.expressions.BinaryExpression with ImplicitCastInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] =
-    Seq(ArrayType(LongType), ArrayType(LongType))
-  override def dataType: DataType = LongType
-  override def prettyName: String = "hash_overlap_count"
-
-  override def nullSafeEval(a: Any, b: Any): Any =
-    ShingleHashKernel.overlapCount(
-      a.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData],
-      b.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) =>
-      s"org.apache.spark.sql.graft.ShingleHashKernel.overlapCount($a, $b)")
-
-  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
 object ShingleHashKernel {
 
   /** Merge-count over two sorted long arrays: Σ runLenA(v) · runLenB(v). */
@@ -217,52 +155,5 @@ object ShingleHashKernel {
     }
     out(nHashes) = sh.size.toLong
     new GenericArrayData(out)
-  }
-}
-
-object ShingleHashExpr {
-  private def intLit(name: String, e: Expression): Int = e match {
-    case Literal(v: Int, IntegerType) => v
-    case _ => throw new IllegalArgumentException(
-      s"$name expects foldable integer literals")
-  }
-
-  /** Idempotent per-session registration: `shingle_hashes(text, k)` and
-    * `ensemble_minhash(text, k, n)`. */
-  def register(spark: SparkSession): Unit = {
-    val sid = FunctionIdentifier("shingle_hashes")
-    if (!spark.sessionState.functionRegistry.functionExists(sid)) {
-      spark.sessionState.functionRegistry.registerFunction(
-        sid,
-        new ExpressionInfo(classOf[ShingleHashes].getName, null, "shingle_hashes",
-          "distinct word-shingle 60-bit md5 hashes", "", "", "", "hash_funcs", "4.0.0", "", "built-in"),
-        (children: Seq[Expression]) => {
-          require(children.length == 2, "shingle_hashes expects (text, k)")
-          ShingleHashes(children(0), intLit("shingle_hashes", children(1)))
-        })
-    }
-    val oid = FunctionIdentifier("hash_overlap_count")
-    if (!spark.sessionState.functionRegistry.functionExists(oid)) {
-      spark.sessionState.functionRegistry.registerFunction(
-        oid,
-        new ExpressionInfo(classOf[HashOverlapCount].getName, null, "hash_overlap_count",
-          "multiset overlap count of two sorted long arrays", "", "", "", "agg_funcs", "4.0.0", "", "built-in"),
-        (children: Seq[Expression]) => {
-          require(children.length == 2, "hash_overlap_count expects (a, b)")
-          HashOverlapCount(children(0), children(1))
-        })
-    }
-    val eid = FunctionIdentifier("ensemble_minhash")
-    if (!spark.sessionState.functionRegistry.functionExists(eid)) {
-      spark.sessionState.functionRegistry.registerFunction(
-        eid,
-        new ExpressionInfo(classOf[EnsembleMinHash].getName, null, "ensemble_minhash",
-          "XOR-family minhash signature + distinct-shingle count", "", "", "", "hash_funcs", "4.0.0", "", "built-in"),
-        (children: Seq[Expression]) => {
-          require(children.length == 3, "ensemble_minhash expects (text, k, n)")
-          EnsembleMinHash(children(0),
-            intLit("ensemble_minhash", children(1)), intLit("ensemble_minhash", children(2)))
-        })
-    }
   }
 }

@@ -3,11 +3,6 @@ package org.apache.spark.sql.graft
 import java.nio.charset.StandardCharsets
 import java.security.MessageDigest
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, ImplicitCastInputTypes, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{AbstractDataType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /**
@@ -17,28 +12,11 @@ import org.apache.spark.unsafe.types.UTF8String
  * (`simHash32` HOF fold, `simHash32RelationalExploded` explode+agg) and to
  * the DuckDB oracle — equivalence-tested in DedupSpec.
  *
- * Same motivation as [[MinHashSig]]: the relational form pays an
+ * Same motivation as [[MinHashKernel]]: the relational form pays an
  * O(tokens) explode through a 32-lane hash aggregate; this kernel keeps the
  * signature NARROW (scan-side map, no exchange), so the banded near-dup
  * pipeline's only wide op is the band-key self-join itself.
  */
-case class SimHashSig(child: Expression)
-  extends UnaryExpression with ImplicitCastInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
-  override def dataType: DataType = LongType
-  override def prettyName: String = "simhash_sig"
-
-  override def nullSafeEval(s: Any): Any =
-    SimHashKernel.signature(s.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"org.apache.spark.sql.graft.SimHashKernel.signature($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object SimHashKernel {
   private val md5 = ThreadLocal.withInitial[MessageDigest](() => MessageDigest.getInstance("MD5"))
 
@@ -77,22 +55,5 @@ object SimHashKernel {
       b += 1
     }
     sig
-  }
-}
-
-object SimHashSigExpr {
-  /** Idempotent per-session registration: `simhash_sig(text)`. */
-  def register(spark: SparkSession): Unit = {
-    val id = FunctionIdentifier("simhash_sig")
-    if (!spark.sessionState.functionRegistry.functionExists(id)) {
-      spark.sessionState.functionRegistry.registerFunction(
-        id,
-        new ExpressionInfo(classOf[SimHashSig].getName, null, "simhash_sig",
-          "32-bit SimHash over whitespace tokens", "", "", "", "hash_funcs", "4.0.0", "", "built-in"),
-        (children: Seq[Expression]) => {
-          require(children.length == 1, "simhash_sig expects (text)")
-          SimHashSig(children.head)
-        })
-    }
   }
 }

@@ -3,11 +3,7 @@ package org.apache.spark.sql.graft
 import java.nio.charset.StandardCharsets
 import java.security.MessageDigest
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, GenericInternalRow, ImplicitCastInputTypes, Literal}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{AbstractDataType, DataType, IntegerType, StringType, StructField, StructType}
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.unsafe.types.UTF8String
 
 /**
@@ -34,46 +30,6 @@ import org.apache.spark.unsafe.types.UTF8String
  * positions 0-based over the normalized non-empty tokens. Null text (no
  * token rows relationally) yields `("", "<extra_id_0>")`.
  */
-case class SpanCorrupt(left: Expression, right: Expression, cutoff: Int, maxLen: Int)
-  extends BinaryExpression with ImplicitCastInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(StringType, StringType)
-  override def dataType: DataType = StructType(Seq(
-    StructField("input_text", StringType, nullable = false),
-    StructField("target_text", StringType, nullable = false)))
-  override def prettyName: String = "span_corrupt"
-  override def nullable: Boolean = false
-
-  // null id or text → the no-token fallback row, matching the relational
-  // left-join fallback (so the expression itself is never null)
-  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
-    val id = left.eval(input)
-    val text = right.eval(input)
-    if (id == null || text == null) SpanCorruptKernel.emptyResult
-    else SpanCorruptKernel.corrupt(
-      id.asInstanceOf[UTF8String], text.asInstanceOf[UTF8String], cutoff, maxLen)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-    val idGen = left.genCode(ctx)
-    val textGen = right.genCode(ctx)
-    val kernel = "org.apache.spark.sql.graft.SpanCorruptKernel"
-    ev.copy(
-      code = code"""
-        ${idGen.code}
-        ${textGen.code}
-        InternalRow ${ev.value} = (${idGen.isNull} || ${textGen.isNull})
-          ? $kernel.emptyResult()
-          : $kernel.corrupt(${idGen.value}, ${textGen.value}, $cutoff, $maxLen);
-        """,
-      isNull = org.apache.spark.sql.catalyst.expressions.codegen.FalseLiteral)
-  }
-
-  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
 object SpanCorruptKernel {
 
   private val md5 = ThreadLocal.withInitial[MessageDigest](() => MessageDigest.getInstance("MD5"))
@@ -143,30 +99,5 @@ object SpanCorruptKernel {
     target.append("<extra_id_").append(k).append('>')
     new GenericInternalRow(Array[Any](
       UTF8String.fromString(input.toString), UTF8String.fromString(target.toString)))
-  }
-}
-
-object SpanCorruptExpr {
-  private def intLit(name: String, e: Expression): Int = e match {
-    case Literal(v: Int, IntegerType) => v
-    case _ => throw new IllegalArgumentException(
-      s"$name expects foldable integer literals for cutoff/maxLen")
-  }
-
-  /** Idempotent per-session registration:
-    * `span_corrupt(id_string, text, cutoff, maxLen)`. */
-  def register(spark: SparkSession): Unit = {
-    val id = FunctionIdentifier("span_corrupt")
-    if (!spark.sessionState.functionRegistry.functionExists(id)) {
-      spark.sessionState.functionRegistry.registerFunction(
-        id,
-        new ExpressionInfo(classOf[SpanCorrupt].getName, null, "span_corrupt",
-          "T5 span corruption of one document", "", "", "", "string_funcs", "4.0.0", "", "built-in"),
-        (children: Seq[Expression]) => {
-          require(children.length == 4, "span_corrupt expects (id, text, cutoff, maxLen)")
-          SpanCorrupt(children(0), children(1),
-            intLit("span_corrupt", children(2)), intLit("span_corrupt", children(3)))
-        })
-    }
   }
 }

@@ -1,11 +1,6 @@
 package org.apache.spark.sql.graft
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, ImplicitCastInputTypes}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{AbstractDataType, ArrayType, ByteType, DataType, DoubleType}
 
 /**
  * Native cosine similarity over two `array<tinyint>` (int8-quantized)
@@ -20,33 +15,6 @@ import org.apache.spark.sql.types.{AbstractDataType, ArrayType, ByteType, DataTy
  * Semantics mirror the double kernel: 0.0 when either norm is zero; null on
  * length mismatch or any null element.
  */
-case class Sq8Cosine(left: Expression, right: Expression)
-  extends BinaryExpression with ImplicitCastInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] =
-    Seq(ArrayType(ByteType), ArrayType(ByteType))
-  override def dataType: DataType = DoubleType
-  override def nullable: Boolean = true
-  override def prettyName: String = "sq8_cosine"
-
-  override def nullSafeEval(a: Any, b: Any): Any =
-    Sq8Kernel.cosine(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      // freshName: two sq8_cosine calls can land in one codegen scope; a
-      // fixed local name would collide and force interpreted fallback.
-      val r = ctx.freshName("r")
-      s"""
-         |Object $r = org.apache.spark.sql.graft.Sq8Kernel.cosine($a, $b);
-         |if ($r == null) { ${ev.isNull} = true; } else { ${ev.value} = ((Double) $r).doubleValue(); }
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
 object Sq8Kernel {
   /** Sum of squares in exact integer arithmetic, or null for a null
     * element (null poisoning, like the HOF form). */
@@ -83,22 +51,5 @@ object Sq8Kernel {
       i += 1
     }
     java.lang.Double.valueOf(dot.toDouble / denom.doubleValue())
-  }
-}
-
-object Sq8CosineExpr {
-  /** Idempotent per-session registration: `sq8_cosine(a, b)`. */
-  def register(spark: SparkSession): Unit = {
-    val id = FunctionIdentifier("sq8_cosine")
-    if (!spark.sessionState.functionRegistry.functionExists(id)) {
-      spark.sessionState.functionRegistry.registerFunction(
-        id,
-        new ExpressionInfo(classOf[Sq8Cosine].getName, null, "sq8_cosine",
-          "cosine similarity of two int8-quantized vectors", "", "", "", "math_funcs", "4.0.0", "", "built-in"),
-        (children: Seq[Expression]) => {
-          require(children.length == 2, "sq8_cosine expects 2 arguments")
-          Sq8Cosine(children(0), children(1))
-        })
-    }
   }
 }

@@ -3,12 +3,7 @@ package org.apache.spark.sql.graft
 import java.nio.charset.StandardCharsets
 import java.security.MessageDigest
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, ImplicitCastInputTypes, Literal, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.types.{AbstractDataType, ArrayType, DataType, IntegerType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /**
@@ -36,42 +31,6 @@ import org.apache.spark.unsafe.types.UTF8String
  * Both are value-identical to their Column restatements (equivalence
  * specs in LangProfileSpec / DsirSpec).
  */
-case class CharNgrams(child: Expression, n: Int)
-  extends UnaryExpression with ImplicitCastInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def prettyName: String = "char_ngrams"
-
-  override def nullSafeEval(s: Any): Any =
-    TextGramKernel.charNgrams(s.asInstanceOf[UTF8String], n)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"org.apache.spark.sql.graft.TextGramKernel.charNgrams($c, $n)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-case class HashedGrams(child: Expression, dim: Int, maxN: Int)
-  extends UnaryExpression with ImplicitCastInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def prettyName: String = "hashed_grams"
-
-  override def nullSafeEval(s: Any): Any =
-    TextGramKernel.hashedGrams(s.asInstanceOf[UTF8String], dim, maxN)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"org.apache.spark.sql.graft.TextGramKernel.hashedGrams($c, $dim, $maxN)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object TextGramKernel {
 
   private val md5 = ThreadLocal.withInitial[MessageDigest](() => MessageDigest.getInstance("MD5"))
@@ -139,41 +98,5 @@ object TextGramKernel {
       b += 1
     }
     new GenericArrayData(out)
-  }
-}
-
-object TextGramExpr {
-  private def intLit(name: String, e: Expression): Int = e match {
-    case Literal(v: Int, IntegerType) => v
-    case _ => throw new IllegalArgumentException(
-      s"$name expects foldable integer literals")
-  }
-
-  /** Idempotent per-session registration: `char_ngrams(text, n)` and
-    * `hashed_grams(text, dim, maxN)`. */
-  def register(spark: SparkSession): Unit = {
-    val cid = FunctionIdentifier("char_ngrams")
-    if (!spark.sessionState.functionRegistry.functionExists(cid)) {
-      spark.sessionState.functionRegistry.registerFunction(
-        cid,
-        new ExpressionInfo(classOf[CharNgrams].getName, null, "char_ngrams",
-          "padded character n-grams of the normalized text", "", "", "", "string_funcs", "4.0.0", "", "built-in"),
-        (children: Seq[Expression]) => {
-          require(children.length == 2, "char_ngrams expects (text, n)")
-          CharNgrams(children(0), intLit("char_ngrams", children(1)))
-        })
-    }
-    val hid = FunctionIdentifier("hashed_grams")
-    if (!spark.sessionState.functionRegistry.functionExists(hid)) {
-      spark.sessionState.functionRegistry.registerFunction(
-        hid,
-        new ExpressionInfo(classOf[HashedGrams].getName, null, "hashed_grams",
-          "16-bit-md5 feature-hashed token gram ids", "", "", "", "hash_funcs", "4.0.0", "", "built-in"),
-        (children: Seq[Expression]) => {
-          require(children.length == 3, "hashed_grams expects (text, dim, maxN)")
-          HashedGrams(children(0),
-            intLit("hashed_grams", children(1)), intLit("hashed_grams", children(2)))
-        })
-    }
   }
 }

@@ -1,12 +1,8 @@
 package org.apache.spark.sql.graft
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, GenericInternalRow, ImplicitCastInputTypes, Literal, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.types.{AbstractDataType, ArrayType, DataType, IntegerType, LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /**
@@ -41,46 +37,6 @@ import org.apache.spark.unsafe.types.UTF8String
  * filter pushes below the relational aggregation but must run AFTER a
  * count kernel).
  */
-case class HashedGramCounts(child: Expression, dim: Int, maxN: Int)
-  extends UnaryExpression with ImplicitCastInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
-  override def dataType: DataType = ArrayType(
-    StructType(Seq(StructField("f", IntegerType, nullable = false),
-      StructField("c", LongType, nullable = false))), containsNull = false)
-  override def prettyName: String = "hashed_gram_counts"
-
-  override def nullSafeEval(s: Any): Any =
-    TokenCountKernel.hashedGramCounts(s.asInstanceOf[UTF8String], dim, maxN)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"org.apache.spark.sql.graft.TokenCountKernel.hashedGramCounts($c, $dim, $maxN)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-case class CharNgramProfile(child: Expression, n: Int, k: Int)
-  extends UnaryExpression with ImplicitCastInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
-  override def dataType: DataType = ArrayType(
-    StructType(Seq(StructField("gram", StringType, nullable = false),
-      StructField("rank_d", LongType, nullable = false))), containsNull = false)
-  override def prettyName: String = "char_ngram_profile"
-
-  override def nullSafeEval(s: Any): Any =
-    TokenCountKernel.charNgramProfile(s.asInstanceOf[UTF8String], n, k)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"org.apache.spark.sql.graft.TokenCountKernel.charNgramProfile($c, $n, $k)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object TokenCountKernel {
 
   /** Sorted run-length count of UTF8String keys → (key, count) rows.
@@ -136,42 +92,5 @@ object TokenCountKernel {
     i = 0
     while (i < take) { out(i) = rows2(rle(i)._1, (i + 1).toLong); i += 1 }
     new GenericArrayData(out)
-  }
-}
-
-object TokenCountExpr {
-  private def intLit(name: String, e: Expression): Int = e match {
-    case Literal(v: Int, IntegerType) => v
-    case _ => throw new IllegalArgumentException(
-      s"$name expects foldable integer literals")
-  }
-
-  /** Idempotent per-session registration:
-    * `hashed_gram_counts(text, dim, maxN)`, `char_ngram_profile(text, n, k)`. */
-  def register(spark: SparkSession): Unit = {
-    val hid = FunctionIdentifier("hashed_gram_counts")
-    if (!spark.sessionState.functionRegistry.functionExists(hid)) {
-      spark.sessionState.functionRegistry.registerFunction(
-        hid,
-        new ExpressionInfo(classOf[HashedGramCounts].getName, null, "hashed_gram_counts",
-          "per-document counts of 16-bit-md5 feature-hashed token grams", "", "", "", "hash_funcs", "4.0.0", "", "built-in"),
-        (children: Seq[Expression]) => {
-          require(children.length == 3, "hashed_gram_counts expects (text, dim, maxN)")
-          HashedGramCounts(children(0),
-            intLit("hashed_gram_counts", children(1)), intLit("hashed_gram_counts", children(2)))
-        })
-    }
-    val pid = FunctionIdentifier("char_ngram_profile")
-    if (!spark.sessionState.functionRegistry.functionExists(pid)) {
-      spark.sessionState.functionRegistry.registerFunction(
-        pid,
-        new ExpressionInfo(classOf[CharNgramProfile].getName, null, "char_ngram_profile",
-          "per-document top-k character n-gram rank profile", "", "", "", "string_funcs", "4.0.0", "", "built-in"),
-        (children: Seq[Expression]) => {
-          require(children.length == 3, "char_ngram_profile expects (text, n, k)")
-          CharNgramProfile(children(0),
-            intLit("char_ngram_profile", children(1)), intLit("char_ngram_profile", children(2)))
-        })
-    }
   }
 }

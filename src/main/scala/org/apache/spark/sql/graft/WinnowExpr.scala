@@ -1,12 +1,7 @@
 package org.apache.spark.sql.graft
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, GenericInternalRow, ImplicitCastInputTypes, Literal, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{AbstractDataType, ArrayType, DataType, IntegerType, LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /**
@@ -18,28 +13,14 @@ import org.apache.spark.unsafe.types.UTF8String
  * 0-based k-gram positions, consecutive duplicate selections collapsed —
  * value-identical to the column form (equivalence-fuzzed) and the DuckDB
  * `q_winnow` oracle.
+ *
+ * `kgram_hashes(text, k)` exposes the pre-winnowing rolling-hash pass on its
+ * own: `array<long>`, one 31-bit polynomial hash per 0-based k-gram position
+ * of the normalized text, O(n) per doc. This is the scan kernel of exact
+ * duplicate-substring detection ([[graft.textanalysis.SubstringDup]]):
+ * per-position md5 of substrings costs O(n·k) digest work per doc; this
+ * reuses each previous hash.
  */
-case class WinnowFingerprints(child: Expression, k: Int, w: Int)
-  extends UnaryExpression with ImplicitCastInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
-  override def dataType: DataType = ArrayType(
-    StructType(Seq(StructField("pos", IntegerType, nullable = false),
-                   StructField("h", LongType, nullable = false))),
-    containsNull = false)
-  override def prettyName: String = "winnow_fingerprints"
-
-  override def nullSafeEval(s: Any): Any =
-    WinnowKernel.fingerprints(s.asInstanceOf[UTF8String], k, w)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"org.apache.spark.sql.graft.WinnowKernel.fingerprints($c, $k, $w)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object WinnowKernel {
   private val P31 = 2147483647L // 2^31 - 1
 
@@ -122,67 +103,5 @@ object WinnowKernel {
       }
     }
     new GenericArrayData(out.toArray)
-  }
-}
-
-/**
- * Native full k-gram hash sequence — the pre-winnowing rolling-hash pass
- * exposed on its own: `array<long>`, one 31-bit polynomial hash per 0-based
- * k-gram position of the normalized text, O(n) per doc. This is the scan
- * kernel of exact duplicate-substring detection
- * ([[graft.textanalysis.SubstringDup]]): per-position md5 of substrings
- * costs O(n·k) digest work per doc; this reuses each previous hash.
- */
-case class KgramHashes(child: Expression, k: Int)
-  extends UnaryExpression with ImplicitCastInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "kgram_hashes"
-
-  override def nullSafeEval(s: Any): Any =
-    WinnowKernel.kgramHashes(s.asInstanceOf[UTF8String], k)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"org.apache.spark.sql.graft.WinnowKernel.kgramHashes($c, $k)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-object WinnowExpr {
-  private def intLit(e: Expression): Int = e match {
-    case Literal(v: Int, IntegerType) => v
-    case _ => throw new IllegalArgumentException(
-      "winnow_fingerprints expects foldable integer literals for k/w")
-  }
-
-  /** Idempotent per-session registration: `winnow_fingerprints(text, k, w)`
-    * and `kgram_hashes(text, k)`. */
-  def register(spark: SparkSession): Unit = {
-    val id = FunctionIdentifier("winnow_fingerprints")
-    if (!spark.sessionState.functionRegistry.functionExists(id)) {
-      spark.sessionState.functionRegistry.registerFunction(
-        id,
-        new ExpressionInfo(classOf[WinnowFingerprints].getName, null, "winnow_fingerprints",
-          "Winnowing k-gram fingerprints (SWA'03)", "", "", "", "hash_funcs", "4.0.0", "", "built-in"),
-        (children: Seq[Expression]) => {
-          require(children.length == 3, "winnow_fingerprints expects (text, k, w)")
-          WinnowFingerprints(children(0), intLit(children(1)), intLit(children(2)))
-        })
-    }
-    val kid = FunctionIdentifier("kgram_hashes")
-    if (!spark.sessionState.functionRegistry.functionExists(kid)) {
-      spark.sessionState.functionRegistry.registerFunction(
-        kid,
-        new ExpressionInfo(classOf[KgramHashes].getName, null, "kgram_hashes",
-          "rolling 31-bit polynomial k-gram hashes of the normalized text",
-          "", "", "", "hash_funcs", "4.0.0", "", "built-in"),
-        (children: Seq[Expression]) => {
-          require(children.length == 2, "kgram_hashes expects (text, k)")
-          KgramHashes(children(0), intLit(children(1)))
-        })
-    }
   }
 }

@@ -85,7 +85,7 @@ class CheckpointEquivalenceSpec extends SparkSpec {
   /** Witness state rows: the per-bucket `(doc_id, offset)` inner join. */
   private def witnessRows(docs: DataFrame, spansCol: String, clean: DataFrame,
                           cleanSpansCol: String, c: Corrector): Map[Int, (Long, Double, Long)] = {
-    org.apache.spark.sql.graft.DamerauLevenshteinExpr.register(spark)
+    org.apache.spark.sql.graft.NativeFunctions.register(spark)
     val cleanSpans = CP.explodeSpans(clean, cleanSpansCol)
       .filter(col("kind") === Span.KindText)
       .select(col("doc_id"), col("offset"), col("text").as("text_clean"))

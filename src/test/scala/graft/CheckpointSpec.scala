@@ -217,7 +217,7 @@ class CheckpointSpec extends SparkSpec {
   }
 
   test("per-bucket metrics: native dl_distance column ≡ kernel, no ScalaUDF in the plan") {
-    org.apache.spark.sql.graft.DamerauLevenshteinExpr.register(spark)
+    org.apache.spark.sql.graft.NativeFunctions.register(spark)
     val df = Seq(
       ("abc", "abc"), ("abcd", "abdc"), ("kitten", "sitting"),
       ("", "x"), ("x", ""), ("", ""), ("héllo😀", "hello😀"))

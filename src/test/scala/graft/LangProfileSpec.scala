@@ -60,7 +60,7 @@ class LangProfileSpec extends AnyFunSuite {
     assert(fresh.toSeq == viaDisk.toSeq)
   }
   test("char_ngrams kernel ≡ pure-Column trigram builder") {
-    org.apache.spark.sql.graft.TextGramExpr.register(spark)
+    org.apache.spark.sql.graft.NativeFunctions.register(spark)
     val edge = Seq(
       (0L, ""), (1L, "   "), (2L, "ab"), (3L, "abc"), (4L, "two words"),
       (5L, "\tTAB  and\n\nNEWLINES  here"), (6L, "ЖУРНАЛ Русский Текст"),
@@ -75,7 +75,7 @@ class LangProfileSpec extends AnyFunSuite {
   }
 
   test("char_ngram_profile kernel doc profiles ≡ windowed witness") {
-    org.apache.spark.sql.graft.TokenCountExpr.register(spark)
+    org.apache.spark.sql.graft.NativeFunctions.register(spark)
     val edge = Seq(
       (0L, ""), (1L, "   "), (2L, "ab"), (3L, "abc"), (4L, "two words"),
       (5L, "\tTAB  and\n\nNEWLINES  here"), (6L, "ЖУРНАЛ Русский Текст"),

@@ -227,7 +227,7 @@ class PqSpec extends AnyFunSuite {
     assert(kernel.toSeq == witness.toSeq)
   }
   test("pq_adc_sim: codes from a mismatched codebook score null like the witness, never throw") {
-    org.apache.spark.sql.graft.PqAdcExpr.register(spark)
+    org.apache.spark.sql.graft.NativeFunctions.register(spark)
     // the scorer's codebook: m = 2, ksub = 4 → 8 LUT entries per table
     val n2 = typedLit(Seq.tabulate(8)(i => 1.0 + i))
     val lut8 = Seq.tabulate(8)(i => 0.5 * i)
