@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.correct.{DictionaryCorrector, NoisyChannelCorrector, NoisyChannelModel, NullCorrector}
+import graft.correct.{Corrector, DictionaryCorrector, NoisyChannelCorrector, NoisyChannelModel, NullCorrector}
 import graft.pipeline.CheckpointedRun
 
 /**
@@ -885,6 +885,8 @@ object RunPipeline {
     val cleanSpansCol = getOr("clean-spans-col", if (clean == input) spansCol else "spans")
     val fmt = getOr("input-format", "parquet")
     val correctorName = getOr("corrector", "noisy")
+    require(Set("noisy", "dictionary", "null")(correctorName),
+      s"unknown --corrector $correctorName (noisy|dictionary|null)")
     val minFreq = getOr("min-freq", "2").toLong
     val vocab = get("vocab")
     val nBuckets = getOr("buckets", "64").toInt
@@ -940,14 +942,26 @@ object RunPipeline {
     val stageToken = java.security.MessageDigest.getInstance("MD5")
       .digest(staged.mkString("|").getBytes("UTF-8"))
       .take(4).map("%02x".format(_)).mkString
-    val lineage = (staged ++ Seq(s"corrector=$correctorName", s"minFreq=$minFreq",
-      s"vocab=${vocab.getOrElse("")}", s"buckets=$nBuckets", s"groupSize=$groupSize") ++
+    /** What every committed bucket's rows derive from besides the bucket
+      * count, which CheckpointedRun adds: the staged rows, the corrector and
+      * its vocabulary. The state rows record it, and a resume under another
+      * one is refused. */
+    val bucketLineage = (staged ++ Seq(s"corrector=$correctorName", s"minFreq=$minFreq",
+      s"vocab=${vocab.getOrElse("")}")).mkString(" ")
+    /** Every flag the run's output derives from: [[bucketLineage]], the
+      * bucket count, and the flags a resume may change because they touch no
+      * committed row: the group size, and the export tail, which its own
+      * `_spec` marker rebuilds. */
+    val lineage = (Seq(bucketLineage, s"buckets=$nBuckets", s"groupSize=$groupSize") ++
       exportSpec).mkString(" ")
 
     private val unread = (a.keySet -- read).toSeq.sorted
     require(unread.isEmpty, "unknown flag, or a modifier without its stage: " +
       unread.map("--" + _).mkString(" "))
   }
+
+  /** The name of the pre-curation doc count observed on the staging write. */
+  private val DocsInPre = "graft_docs_in_pre"
 
   /** The submitted job, factored from [[main]] so tests drive it with their
     * own session. Returns the JSON metrics line. */
@@ -956,7 +970,11 @@ object RunPipeline {
     import flags._
 
     val t0 = System.nanoTime()
-    val docs0 = graft.sources.CorpusIO.readDocs(spark, input, fmt, spansCol)
+    val raw = graft.sources.CorpusIO.readDocs(spark, input, fmt, spansCol)
+    // docs_in_pre rides the staging write when a curation stage drops docs:
+    // every read of the input in the staging plan counts the same rows
+    val dropsDocs = stages.exists(_.stage.dropsDocs)
+    val docs0 = if (dropsDocs) raw.observe(DocsInPre, count(lit(1))) else raw
     // each prefix of the chain is that stage's surviving population
     val curated = curate(docs0)
     val docs = curated.last
@@ -976,9 +994,11 @@ object RunPipeline {
                       piiScrubDocs(cleanDocs0, cleanSpansCol)
                     else cleanDocs0
 
-    val corrector = correctorName match {
-      case "null" => NullCorrector
-      case "dictionary" | "noisy" =>
+    // built by CheckpointedRun beside the staging write, and only when work
+    // remains: a no-op resume trains no vocabulary
+    def corrector: Corrector =
+      if (correctorName == "null") NullCorrector
+      else {
         val vocabDf = vocab
           .map(spark.read.parquet(_))
           .getOrElse(DictionaryCorrector.trainVocab(cleanDocs, cleanSpansCol, splitFilter = None))
@@ -987,8 +1007,7 @@ object RunPipeline {
         else
           new NoisyChannelCorrector(
             NoisyChannelModel.fromVocabDf(spark, vocabDf.filter(col("freq") >= minFreq), minFreq))
-      case other => sys.error(s"unknown --corrector $other (noisy|dictionary|null)")
-    }
+      }
 
     // docs_in is observed on the staging write inside the timed run (or
     // counted off a committed stage a resume reuses); a post-run
@@ -1003,16 +1022,18 @@ object RunPipeline {
     var summary = CheckpointedRun.Summary(None, graft.model.CerMetrics(0L, 0L, 0.0))
     val m = CheckpointedRun.run(spark, docs, cleanDocs, corrector, output, state, runId,
       spansCol = spansCol, nBuckets = nBuckets, groupSize = groupSize,
-      lineage = lineage, cleanSpansCol = cleanSpansCol,
+      lineage = bucketLineage, cleanSpansCol = cleanSpansCol,
       stageToken = stageToken, onSummary = s => summary = s)
     val docsIn = summary.docsIn
-    // pre-curation count: a footer-metadata parquet count of the raw input
-    // (no curation plan attached); skipped entirely on a no-op resume, and
-    // equal to docs_in by definition when no curation step is active
+    // pre-curation count: observed on the staging write, or, when a resume
+    // reused a committed stage, a footer-metadata parquet count of the raw
+    // input (no curation plan attached); skipped entirely on a no-op resume,
+    // and equal to docs_in by definition when no curation step drops docs
     val docsInPre: Option[Long] =
       if (docsIn.isEmpty) None
-      else if (!stages.exists(_.stage.dropsDocs)) docsIn
-      else Some(docs0.count())
+      else if (!dropsDocs) docsIn
+      else summary.stageObserved.map(_.get(DocsInPre).fold(0L)(_.getLong(0)))
+        .orElse(Some(raw.count()))
     // training-export tail: strictly after every bucket is committed (it
     // reads the corrected output table), inside the timed run
     val exportStatus: Option[String] =

@@ -104,6 +104,4 @@ final class DictionaryModel(
     if (toks.length == 1 && toks(0).isEmpty) ""
     else toks.map(inferToken).mkString(" ")
   }
-
-  def withMinFrequency(mf: Long): DictionaryModel = new DictionaryModel(vocab, mf)
 }

@@ -47,11 +47,6 @@ object Dedup {
   /** 128-bit content fingerprint of the normalized text (hex string). */
   def fingerprint(c: Column): Column = md5(normalizeText(c))
 
-  /** Stable 60-bit hash of a string + integer seed, oracle-reproducible:
-    * first 15 hex chars of md5("<s>:<seed>") as a long. */
-  def seededHash(c: Column, seed: Int): Column =
-    conv(substring(md5(concat(c, lit(":" + seed))), 1, 15), 16, 10).cast("long")
-
   /**
    * Exact deduplication groups: one row per distinct normalized text with the
    * canonical survivor (min doc_id) and the group size. `n_docs > 1` rows are

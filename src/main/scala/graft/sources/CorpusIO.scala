@@ -1,6 +1,10 @@
 package graft.sources
 
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetReadSupport, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -115,11 +119,45 @@ object CorpusIO {
       StructField("media_ref", StringType),
       StructField("offset", IntegerType)))))))
 
+  /** The data schema Spark's parquet inference gives `path` with
+    * `mergeSchema` off, read on the driver from the same single footer: the
+    * first data file in path order, hidden files and `_`-prefixed names
+    * skipped as Spark's file index skips them. As Spark does, the Spark
+    * schema the writer stored in the footer wins, else the parquet schema
+    * is converted under the session's settings. Spark's inference reads
+    * that footer inside a one-task job; this reads it with no job. None
+    * when the path does not exist or holds no data file, or the stored
+    * schema does not parse, so Spark's own read takes over. Partition
+    * columns are not in the footer: Spark's file index discovers them from
+    * the directory names either way. */
+  private def parquetFooterSchema(spark: SparkSession, path: String): Option[StructType] = {
+    val conf = spark.sessionState.newHadoopConf()
+    val root = new Path(path)
+    val fs = root.getFileSystem(conf)
+    def hidden(name: String) = (name.startsWith("_") && !name.contains("=")) || name.startsWith(".")
+    def leaves(st: FileStatus): Seq[FileStatus] =
+      if (!st.isDirectory) Seq(st)
+      else fs.listStatus(st.getPath).toSeq.filterNot(c => hidden(c.getPath.getName)).flatMap(leaves)
+    if (!fs.exists(root)) None
+    else leaves(fs.getFileStatus(root)).sortBy(_.getPath.toString).headOption.flatMap { first =>
+      val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(first, conf))
+      val meta = try reader.getFooter.getFileMetaData finally reader.close()
+      Option(meta.getKeyValueMetaData.get(ParquetReadSupport.SPARK_METADATA_KEY)) match {
+        case Some(json) => scala.util.Try(DataType.fromJson(json)).toOption.collect {
+          case st: StructType => st
+        }
+        case None => Some(new ParquetToSparkSchemaConverter(spark.sessionState.conf).convert(meta.getSchema))
+      }
+    }
+  }
+
   /** Scan an interleaved-docs table, asserting the contract — `doc_id`
     * plus a spans column that is an `array<struct<...kind, text...>>` —
     * STRUCTURALLY, before anything downstream dereferences span fields
     * (a name-only check would let a scalar `spans` column fail later with
-    * an opaque AnalysisException deep in the pipeline). */
+    * an opaque AnalysisException deep in the pipeline). A parquet table is
+    * read with the schema of one footer read on the driver
+    * ([[parquetFooterSchema]]), so the scan submits no schema-inference job. */
   def readDocs(spark: SparkSession, path: String, format: String = "parquet",
                spansCol: String = "spans"): DataFrame = {
     require(Set("parquet", "orc", "jsonl")(format), s"unsupported docs format: $format")
@@ -128,9 +166,12 @@ object CorpusIO {
     // cost a full extra pass over 100 TB and silently widen offset to
     // int64; columns beyond the contract are deliberately not carried
     // across this boundary (use parquet/orc for engine-internal tables)
-    val df = if (format == "jsonl")
-      spark.read.schema(docsJsonSchema(spansCol)).json(path)
-    else spark.read.format(format).load(path)
+    val df = format match {
+      case "jsonl" => spark.read.schema(docsJsonSchema(spansCol)).json(path)
+      case "parquet" =>
+        parquetFooterSchema(spark, path).fold(spark.read.parquet(path))(spark.read.schema(_).parquet(path))
+      case _ => spark.read.format(format).load(path)
+    }
     require(df.columns.contains("doc_id") && df.columns.contains(spansCol),
       s"docs table at $path must have (doc_id, $spansCol), got ${df.columns.mkString(",")}")
     import org.apache.spark.sql.types.{ArrayType, StructType}

@@ -322,23 +322,6 @@ object StreamingOps {
       .select(col("user_id"), col("session_window.start").as("session_start"),
         col("session_window.end").as("session_end"), col("n_events"), col("sum_value"))
 
-  /** Windowed per-language document counts with a watermark — the standard
-    * streaming aggregation shape (tumbling event-time window). */
-  def docRates(docs: DataFrame, tsCol: String, langCol: String,
-               window: String = "1 minute", watermark: String = "5 minutes"): DataFrame =
-    docs
-      .withWatermark(tsCol, watermark)
-      .groupBy(col(langCol), org.apache.spark.sql.functions.window(col(tsCol), window))
-      .agg(count(lit(1)).as("n_docs"))
-      .select(col(langCol), col("window.start").as("window_start"), col("n_docs"))
-
-  /** Streaming ingest quality gate: per-doc quality score and repetition
-    * signals (the Gopher family), keeping rows with `quality >= minQuality`
-    * and `dup_token_ratio <= maxDupTokenRatio`. Every signal is a NARROW
-    * scan-side expression (the `repetition_signals` codegen'd kernel plus
-    * the quality Column family) — stateless, shuffle-free, identical
-    * semantics on batch and streaming frames, so the same call is the batch
-    * backfill filter. */
   /** Cross-batch Bloom dedup at the STREAM boundary: drop arriving docs
     * whose normalized-text fingerprint hits a static corpus sketch
     * ([[graft.dedup.Bloom]] — "already shipped in an earlier batch").
@@ -415,6 +398,13 @@ object StreamingOps {
     }
   }
 
+  /** Streaming ingest quality gate: per-doc quality score and repetition
+    * signals (the Gopher family), keeping rows with `quality >= minQuality`
+    * and `dup_token_ratio <= maxDupTokenRatio`. Every signal is a NARROW
+    * scan-side expression (the `repetition_signals` codegen'd kernel plus
+    * the quality Column family) — stateless, shuffle-free, identical
+    * semantics on batch and streaming frames, so the same call is the batch
+    * backfill filter. */
   def qualityGate(docs: DataFrame, textCol: String = "text",
                   minQuality: Double = 0.3,
                   maxDupTokenRatio: Double = 0.6): DataFrame =

@@ -22,9 +22,6 @@ object TextFunctions {
   def tokenize(c: Column): Column =
     filter(split(trim(c), "\\s+"), t => length(t) > 0)
 
-  /** F7 — `" ".join(tokens)`. */
-  def joinTokens(c: Column): Column = array_join(c, " ")
-
   /** A1/S4 — distinct characters of a text column, one row per char.
     * `split(text, "")` yields per-code-point pieces in Spark 4. */
   def distinctChars(df: DataFrame, textCol: String): DataFrame =

@@ -77,9 +77,6 @@ object TextAnalysis {
     when(size(toks) === 0, 0.0)
       .otherwise(aggregate(toks, lit(0L), (a, t) => a + length(t)).cast("double") / size(toks))
 
-  /** Mean whitespace-token length in characters (0 for empty text). */
-  def meanTokenLen(text: Column): Column = meanTokenLenOf(wsTokens(text))
-
   /** Composite quality from already-computed components (see [[qualityScore]]). */
   def qualityFrom(nTokens: Column, alpha: Column, stopr: Column, punct: Column): Column = {
     val lenScore = least(nTokens.cast("double") / 100.0, lit(1.0))

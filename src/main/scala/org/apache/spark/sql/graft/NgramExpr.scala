@@ -20,7 +20,8 @@ import org.apache.spark.unsafe.types.UTF8String
  *    `array<string>` column, for callers that materialize the token array
  *    once and derive several gram orders from it (the LmScore single-pass
  *    shape). Tokens are used as given (no re-normalization, no empty-token
- *    filter).
+ *    filter), except that a null element is skipped as if absent:
+ *    `array_ngrams(["a", null, "b"], 2)` is `["a b"]`.
  *  - `token_segments(text, width)` — consecutive NON-overlapping
  *    `width`-token segments of the normalized text (the
  *    [[graft.dedup.LineDedup]] unit builder): space-joined groups, last
@@ -93,10 +94,12 @@ object NgramKernel {
   }
 
   def arrayNgrams(arr: ArrayData, n: Int): GenericArrayData = {
-    val m = arr.numElements()
-    val toks = new Array[String](m)
+    val toks = Array.newBuilder[String]
     var i = 0
-    while (i < m) { toks(i) = arr.getUTF8String(i).toString; i += 1 }
-    grams(toks, n)
+    while (i < arr.numElements()) {
+      if (!arr.isNullAt(i)) toks += arr.getUTF8String(i).toString
+      i += 1
+    }
+    grams(toks.result(), n)
   }
 }

@@ -19,7 +19,7 @@ class CheckpointSpec extends SparkSpec {
 
   // default stage token for runs over `docs` (clean side eq input side)
   private def stagingOf(out: String, n: Int) =
-    s"$out.staging-v2-b$n-${CheckpointedRun.defaultStageToken(docs, docs, "noisy_spans", "spans")}"
+    s"$out.${CheckpointedRun.StageLayout}-b$n-${CheckpointedRun.defaultStageToken(docs, docs, "noisy_spans", "spans")}"
 
   test("clean run: all buckets committed, output covers every doc, metrics match direct pipeline") {
     val (out, state) = freshDirs()
@@ -127,8 +127,7 @@ class CheckpointSpec extends SparkSpec {
     val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
     assert(!fs.exists(new org.apache.hadoop.fs.Path(stagingOf(out, 4))),
       "completed run left its stage behind")
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(
-      s"$out/.staging-v2-b4-${CheckpointedRun.defaultStageToken(docs, docs, "noisy_spans", "spans")}")),
+    assert(!fs.exists(new org.apache.hadoop.fs.Path(stagingOf(s"$out/", 4))),
       "stage nested inside the output dir")
     assert(spark.read.parquet(out).select("doc_id").distinct().count() == 250)
   }
@@ -279,7 +278,7 @@ class CheckpointSpec extends SparkSpec {
     assert(CheckpointedRun.doneBuckets(spark, state, "e") == (0 until 4).toSet)
   }
 
-  test("a fresh one-group run submits exactly three Spark jobs: stage, group, state") {
+  test("a fresh one-group run submits exactly three Spark jobs: stage exchange, stage write, group") {
     val (out, state) = freshDirs()
     val small = DocGen.docs(spark, 60).toDF()
     val jobs = new java.util.concurrent.atomic.AtomicInteger()
@@ -295,8 +294,139 @@ class CheckpointSpec extends SparkSpec {
         nBuckets = 4, groupSize = 4)
       org.apache.spark.ListenerDrain(spark.sparkContext)
     } finally spark.sparkContext.removeSparkListener(listener)
-    // a re-introduced count, regroup or state re-read shows up here
+    // a re-introduced count, regroup, state write or state re-read shows up here
     assert(jobs.get == 3, s"${jobs.get} jobs")
+  }
+
+  test("a resume under the same run id with another lineage fails before it writes a row") {
+    val (out, state) = freshDirs()
+    intercept[CheckpointedRun.KilledException] {
+      CheckpointedRun.run(spark, docs, docs, NullCorrector, out, state, "lin",
+        nBuckets = 8, groupSize = 4, failAfterGroups = Some(1))
+    }
+    val rowsAfterKill = spark.read.parquet(out).count()
+    def refused(nBuckets: Int, lineage: String): String =
+      intercept[IllegalStateException] {
+        CheckpointedRun.run(spark, docs, docs, NullCorrector, out, state, "lin",
+          nBuckets = nBuckets, groupSize = 4, lineage = lineage)
+      }.getMessage
+    // another bucketing: the done buckets 0-3 of 8 hold other docs than
+    // buckets 0-3 of 16, so reusing them duplicates some docs and loses others
+    val e = refused(16, "")
+    assert(e.contains(s"'${CheckpointedRun.StageLayout} buckets=8'") &&
+      e.contains(s"'${CheckpointedRun.StageLayout} buckets=16'") && e.contains("--run-id"), e)
+    // another corrector, model or curation: the caller's lineage differs
+    assert(refused(8, "corrector=dictionary").contains("buckets=8 corrector=dictionary"))
+    assert(spark.read.parquet(out).count() == rowsAfterKill, "a refused resume wrote rows")
+    assert(CheckpointedRun.doneBuckets(spark, state, "lin") == (0 until 4).toSet)
+    // the same lineage resumes, and the output covers every doc once
+    CheckpointedRun.run(spark, docs, docs, NullCorrector, out, state, "lin",
+      nBuckets = 8, groupSize = 4)
+    val written = spark.read.parquet(out)
+    assert(written.count() == 250 && written.select("doc_id").distinct().count() == 250)
+  }
+
+  test("a corrector that fails to build fails the run with its own exception and leaves no thread") {
+    import scala.jdk.CollectionConverters._
+    val (out, state) = freshDirs()
+    val e = intercept[IllegalStateException] {
+      CheckpointedRun.run(spark, docs, docs, throw new IllegalStateException("no vocabulary"),
+        out, state, "nocorrector", nBuckets = 4, groupSize = 4)
+    }
+    assert(e.getMessage == "no vocabulary")
+    assert(CheckpointedRun.doneBuckets(spark, state, "nocorrector").isEmpty)
+    assert(!Thread.getAllStackTraces.keySet.asScala.exists(t => t.getName == "graft-beside" && t.isAlive))
+  }
+
+  test("a resume that reuses the committed stage reports the staged docs, and says it did not stage") {
+    val (out, state) = freshDirs()
+    intercept[CheckpointedRun.KilledException] {
+      CheckpointedRun.run(spark, docs, docs, NullCorrector, out, state, "reuse",
+        nBuckets = 4, groupSize = 2, failAfterGroups = Some(1))
+    }
+    var summary: Option[CheckpointedRun.Summary] = None
+    CheckpointedRun.run(spark, docs, docs, NullCorrector, out, state, "reuse",
+      nBuckets = 4, groupSize = 2, onSummary = s => summary = Some(s))
+    assert(summary.map(s => (s.docsIn, s.stageObserved)).contains((Some(250L), None)), s"$summary")
+  }
+
+  test("a bucketed run writes one staged and one output file per bucket split, " +
+    "and its staging plan moves each table's spans through one exchange") {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.command.DataWritingCommandExec
+    import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    import org.apache.spark.sql.types.{ArrayType, StructType}
+    val helper = new AdaptiveSparkPlanHelper {}
+    val base = Files.createTempDirectory("ckpt_layout").toFile.getCanonicalPath
+    val (inDir, cleanDir) = (s"$base/in", s"$base/clean")
+    docs.select(col("doc_id"), col("noisy_spans")).repartition(8).write.parquet(inDir)
+    docs.select(col("doc_id"), col("spans")).repartition(8).write.parquet(cleanDir)
+    val in = spark.read.parquet(inDir)
+    val clean = spark.read.parquet(cleanDir)
+    assert(in.rdd.getNumPartitions >= 4 && clean.rdd.getNumPartitions >= 4)
+    val (out, state) = (s"$base/out", s"$base/state")
+    val nBuckets = 4
+    val s = math.max(1, (spark.conf.get("spark.sql.shuffle.partitions").toInt + nBuckets - 1) / nBuckets)
+
+    val writes = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+    val qel = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        if (helper.find(qe.executedPlan) {
+          case w: DataWritingCommandExec => w.cmd match {
+            case i: InsertIntoHadoopFsRelationCommand => i.outputPath.getName.contains(".staging-")
+            case _ => false
+          }
+          case _ => false
+        }.nonEmpty) writes.add(qe)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    val broadcast = "spark.sql.autoBroadcastJoinThreshold"
+    val broadcastWas = spark.conf.get(broadcast)
+    org.apache.spark.ListenerDrain(spark.sparkContext)
+    spark.listenerManager.register(qel)
+    spark.conf.set(broadcast, "-1")
+    try {
+      intercept[CheckpointedRun.KilledException] {
+        CheckpointedRun.run(spark, in, clean, NullCorrector, out, state, "layout",
+          nBuckets = nBuckets, groupSize = 2, failAfterGroups = Some(1))
+      }
+      org.apache.spark.ListenerDrain(spark.sparkContext)
+    } finally {
+      spark.conf.set(broadcast, broadcastWas)
+      spark.listenerManager.unregister(qel)
+    }
+    def parts(dir: String): Int = {
+      val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
+      val it = fs.listFiles(new org.apache.hadoop.fs.Path(dir), true)
+      var n = 0
+      while (it.hasNext) if (it.next().getPath.getName.startsWith("part-")) n += 1
+      n
+    }
+    val stagingDir = new java.io.File(base).listFiles.map(_.getPath).filter(_.contains(".staging-")).toSeq
+    assert(stagingDir.size == 1, stagingDir)
+    // every bucket holds docs, so each bucket split writes one file
+    assert(parts(stagingDir.head) == nBuckets * s, s"staged files of ${stagingDir.head}")
+    CheckpointedRun.run(spark, in, clean, NullCorrector, out, state, "layout",
+      nBuckets = nBuckets, groupSize = 2)
+    assert(parts(out) == nBuckets * s, "output files")
+
+    assert(writes.size == 1, s"${writes.size} staging writes")
+    val plan = writes.peek().executedPlan
+    def carriesSpans(p: SparkPlan) = p.output.exists(_.dataType match {
+      case ArrayType(_: StructType, _) => true
+      case _ => false
+    })
+    def reads(p: SparkPlan, dir: String) = helper.collectWithSubqueries(p) {
+      case f: FileSourceScanExec
+        if f.relation.location.rootPaths.exists(_.toUri.getPath.stripSuffix("/") == dir) => f
+    }.nonEmpty
+    val exchanges = helper.collectWithSubqueries(plan) { case e: ShuffleExchangeLike => e }
+    for (dir <- Seq(inDir, cleanDir)) {
+      val moving = exchanges.filter(e => carriesSpans(e) && reads(e, dir))
+      assert(moving.size == 1, s"${moving.size} span-carrying exchanges over $dir:\n$plan")
+    }
   }
 
   test("a null-text text span comes out null under the noisy and the dictionary corrector") {

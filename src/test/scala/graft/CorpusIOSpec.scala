@@ -171,4 +171,56 @@ class CorpusIOSpec extends SparkSpec {
     assert(q.collect().map(r => (r.getString(0), r.getLong(1))).toMap ==
       Map(Span.KindText -> 2L, Span.KindMedia -> 1L))
   }
+
+  test("a parquet readDocs infers no schema in a job, keeps the contract messages and the partitions") {
+    import graft.model.{Doc, Span}
+    val docs = Seq(Doc("d0", Seq(Span(Span.KindText, "hello", "", 0))),
+      Doc("d1", Seq(Span(Span.KindMedia, "", "m1", 0))))
+    val path = tmp("footer")
+    docs.toDS().repartition(2).write.parquet(path)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    org.apache.spark.ListenerDrain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    val read = try {
+      val df = CorpusIO.readDocs(spark, path)
+      org.apache.spark.ListenerDrain(spark.sparkContext)
+      df
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(jobs.get == 0, s"${jobs.get} jobs to read the schema")
+    assert(read.schema == spark.read.parquet(path).schema)
+    assert(read.as[Doc].collect().sortBy(_.doc_id).toSeq == docs)
+
+    // each contract violation fails with the message it always had
+    def violation(df: org.apache.spark.sql.DataFrame, message: String): Unit = {
+      val bad = tmp("contract")
+      df.write.parquet(bad)
+      val e = intercept[IllegalArgumentException](CorpusIO.readDocs(spark, bad))
+      assert(e.getMessage.contains(s"docs table at $bad") && e.getMessage.contains(message),
+        e.getMessage)
+    }
+    val spans = docs.toDS().toDF()
+    violation(spans.drop("doc_id"), "must have (doc_id, spans), got spans")
+    violation(spans.drop("spans"), "must have (doc_id, spans), got doc_id")
+    violation(Seq(("d0", 1)).toDF("doc_id", "spans"),
+      "column spans must be array<struct<kind, text, ...>>, got int")
+    violation(Seq(("d0", Seq("a", "b"))).toDF("doc_id", "spans"),
+      "column spans must be array<struct<kind, text, ...>>, got array<string>")
+
+    // a partitioned layout: the partition column comes back where Spark's
+    // inference puts it, with its type, and a filter on it prunes directories
+    val parted = tmp("footerparts")
+    CorpusIO.writeDocs(spans.withColumn("part", lit(7)).union(
+      spans.withColumn("part", lit(8))), parted, partCols = Seq("part"))
+    val back = CorpusIO.readDocs(spark, parted)
+    assert(back.schema == spark.read.parquet(parted).schema, back.schema.treeString)
+    val q = back.filter(col("part") === 8)
+    assert(q.queryExecution.executedPlan.toString.contains("PartitionFilters: [isnotnull(part"),
+      q.queryExecution.executedPlan.toString)
+    assert(q.count() == 2)
+  }
 }

@@ -864,4 +864,40 @@ class RunPipelineSpec extends SparkSpec {
     }
     assert(e.getMessage.contains("--pack requires --shards"))
   }
+
+  test("docs_in_pre rides the staging write: dedup's self-join and span dedup's join-back count each row once") {
+    val base = Files.createTempDirectory("runpipeline_pre").toString
+    val docs = DocGen.docs(spark, 60).toDF().select(col("doc_id"), col("noisy_spans").as("spans"))
+    // 10 exact copies under new ids, and a boilerplate span in every doc
+    val boiler = struct(lit("text").as("kind"),
+      lit("read more about our newsletter and the latest offers today").as("text"),
+      lit("").as("media_ref"), lit(100).as("offset"))
+    docs.unionByName(docs.limit(10).withColumn("doc_id", concat(col("doc_id"), lit("_copy"))))
+      .withColumn("spans", concat(col("spans"), array(boiler)))
+      .repartition(3).write.parquet(s"$base/in")
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    def run(): String = RunPipeline.run(spark, Map(
+      "input" -> s"$base/in", "output" -> s"$base/out", "corrector" -> "noisy",
+      "dedup" -> "exact", "span-dedup" -> "5", "buckets" -> "4", "group-size" -> "4"))
+    val out = run()
+    assert(out.contains(""""docs_in_pre":70"""), out)
+    assert(out.contains(""""docs_in":60"""), out)
+    assert(out.contains(""""docs_removed":10"""), out)
+    // a no-op resume: the state read is its one job; it builds no corrector,
+    // so no vocabulary job
+    org.apache.spark.ListenerDrain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    val again = try {
+      val line = run()
+      org.apache.spark.ListenerDrain(spark.sparkContext)
+      line
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(again.contains(""""docs_in_pre":null"""), again)
+    assert(jobs.get == 1, s"${jobs.get} jobs in a no-op resume")
+  }
 }

@@ -166,7 +166,7 @@ class SingleBranchCurationSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     collectWithSubqueries(plan) { case u: UnionExec => u }.size
 
   test("a curated staging write scans the input at most 4 times, unions nothing, " +
-    "and runs one task per input split") {
+    "and runs one task per bucket split") {
     val base = Files.createTempDirectory("single_branch_plan").toString
     val input = new java.io.File(s"$base/in").getCanonicalPath
     // every sixth doc ends in the same boilerplate span, so span dedup cuts
@@ -244,6 +244,7 @@ class SingleBranchCurationSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     assert(scansOf(plan, input) <= 4, s"${scansOf(plan, input)} scans of the input:\n$plan")
     val staging = jobs.toArray(Array.empty[(String, Int)]).filter(_._1 == stagingExec.get)
     assert(staging.nonEmpty, s"no job ran under the staging write's execution ${stagingExec.get}")
-    assert(staging.last._2 == splits, s"staging job ran ${staging.last._2} tasks on $splits splits")
+    // 8 buckets × ⌈4 shuffle partitions / 8⌉ exchange partitions per bucket
+    assert(staging.last._2 == 8, s"staging job ran ${staging.last._2} tasks on $splits splits")
   }
 }

@@ -230,4 +230,43 @@ class NativeFunctionsSpec extends graft.SparkSpec {
       }
     }
   }
+
+  test("an out-of-range parameter fails at analysis naming the function and the argument") {
+    NativeFunctions.register(spark)
+    val df = fixture
+    def fails(name: String, args: Seq[Any], position: Int): Unit = {
+      val e = intercept[IllegalArgumentException](df.select(call(name, args)))
+      assert(e.getMessage.contains(name) && e.getMessage.contains(s"argument $position"),
+        e.getMessage)
+    }
+    // the calls that aborted the task with a division by zero or gave garbage
+    fails("span_corrupt", Seq(col("id"), col("a"), 30000, 0), 4)
+    fails("hashed_grams", Seq(col("a"), 0, 2), 2)
+    fails("hashed_gram_counts", Seq(col("a"), 0, 2), 2)
+    fails("token_ngrams", Seq(col("a"), 0), 2)
+    // every int parameter has a range: one past either end fails, and each
+    // end that is not the int limit itself runs
+    val byName = NativeFunctions.table.map(f => f.name -> f).toMap
+    calls.groupBy(_._1).values.map(_.head).foreach { case (name, args) =>
+      byName(name).params.foreach { case (i, p) =>
+        assert(args(i).isInstanceOf[Int] == (p.dataType == IntegerType), s"$name argument ${i + 1}")
+        if (p.dataType == IntegerType) {
+          assert(p.min > Int.MinValue, s"$name argument ${i + 1} has no lower bound")
+          fails(name, args.updated(i, p.min - 1), i + 1)
+          if (p.max < Int.MaxValue) fails(name, args.updated(i, p.max + 1), i + 1)
+          val ends = Seq(p.min, p.max).filter(_ < Int.MaxValue)
+          ends.foreach(v => assert(df.select(call(name, args.updated(i, v))).collect().length == rows.size))
+        }
+      }
+    }
+  }
+
+  test("array_ngrams skips a null element instead of failing the task") {
+    NativeFunctions.register(spark)
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(Seq(Row(Seq("a", null, "b"))), 1),
+      StructType(Seq(StructField("toks", ArrayType(StringType)))))
+    assert(df.select(call("array_ngrams", Seq(col("toks"), 2))).head().getSeq[String](0) == Seq("a b"))
+    assert(df.select(call("array_ngrams", Seq(col("toks"), 1))).head().getSeq[String](0) ==
+      Seq("a", "b"))
+  }
 }
