@@ -108,8 +108,8 @@ object NativeFunctions {
     val k = Kernel(name, obj.getClass, method, args, dataType, returnNullable, onNull)
     val byPosition = params.zipWithIndex.map { case (p, i) => (args.size + i) -> p }.toMap
     node[KernelCall](name, args.size + params.size, usage, byPosition) { (cs, p) =>
-      KernelCall(k, cs.take(args.size), params.zipWithIndex.map { case (prm, i) =>
-        p(args.size + i) match {
+      KernelCall(k, cs.take(args.size), byPosition.toSeq.sortBy(_._1).map { case (i, prm) =>
+        p(i) match {
           case s: UTF8String => Literal(s.toString, ObjectType(classOf[String]))
           case v => Literal(v, prm.dataType)
         }
