@@ -85,7 +85,7 @@ object Bench {
       pages.count()
       clean.count() // clean extraction doubles as vocab source + CER truth
       val vocab = DictionaryCorrector.trainVocab(clean, "spans", splitFilter = None)
-      val model = NoisyChannelModel.fromVocabDf(spark, vocab.filter("freq >= 2"), 2)
+      val model = NoisyChannelModel.fromVocabDf(spark, vocab, 2)
       val corrector = new NoisyChannelCorrector(model)
       val (_, sec) = time {
         val extracted = graft.extract.Extract.extractDocs(pages)

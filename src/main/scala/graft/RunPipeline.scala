@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.correct.{Corrector, DictionaryCorrector, NoisyChannelCorrector, NoisyChannelModel, NullCorrector}
+import graft.correct.{Corrector, DictionaryCorrector, MemoCorrector, NoisyChannelModel, NullCorrector}
 import graft.pipeline.CheckpointedRun
 
 /**
@@ -594,15 +594,10 @@ object RunPipeline {
         .select(col("doc_id"), col("offset"), col("text").as(as))
     val noisySp = textSpans(docs0, spansCol, "__tn")
     val cleanSp = textSpans(cleanAll, if (clean == input) spansCol else cleanSpansCol, "__tc")
-    // reference normalized distance: dist / codepoints(clean), empty-truth
-    // guard, exact-equality shortcut (skips the DP kernel)
-    val norm = when(col("__tn") === col("__tc"), lit(0.0))
-      .otherwise(when(length(col("__tc")) === 0, lit(1.0))
-        .otherwise(call_function("dl_distance", col("__tn"), col("__tc")).cast("double") /
-          length(col("__tc"))))
     val perDoc = noisySp.join(cleanSp, Seq("doc_id", "offset"))
       .groupBy(col("doc_id"))
-      .agg(sum(norm).as("__d"), count(lit(1)).as("__s"),
+      .agg(sum(CheckpointedRun.normalizedDistCol(col("__tn"), col("__tc"))).as("__d"),
+        count(lit(1)).as("__s"),
         sum((col("__tn") === col("__tc")).cast("long")).as("__p"))
       .localCheckpoint()
     val telemetered = ("input" -> docs0) +: stages.zip(curated.tail).collect {
@@ -890,7 +885,9 @@ object RunPipeline {
     val minFreq = getOr("min-freq", "2").toLong
     val vocab = get("vocab")
     val nBuckets = getOr("buckets", "64").toInt
+    require(nBuckets >= 1, s"--buckets needs N>=1, got $nBuckets")
     val groupSize = getOr("group-size", "8").toInt
+    require(groupSize >= 1, s"--group-size needs N>=1, got $groupSize")
     /** The active curation rows, in curation order. */
     val stages: Seq[ActiveStage] = curationTable(spansCol, fmt).flatMap(s =>
       s.parse(new StageFlags(s.flags, get)).map { case (spec, f) => ActiveStage(s, spec, f) })
@@ -904,7 +901,9 @@ object RunPipeline {
     val stageTelemetry = get("stage-telemetry").exists(_.toBoolean)
 
     val shards = get("shards").map(parseShardsSpec)
+    shards.foreach { case (n, _) => require(n >= 1, s"--shards needs N>=1, got $n") }
     val pack = get("pack").map(_.toInt)
+    pack.foreach(p => require(p >= 1, s"--pack needs seqLen>=1, got $p"))
     val corrupt = get("span-corrupt").map(parseCorruptSpec)
     val bpeEncode = get("bpe-encode")
     // n[:maxWords] — train a BPE merge table over the corrected corpus
@@ -923,8 +922,9 @@ object RunPipeline {
     // string id — undefined order, so fail loudly
     require(pack.isEmpty || shards.nonEmpty,
       "--pack requires --shards (sequences pack per shard, in shard-pos order)")
-    /** The export tail's active flags: the lineage suffix, the `_spec`
-      * marker and whether the tail runs at all (a pack implies shards). */
+    /** The export tail's active flags: its `_spec` marker and whether the
+      * tail runs at all (a pack implies shards). A resume may change them:
+      * they touch no committed row. */
     val exportSpec: Seq[String] = Seq(
       shards.map { case (n, seed) => s"shards=$n:$seed" },
       pack.map(p => s"pack=$p"),
@@ -948,12 +948,6 @@ object RunPipeline {
       * one is refused. */
     val bucketLineage = (staged ++ Seq(s"corrector=$correctorName", s"minFreq=$minFreq",
       s"vocab=${vocab.getOrElse("")}")).mkString(" ")
-    /** Every flag the run's output derives from: [[bucketLineage]], the
-      * bucket count, and the flags a resume may change because they touch no
-      * committed row: the group size, and the export tail, which its own
-      * `_spec` marker rebuilds. */
-    val lineage = (Seq(bucketLineage, s"buckets=$nBuckets", s"groupSize=$groupSize") ++
-      exportSpec).mkString(" ")
 
     private val unread = (a.keySet -- read).toSeq.sorted
     require(unread.isEmpty, "unknown flag, or a modifier without its stage: " +
@@ -1002,11 +996,9 @@ object RunPipeline {
         val vocabDf = vocab
           .map(spark.read.parquet(_))
           .getOrElse(DictionaryCorrector.trainVocab(cleanDocs, cleanSpansCol, splitFilter = None))
-        if (correctorName == "dictionary")
-          DictionaryCorrector.corrector(DictionaryCorrector.buildModel(spark, vocabDf, minFreq))
-        else
-          new NoisyChannelCorrector(
-            NoisyChannelModel.fromVocabDf(spark, vocabDf.filter(col("freq") >= minFreq), minFreq))
+        new MemoCorrector(
+          if (correctorName == "dictionary") DictionaryCorrector.buildModel(spark, vocabDf, minFreq)
+          else NoisyChannelModel.fromVocabDf(spark, vocabDf, minFreq))
       }
 
     // docs_in is observed on the staging write inside the timed run (or

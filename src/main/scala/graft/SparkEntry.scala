@@ -85,8 +85,7 @@ object SparkEntry {
     try {
       clean.count()
       val vocab = DictionaryCorrector.trainVocab(clean, "spans", splitFilter = None)
-      val model = graft.correct.NoisyChannelModel.fromVocabDf(
-        spark, vocab.filter(col("freq") >= 2), minFrequency = 2)
+      val model = graft.correct.NoisyChannelModel.fromVocabDf(spark, vocab, minFrequency = 2)
       val noisy = graft.gen.NoiseChannel.noiseDocs(
         graft.extract.Extract.extractDocs(pages))
       val out = CorrectionPipeline.run(

@@ -1,16 +1,19 @@
 package graft.correct
 
-import graft.model.{Span, SpanRow}
+import graft.model.Span
 
 /**
- * Correction kernel contract: a pure, serializable per-partition transform
- * over flattened span rows. Text spans may be rewritten; media spans MUST
- * pass through untouched (driver contract P7, BASELINE.json north_rule).
+ * Correction kernel contract: a pure, serializable text transform that
+ * [[correctDocs]] applies to the text spans of docs. Text spans may be
+ * rewritten; media spans MUST pass through untouched (driver contract P7,
+ * BASELINE.json north_rule).
  *
  * This is the Spark analog of the reference's model-inference slot —
  * `ray.put(model)` + per-sentence tasks (`dictionary_corrector.py:126-153`)
- * and the DataLoader-batched `model.correct(batch)` (`eval.py:36-48`) — as a
- * single `mapPartitions` kernel over a broadcast model (SURVEY.md §2.10 U3/U4).
+ * and the DataLoader-batched `model.correct(batch)` (`eval.py:36-48`) — run
+ * inside `mapPartitions` over a broadcast model (SURVEY.md §2.10 U3/U4). The
+ * production correctors are the one [[MemoCorrector]] over a broadcast
+ * [[TokenModel]].
  */
 trait Corrector extends Serializable {
 
@@ -27,9 +30,10 @@ trait Corrector extends Serializable {
     * media untouched, span order kept. Texts go through the BATCHED hook
     * ([[correctTexts]]) across a bounded group of docs, so a kernel that
     * amortizes per-batch setup (broadcast trie probe, neural decode) gets
-    * real batches, not one call per span. The one doc-level batching loop:
-    * streaming (`StreamingOps.correctDocs`) and the checkpointed batch run
-    * both call it, over their own doc types. */
+    * real batches, not one call per span. The one batching loop: streaming
+    * (`StreamingOps.correctDocs`), the checkpointed batch run and the
+    * explode form (`CorrectionPipeline.correct`, one span row per "doc")
+    * all call it, over their own row types. */
   final def correctDocs[D](docs: Iterator[D], spansOf: D => Seq[Span],
                            withSpans: (D, Seq[Span]) => D): Iterator[D] =
     docs.grouped(256).flatMap { group => // bounded: ~256 docs of text per batch
@@ -50,32 +54,6 @@ trait Corrector extends Serializable {
         }
       }
     }
-
-  /** Partition transform: text spans through the kernel, media untouched.
-    * One narrow pass — no filter/union split, no second scan. */
-  final def correctPartition(rows: Iterator[SpanRow]): Iterator[SpanRow] = {
-    // Batch text spans through correctTexts while streaming media rows in
-    // order. Grouped to bound memory on pathological partitions.
-    rows.grouped(1024).flatMap { group =>
-      val textIdx = group.iterator.zipWithIndex.collect {
-        case (r, i) if r.kind == Span.KindText => i
-      }.toArray
-      if (textIdx.isEmpty) group
-      else {
-        val corrected = correctTexts(textIdx.iterator.map(i => group(i).text)).toArray
-        require(corrected.length == textIdx.length,
-          s"corrector returned ${corrected.length} outputs for ${textIdx.length} inputs")
-        val out = group.toArray
-        var k = 0
-        while (k < textIdx.length) {
-          val i = textIdx(k)
-          out(i) = out(i).copy(text = corrected(k))
-          k += 1
-        }
-        out
-      }
-    }
-  }
 }
 
 /** Identity corrector — the reference's null-corrector control

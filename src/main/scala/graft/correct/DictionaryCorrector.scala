@@ -1,9 +1,9 @@
 package graft.correct
 
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.model.{Span, SpanRow}
+import graft.model.Span
 
 /**
  * Spark-native dictionary corrector (reference:
@@ -14,16 +14,12 @@ import graft.model.{Span, SpanRow}
  * reference prunes for exactly this reason, :64-76) and broadcast, the Spark
  * analog of `ray.put(self)` shared memory (:126).
  *
- * Three correction paths, equivalence-tested against each other:
- *  1. [[BroadcastDictionaryCorrector]] — mapPartitions kernel with per-
- *     partition memoization (the production fast path; Zipf token reuse makes
- *     the memo hit rate very high).
- *  2. [[correctTokensViaMap]] — distinct-token dataflow: correct each distinct
- *     OOV token ONCE cluster-wide, then join the mapping back. At 100 TB the
- *     kernel cost collapses from O(corpus tokens) to O(distinct tokens); the
- *     extra shuffles are on the (small) token dimension.
- *  3. [[correctTokensRelational]] — pure relational broadcast-join + min_by
- *     argmin, the oracle-checkable path (SURVEY.md §2.3 J3).
+ * Two correction paths, equivalence-tested against each other:
+ *  - [[corrector]] — the one memoized [[MemoCorrector]] over the broadcast
+ *    [[DictionaryModel]], the path production runs (Zipf token reuse makes
+ *    the executor-wide memo's hit rate very high);
+ *  - [[correctTokensRelational]] — pure relational broadcast-join + min_by
+ *    argmin, the oracle-checkable witness (SURVEY.md §2.3 J3).
  */
 object DictionaryCorrector {
 
@@ -42,67 +38,13 @@ object DictionaryCorrector {
   }
 
   /** Collect + broadcast the (pruned) vocabulary as a kernel model. */
-  def buildModel(spark: SparkSession, vocabDf: DataFrame, minFrequency: Long): Broadcast[DictionaryModel] = {
-    val vocab = vocabDf
-      .filter(col("freq") >= minFrequency)
-      .collect()
-      .map(r => (r.getString(0), r.getLong(1)))
-      .toMap
-    spark.sparkContext.broadcast(new DictionaryModel(vocab, minFrequency))
-  }
+  def buildModel(spark: SparkSession, vocabDf: DataFrame, minFrequency: Long): Broadcast[DictionaryModel] =
+    TokenModel.broadcast(spark, vocabDf, minFrequency)(new DictionaryModel(_, minFrequency))
 
-  /** Path 1: broadcast kernel with executor-wide memoization (one memo per
-    * deserialized model instance = per executor JVM, shared across tasks). */
-  final class BroadcastDictionaryCorrector(bc: Broadcast[DictionaryModel]) extends Corrector {
-    override def correctTexts(texts: Iterator[String]): Iterator[String] = {
-      val model = bc.value
-      texts.map(Memo.correctSentence(_, model.memo, model.inferToken))
-    }
-    override def correctText(text: String): String = bc.value.inferSentence(text)
-  }
-
-  def corrector(bc: Broadcast[DictionaryModel]): Corrector = new BroadcastDictionaryCorrector(bc)
-
-  /** Path 2 building block: distinct tokens → corrected mapping, each
-    * distinct token inferred exactly once cluster-wide. */
-  def tokenMap(tokens: Dataset[String], bc: Broadcast[DictionaryModel]): DataFrame = {
-    val spark = tokens.sparkSession
-    import spark.implicits._
-    tokens.distinct()
-      .mapPartitions { it => val m = bc.value; it.map(t => (t, m.inferToken(t))) }
-      .toDF("token", "corrected")
-  }
-
-  /** Path 2: correct text spans via the distinct-token mapping. Empty/blank
-    * text spans and media spans pass through untouched. */
-  def correctSpansViaTokenMap(spans: Dataset[SpanRow], bc: Broadcast[DictionaryModel]): Dataset[SpanRow] = {
-    val spark = spans.sparkSession
-    import spark.implicits._
-    val text = spans.filter(col("kind") === Span.KindText)
-    val exploded = text
-      .select(col("doc_id"), col("offset"),
-        posexplode(split(trim(col("text")), "\\s+")).as(Seq("pos", "token")))
-      .filter(length(col("token")) > 0)
-    val mapping = tokenMap(exploded.select(col("token")).as[String], bc)
-    val correctedSentences = exploded
-      .join(mapping, Seq("token"))
-      .groupBy(col("doc_id"), col("offset"))
-      .agg(array_join(transform(
-        sort_array(collect_list(struct(col("pos"), col("corrected")))),
-        s => s("corrected")), " ").as("corrected_text"))
-    val correctedText = text
-      .join(correctedSentences, Seq("doc_id", "offset"), "left")
-      .select(col("doc_id"), col("offset"), col("kind"),
-        // blank spans produced no tokens → keep "" (reference joins zero tokens to "")
-        coalesce(col("corrected_text"),
-          when(length(trim(col("text"))) === 0, lit("")).otherwise(col("text"))).as("text"),
-        col("media_ref"))
-      .as[SpanRow]
-    correctedText.unionByName(spans.filter(col("kind") =!= Span.KindText))
-  }
+  def corrector(bc: Broadcast[DictionaryModel]): Corrector = new MemoCorrector(bc)
 
   /**
-   * Path 3 (oracle): relational nearest-word over distinct tokens — broadcast
+   * The oracle path: relational nearest-word over distinct tokens — broadcast
    * theta join on the length-band predicate + `min_by` argmin with the full
    * deterministic tie-break (dist asc, freq desc, token asc).
    *

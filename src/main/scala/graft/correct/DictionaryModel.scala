@@ -27,7 +27,7 @@ import graft.text.DamerauLevenshtein
  */
 final class DictionaryModel(
     val vocab: Map[String, Long],
-    val minFrequency: Long) extends Serializable {
+    val minFrequency: Long) extends TokenModel {
 
   /** Length-bucketed candidates (code-point length), sorted by token so the
     * in-bucket scan meets ties in deterministic ascending-token order. */
@@ -41,7 +41,6 @@ final class DictionaryModel(
   @transient private lazy val maxLen: Int =
     if (byLength.isEmpty) 0 else byLength.keys.max
 
-  /** Executor-wide inference memo (see NoisyChannelModel.memo). */
   @transient lazy val memo = new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   def isEmpty: Boolean = !vocab.exists(_._2 >= minFrequency)
@@ -95,13 +94,5 @@ final class DictionaryModel(
       gap += 1
     }
     if (bestToken == null) token else bestToken
-  }
-
-  /** Sentence inference — reference `__call__` (:100-106): whitespace
-    * tokenize (strip + split), correct per token, join with single spaces. */
-  def inferSentence(text: String): String = {
-    val toks = text.trim.split("\\s+")
-    if (toks.length == 1 && toks(0).isEmpty) ""
-    else toks.map(inferToken).mkString(" ")
   }
 }

@@ -27,7 +27,7 @@ object DictionarySweep {
                limit: Option[Int]): CerMetrics = {
     import spark.implicits._
     val sample = limit.fold(pairs)(n => pairs.limit(n))
-    val c = new DictionaryCorrector.BroadcastDictionaryCorrector(model)
+    val c = DictionaryCorrector.corrector(model)
     sample.select(col("text_noisy"), col("text_clean")).as[(String, String)]
       .mapPartitions { it =>
         val rows = it.toArray

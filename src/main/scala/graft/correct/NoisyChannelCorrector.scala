@@ -16,20 +16,20 @@ import graft.gen.NoiseChannel
  * candidate search bounds the candidate space exactly, so instead of
  * beam-pruning an unbounded decode we score every candidate within edit
  * range with the exact weighted alignment DP — a strictly stronger search at
- * the same asymptotic cost. Search widens progressively (maxDist = 1, 2, ..,
- * maxWidth) and stops at the first radius with candidates: nearly all OCR
- * errors sit at distance 1-2.
+ * the same asymptotic cost. Search widens progressively (maxDist = 1, 2,
+ * then [[NoisyChannelModel.MaxWidth]] = 3) and stops at the first radius
+ * with candidates: nearly all OCR errors sit at distance 1-2.
  *
  * Which path serves which search:
- *  - widths 1 to 3 (up to `maxWidth`) for tokens of at most 64 code points:
+ *  - widths 1 to 3 for tokens of at most 64 code points:
  *    the symmetric-delete [[DeleteIndex]], exact by construction (see its
  *    scaladoc), so its candidate set equals the trie walk's;
- *  - tokens over 64 code points, widths above [[DeleteIndex.MaxRadius]],
- *    and vocabularies whose index would exceed [[DeleteIndex.Budget]]
- *    (2^24 entries, counted before building): the [[TokenTrie]] walk;
+ *  - tokens over 64 code points, and vocabularies whose index would exceed
+ *    [[DeleteIndex.Budget]] (2^24 entries, counted before building): the
+ *    [[TokenTrie]] walk;
  *  - the split hypothesis: one forward and one reversed trie walk
  *    ([[TokenTrie.prefixNeighborhoods]]);
- *  - no candidate within `maxWidth` and no split: the nearest-word scan of
+ *  - no candidate within width 3 and no split: the nearest-word scan of
  *    [[DictionaryModel]].
  * Every candidate set is selected by the full (score, word) order, so the
  * source of the set cannot change the winner.
@@ -37,8 +37,7 @@ import graft.gen.NoiseChannel
 final class NoisyChannelModel(
     val vocab: Map[String, Long],
     val minFrequency: Long,
-    goodCharsCount: Int,
-    maxWidth: Int = 3) extends Serializable {
+    goodCharsCount: Int) extends TokenModel {
 
   import NoisyChannelModel._
 
@@ -48,7 +47,7 @@ final class NoisyChannelModel(
   /** Built on the executor like the trie, never broadcast; None over
     * [[DeleteIndex.Budget]]. */
   @transient private[graft] lazy val index: Option[DeleteIndex] =
-    DeleteIndex.build(pruned, math.min(maxWidth, DeleteIndex.MaxRadius))
+    DeleteIndex.build(pruned, MaxWidth)
   /** Code-point-reversed vocabulary trie (round 7): suffix neighborhoods of
     * a token are prefix neighborhoods of its reversal — OSA distance is
     * reversal-invariant (an edit script read right-to-left is a valid
@@ -61,15 +60,6 @@ final class NoisyChannelModel(
   @transient private lazy val fallback: DictionaryModel =
     new DictionaryModel(vocab, minFrequency)
 
-  /** Executor-wide inference memo. The broadcast deserializes ONE model
-    * instance per executor JVM, so attaching the cache here (instead of one
-    * HashMap per partition) lets every task on the executor reuse corrections
-    * — the Zipf head is shared across partitions, and throughput no longer
-    * degrades as partition count grows (which would silently tax scaling
-    * efficiency at 4N parallelism). Inserts stop at [[Memo.Cap]]: corrupted
-    * OCR tokens are near-unique, so an unbounded map would grow with the data
-    * (executor OOM at 100 TB); the Zipf head that carries the hit rate is
-    * captured long before the cap. */
   @transient lazy val memo = new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   // per-op log weights of the generative channel
@@ -257,7 +247,7 @@ final class NoisyChannelModel(
     if (pruned.isEmpty) return token
     if (contains(token)) return token // exact hit (reference fast path :80)
     var width = 1
-    while (width <= math.min(2, maxWidth)) {
+    while (width < MaxWidth) {
       val b = bestWithin(token, width)
       if (b != null) return b._1
       width += 1
@@ -266,26 +256,20 @@ final class NoisyChannelModel(
     // edit 1 + the merge edit) is near-certainly right vs a 3-edit single
     // word, so the expensive width-3 searches run only when no split exists —
     // a documented decode heuristic that keeps the unresolved-token path
-    // cheap. Widths 3..maxWidth are then searched in full before the
-    // dictionary fallback.
+    // cheap. Width 3 is then searched in full before the dictionary fallback.
     val split = splitCandidate(token)
     if (split != null) split._1
     else {
-      var w = 3
-      var wide: (String, Double) = null
-      while (wide == null && w <= maxWidth) { wide = bestWithin(token, w); w += 1 }
+      val wide = bestWithin(token, MaxWidth)
       if (wide != null) wide._1 else fallback.inferToken(token)
     }
-  }
-
-  def inferSentence(text: String): String = {
-    val toks = text.trim.split("\\s+")
-    if (toks.length == 1 && toks(0).isEmpty) ""
-    else toks.map(inferToken).mkString(" ")
   }
 }
 
 object NoisyChannelModel {
+  /** The widest single-word search before the dictionary fallback. */
+  val MaxWidth = 3
+
   /** Code-point reversal (surrogate-pair safe). */
   private[correct] def reverseCp(s: String): String = {
     val cp = s.codePoints().toArray
@@ -295,20 +279,9 @@ object NoisyChannelModel {
     sb.toString
   }
 
+  /** Collect + broadcast the vocabulary, pruned at `minFrequency`, as a
+    * kernel model ([[TokenModel.broadcast]]). */
   def fromVocabDf(spark: SparkSession, vocabDf: DataFrame, minFrequency: Long,
-                  goodCharsCount: Int = graft.gen.DocGen.goodChars.length): Broadcast[NoisyChannelModel] = {
-    val vocab = vocabDf.collect().map(r => (r.getString(0), r.getLong(1))).toMap
-    spark.sparkContext.broadcast(new NoisyChannelModel(vocab, minFrequency, goodCharsCount))
-  }
-}
-
-/** Corrector wrapper with executor-wide memoization (the model's shared
-  * memo — Zipf reuse makes the hit rate high and the cache is warm across
-  * partitions). */
-final class NoisyChannelCorrector(bc: Broadcast[NoisyChannelModel]) extends Corrector {
-  override def correctTexts(texts: Iterator[String]): Iterator[String] = {
-    val model = bc.value
-    texts.map(Memo.correctSentence(_, model.memo, model.inferToken))
-  }
-  override def correctText(text: String): String = bc.value.inferSentence(text)
+                  goodCharsCount: Int = graft.gen.DocGen.goodChars.length): Broadcast[NoisyChannelModel] =
+    TokenModel.broadcast(spark, vocabDf, minFrequency)(new NoisyChannelModel(_, minFrequency, goodCharsCount))
 }

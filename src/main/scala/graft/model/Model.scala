@@ -32,6 +32,12 @@ final case class PairRow(doc_id: String, offset: Int, split: String, text_noisy:
   * eval.py:64-68, dictionary_corrector.py:154-155). */
 final case class CerMetrics(n: Long, nPerfect: Long, sumNormDist: Double) {
   def +(o: CerMetrics): CerMetrics = CerMetrics(n + o.n, nPerfect + o.nPerfect, sumNormDist + o.sumNormDist)
+  /** One more scored pair at distance `dist`
+    * (`graft.pipeline.CheckpointedRun.normalizedDist`): perfect when 0, and
+    * a row that adds to neither sum when NaN (a null side). */
+  def add(dist: Double): CerMetrics =
+    if (dist.isNaN) copy(n = n + 1)
+    else CerMetrics(n + 1, nPerfect + (if (dist == 0.0) 1 else 0), sumNormDist + dist)
   def avgDistance: Double     = if (n == 0) 0.0 else sumNormDist / n
   def percentPerfect: Double  = if (n == 0) 0.0 else nPerfect.toDouble / n
 }

@@ -3,35 +3,29 @@ package graft.pipeline
 import org.apache.spark.sql.{Encoder, Encoders, TypedColumn}
 import org.apache.spark.sql.expressions.Aggregator
 import graft.model.CerMetrics
-import graft.text.DamerauLevenshtein
 
 /**
- * One-pass CER metrics: (n, nPerfect, sumNormDist) over (out, correct) pairs
- * — the reference's avg-normalized-distance + percent-perfect accumulators
- * (`eval.py:49-68`, `dictionary_corrector.py:146-155`) as a typed Spark
- * [[Aggregator]] (SURVEY.md §2.10 U5). Exact-equality shortcut skips the DP
- * (reference F12, `eval.py:55-57`).
- *
- * Reference semantics preserved: a perfect match contributes distance 0 (the
- * reference never runs the DP for it), and empty targets are guarded (F3).
+ * One-pass CER metrics over (out, correct) pairs — the reference's
+ * avg-normalized-distance + percent-perfect accumulators (`eval.py:49-68`,
+ * `dictionary_corrector.py:146-155`) as a typed Spark [[Aggregator]]
+ * (SURVEY.md §2.10 U5). Each pair is scored by the one pair rule,
+ * [[CheckpointedRun.normalizedDist]], and added by [[CerMetrics.add]]: an
+ * exact match is distance 0 and perfect without the DP (reference F12,
+ * `eval.py:55-57`), an empty target scores 1 (F3), and a pair with a null
+ * side counts as a row that adds to neither sum.
  */
-object CerAggregator extends Aggregator[(String, String), (Long, Long, Double), CerMetrics] {
+object CerAggregator extends Aggregator[(String, String), CerMetrics, CerMetrics] {
 
-  override def zero: (Long, Long, Double) = (0L, 0L, 0.0)
+  override def zero: CerMetrics = CerMetrics(0L, 0L, 0.0)
 
-  override def reduce(b: (Long, Long, Double), row: (String, String)): (Long, Long, Double) = {
-    val (out, correct) = row
-    if (out == correct) (b._1 + 1, b._2 + 1, b._3)
-    else (b._1 + 1, b._2, b._3 + DamerauLevenshtein.normalized(out, correct))
-  }
+  override def reduce(b: CerMetrics, row: (String, String)): CerMetrics =
+    b.add(CheckpointedRun.normalizedDist(row._1, row._2))
 
-  override def merge(a: (Long, Long, Double), b: (Long, Long, Double)): (Long, Long, Double) =
-    (a._1 + b._1, a._2 + b._2, a._3 + b._3)
+  override def merge(a: CerMetrics, b: CerMetrics): CerMetrics = a + b
 
-  override def finish(b: (Long, Long, Double)): CerMetrics = CerMetrics(b._1, b._2, b._3)
+  override def finish(b: CerMetrics): CerMetrics = b
 
-  override def bufferEncoder: Encoder[(Long, Long, Double)] =
-    Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong, Encoders.scalaDouble)
+  override def bufferEncoder: Encoder[CerMetrics] = Encoders.product[CerMetrics]
 
   override def outputEncoder: Encoder[CerMetrics] = Encoders.product[CerMetrics]
 

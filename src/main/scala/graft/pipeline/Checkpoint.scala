@@ -177,23 +177,25 @@ object CheckpointedRun {
       planToken(cleanDocs.select(col("doc_id"), col(cleanSpansCol)))
 
   /** Normalized DL distance as a NATIVE column expression — the column form
-    * of [[graft.text.DamerauLevenshtein.normalized]] (same equality shortcut
-    * and empty-`clean` guard) built on the codegen'd `dl_distance`
-    * expression instead of a ScalaUDF, so per-bucket metrics stay inside the
-    * whole-stage-codegen span with no per-row serde. Requires
+    * of the pair rule [[normalizedDist]] (null where it is NaN), built on
+    * the codegen'd `dl_distance` expression instead of a ScalaUDF, so
+    * per-bucket metrics stay inside the whole-stage-codegen span with no
+    * per-row serde. Requires
     * [[org.apache.spark.sql.graft.NativeFunctions.register]]
     * (idempotent). `length()` counts code points (UTF8String.numChars),
-    * matching the kernel's codePointCount. [[run]] scores with the
-    * row-level twin [[normalizedDist]]. */
+    * matching the kernel's codePointCount. */
   def normalizedDistCol(noisy: Column, clean: Column): Column =
     when(noisy === clean, 0.0)
       .when(length(clean) === 0, 1.0) // unequal (first branch) + empty clean
       .otherwise(
         call_function("dl_distance", noisy, clean).cast("double") / length(clean))
 
-  /** [[normalizedDistCol]] on plain strings, branch for branch; NaN where the
-    * column is null (a null text on either side, unless the clean text is
-    * empty). */
+  /** The CER pair rule, and [[normalizedDistCol]] on plain strings, branch
+    * for branch: equal texts score 0 (perfect), an empty clean text 1, and
+    * NaN where the column is null (a null text on either side, unless the
+    * clean text is empty), which [[CerMetrics.add]] counts as a row that
+    * adds to neither sum. The group job, [[CerAggregator]] and the
+    * per-stage telemetry all score by it. */
   def normalizedDist(noisy: String, clean: String): Double =
     if (noisy != null && noisy == clean) 0.0
     else if (clean != null && clean.isEmpty) 1.0
@@ -312,14 +314,10 @@ object CheckpointedRun {
     override def isZero: Boolean = sums.isEmpty
     override def copy(): BucketCer = { val c = new BucketCer; c.sums ++= sums; c }
     override def reset(): Unit = sums.clear()
-    /** One pair of `bucket` scored in `partition`; NaN for a null distance,
-      * which counts as a row but adds to neither sum. */
+    /** One pair of `bucket` scored in `partition` ([[CerMetrics.add]]). */
     override def add(v: (Int, Int, Double)): Unit = {
       val (bucket, partition, dist) = v
-      val m = sums.getOrElse((bucket, partition), CerMetrics(0L, 0L, 0.0))
-      sums((bucket, partition)) =
-        if (dist.isNaN) m.copy(n = m.n + 1)
-        else CerMetrics(m.n + 1, m.nPerfect + (if (dist == 0.0) 1 else 0), m.sumNormDist + dist)
+      sums((bucket, partition)) = sums.getOrElse((bucket, partition), CerMetrics(0L, 0L, 0.0)).add(dist)
     }
     override def merge(other: AccumulatorV2[(Int, Int, Double), Map[(Int, Int), CerMetrics]]): Unit =
       other.value.foreach { case (k, m) => sums(k) = sums.get(k).fold(m)(_ + m) }
@@ -422,6 +420,8 @@ object CheckpointedRun {
           stageToken: String = "",
           failAfterGroups: Option[Int] = None,
           onSummary: Summary => Unit = _ => ()): CerMetrics = {
+    require(nBuckets >= 1, s"nBuckets must be at least 1, got $nBuckets")
+    require(groupSize >= 1, s"groupSize must be at least 1, got $groupSize")
     // normalize: stage dirs are SIBLINGS of outDir by string concatenation —
     // a trailing slash would nest them inside the output and break the
     // prefix-based cleanup sweep

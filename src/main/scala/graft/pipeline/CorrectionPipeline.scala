@@ -12,10 +12,15 @@ import graft.model._
  *    spans corrected inside each doc ([[graft.correct.Corrector.correctDocs]],
  *    media untouched) → spans sorted by [[sortSpans]] → CER scored in the
  *    same pass. Narrow: no shuffle at all.
- *  - explode → correct text spans (mapPartitions kernel) → reassemble per
- *    doc in offset order → CER join ([[run]], [[cer]]). Kept as the
- *    equivalence witness of the in-place form (CheckpointEquivalenceSpec)
- *    and for the traced benchmark run, which times these layers one by one.
+ *  - explode → correct text spans (the same [[Corrector.correctDocs]] loop,
+ *    one span row per doc) → reassemble per doc in offset order → CER join
+ *    ([[run]], [[cer]]). Kept as the equivalence witness of the in-place
+ *    form (CheckpointEquivalenceSpec) and for the traced benchmark run,
+ *    which times these layers one by one.
+ *
+ * Both forms score a pair by the one rule,
+ * [[CheckpointedRun.normalizedDist]]: equal texts 0 and perfect, an empty
+ * clean text 1, a pair with a null side a row that adds to neither sum.
  *
  * Notes on the explode form:
  *  - explode is narrow; the ONE shuffle is the reassembly groupBy(doc_id).
@@ -44,11 +49,13 @@ object CorrectionPipeline {
       .as[SpanRow]
   }
 
-  /** Run the correction kernel over the flattened spans. Narrow. */
+  /** Run the correction kernel over the flattened spans: each row goes
+    * through [[Corrector.correctDocs]] as a doc of one span. Narrow. */
   def correct(spans: Dataset[SpanRow], corrector: Corrector): Dataset[SpanRow] = {
     val spark = spans.sparkSession
     import spark.implicits._
-    spans.mapPartitions(corrector.correctPartition _)
+    spans.mapPartitions(corrector.correctDocs[SpanRow](_,
+      r => Seq(Span(r.kind, r.text, r.media_ref, r.offset)), (r, s) => r.copy(text = s.head.text)))
   }
 
   private def spanStruct(prefix: Column): Column =
@@ -126,8 +133,10 @@ object CorrectionPipeline {
 
   /**
    * CER metrics of corrected text spans vs their clean originals — the
-   * reference's evaluate() (`dictionary_corrector.py:110-155`): corrected
-   * output joined positionally to clean text (same row, no join needed).
+   * reference's evaluate() (`dictionary_corrector.py:110-155`): each
+   * corrected text span paired with every clean text span at its
+   * `(doc_id, offset)`, scored by [[CerAggregator]]. Equals the totals of a
+   * [[CheckpointedRun.run]] over the same docs.
    */
   def cer(correctedSpans: Dataset[SpanRow], cleanDocs: DataFrame,
           cleanSpansCol: String = "spans"): CerMetrics = {

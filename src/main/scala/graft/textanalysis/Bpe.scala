@@ -20,7 +20,7 @@ import org.apache.spark.sql.functions._
  *  - [[trainMergesLocal]] (the PRODUCTION path): collect the top-`maxWords`
  *    word counts once and run the loop on the driver with incremental
  *    pair-count deltas — what real trainers do; 81× the relational loop's
- *    merges/minute on the sf0.1 corpus (tools/BpeBatchProbe), making 32k
+ *    merges/minute on the sf0.1 corpus (OPTIMIZATION_r07.md), making 32k
  *    production vocabularies seconds of driver CPU after one corpus pass.
  *  - [[trainMerges]]: fully relational for unbounded vocabularies; merges
  *    are selected in provably-sequential-equal BATCHES (up to `maxBatch`
@@ -254,7 +254,7 @@ object Bpe {
         // One checkpoint per ~12 applied merges, not per pass: the table is
         // vocabulary-sized, so recomputing a few nested folds under the next
         // pass's collect is cheaper than a materialization job per pass
-        // (measured in tools/BpeBatchProbe); 12 stays under the HOF-depth
+        // (measured, OPTIMIZATION_r07.md); 12 stays under the HOF-depth
         // regime encodeWords already uses (chunk 16).
         unCheckpointed += kept.length
         if (unCheckpointed >= 12) { sym = sym.localCheckpoint(); unCheckpointed = 0 }
@@ -370,7 +370,7 @@ object Bpe {
     * table travels as two `array<string>` plan literals (one object each),
     * so a 32k-merge vocabulary is one scan-side pass instead of
     * [[encodeWordsFold]]'s ~2,000 sequential materializations of the
-    * distinct-word table (measured in tools/BpeEncodeProbe; bit-equal
+    * distinct-word table (measured, OPTIMIZATION_r07.md; bit-equal
     * fuzz-asserted in BpeSpec at 1/16/1k merges). */
   def encodeWords(words: DataFrame, merges: Seq[(String, String)]): DataFrame = {
     org.apache.spark.sql.graft.NativeFunctions.register(words.sparkSession)

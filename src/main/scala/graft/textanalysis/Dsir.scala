@@ -116,7 +116,7 @@ object Dsir {
     // ft feeds the raw-model agg AND the term join, so the plan rebuilds
     // the tokenize→gram-explode→hash-agg chain once per consumer. An
     // explicit localCheckpoint of ft was MEASURED SLOWER at sf0.1 (q_dsir
-    // 2.22 → 2.96 s best-of-3, tools/QueryProbe): unlike LmScore's token
+    // 2.22 → 2.96 s best-of-3, OPTIMIZATION_r07.md): unlike LmScore's token
     // arrays, the (id, f, c) surface is ~docs × distinct-features rows and
     // materializing it costs more than the narrow codegen'd rebuild —
     // recompute is the measured trade (see measure-before-materialize)

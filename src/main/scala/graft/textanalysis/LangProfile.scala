@@ -57,7 +57,7 @@ object LangProfile {
   // the lang profiles from a per-(doc, lang, gram) count table (one explode
   // feeding both profile families) was MEASURED SLOWER at sf0.1 than the
   // plain classify(train(...)) composition (5.64-5.71 s vs 4.68 s
-  // best-of-3, tools/QueryProbe, with and without checkpointing the shared
+  // best-of-3, OPTIMIZATION_r07.md, with and without checkpointing the shared
   // table): the finer (doc, gram) key defeats the map-side partial combine
   // that collapses the (lang, gram) aggregation inside each partition, and
   // for trigrams the intermediate is nearly explode-sized. Two independent

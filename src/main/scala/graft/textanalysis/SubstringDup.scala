@@ -37,7 +37,7 @@ import org.apache.spark.sql.functions._
  * BIG side stream from the scan (no materialization), and the df cap is the
  * same knob the provenance join already exposes.
  *
- * Measured cost anatomy at sf0.1 (tools/KgramCardProbe + SubstrBreakdown,
+ * Measured cost anatomy at sf0.1 (OPTIMIZATION_r07.md,
  * round 5, anti-join cap shape, best-of-3 warm): the corpus is
  * pathologically dense — 1.45M k-gram positions over only 13,005 distinct
  * hashes, 98% of them cross-doc-shared — and the df-64 cap removes the
@@ -178,7 +178,7 @@ object SubstringDup {
     * the islands machinery. A qualifying run needs >= minLen-k+1
     * CONSECUTIVE positions on its diagonal, so a diagonal whose TOTAL
     * match count is under that can emit nothing — and measured at sf0.1
-    * (tools/DiagProbe) only 190 of 1,848,339 diagonal groups (7,424 of
+    * (OPTIMIZATION_r07.md) only 190 of 1,848,339 diagonal groups (7,424 of
     * 2,271,394 match rows) survive. The count window shares the islands
     * window's exchange and group-delimiting sort (same partition keys),
     * so the filter costs one streaming pass; what it buys is the expensive
@@ -225,7 +225,7 @@ object SubstringDup {
    * slightly different cut surface than the plain form's dense-only cap;
    * with no hot hashes the two forms are output-identical (spec-asserted).
    *
-   * MEASURED at sf0.1 (tools/SubstrProbe, anti-join cap shape): 4.25 s vs
+   * MEASURED at sf0.1 (OPTIMIZATION_r07.md, anti-join cap shape): 4.25 s vs
    * the plain form's 3.20 s — at bench scale the candidate index costs more
    * than it saves
    * because the df cap already leaves ~0 qualifying pairs, so the plain
@@ -285,7 +285,7 @@ object SubstringDup {
    * POST-FILTER islands output — a few rows per genuinely-overlapping pair,
    * tiny at any scale — so materializing it once is strictly cheaper than
    * re-running the whole hash-join+window pipeline for the second consumer
-   * (MEASURED at sf0.1, tools/SubstrProbe, anti-join cap shape: combined
+   * (MEASURED at sf0.1, OPTIMIZATION_r07.md, anti-join cap shape: combined
    * 3.38 s vs 5.85 s for the two queries run separately — 1.7×; re-measured
    * per the round-4 note since the join-shape fix could have flipped the
    * trade). Returns (pairs, intervals) with

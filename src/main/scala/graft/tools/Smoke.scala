@@ -22,7 +22,7 @@ object Smoke {
 
     val pairs = graft.gen.DocGen.pairs(spark, n)
     val scored = pairs.map { p =>
-      (p.split, graft.text.DamerauLevenshtein.normalized(p.text_noisy, p.text_clean),
+      (p.split, graft.pipeline.CheckpointedRun.normalizedDist(p.text_noisy, p.text_clean),
         if (p.text_noisy == p.text_clean) 1L else 0L)
     }.toDF("split", "dist", "perfect")
     scored.groupBy($"split")

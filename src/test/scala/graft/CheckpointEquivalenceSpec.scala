@@ -138,6 +138,16 @@ class CheckpointEquivalenceSpec extends SparkSpec {
     assertEquivalent(docs, docs, "noisy", "truth", ZzCorrector)
   }
 
+  test("fixture: CorrectionPipeline.cer over the explode form ≡ the run's totals") {
+    val base = Files.createTempDirectory("ckpt-cer").toString
+    val clean = cleanTable
+    val m = CheckpointedRun.run(spark, docsDf, clean, ZzCorrector, s"$base/out", s"$base/state",
+      "cer", spansCol = "noisy", nBuckets = NBuckets, groupSize = 3)
+    val want = CP.cer(CP.correct(CP.explodeSpans(docsDf, "noisy"), ZzCorrector), clean)
+    assert(m.n == want.n && m.nPerfect == want.nPerfect, s"$m vs $want")
+    assert(math.abs(m.sumNormDist - want.sumNormDist) < 1e-9, s"$m vs $want")
+  }
+
   test("generated docs with the dictionary corrector: group job ≡ witness") {
     val docs = DocGen.docs(spark, 120, pathological = true).toDF()
     val bc = DictionaryCorrector.buildModel(spark, DictionaryCorrector.trainVocab(docs), 2L)

@@ -5,9 +5,10 @@ import org.apache.spark.sql.functions._
 import graft.gen.DocGen
 import graft.pipeline.Sampling
 
-/** [[RunPipeline]]'s curation table: its order, the resume fingerprint it
-  * feeds, the rejection of flags nothing reads, and the frame its fold hands
-  * to the checkpointed run. */
+/** [[RunPipeline]]'s curation table: its order, the resume fingerprints it
+  * feeds (the bucket lineage the state rows record and the stage token), the
+  * rejection of flags nothing reads, and the frame its fold hands to the
+  * checkpointed run. */
 class CurationTableSpec extends SparkSpec {
 
   private val table = RunPipeline.curationTable("spans", "parquet")
@@ -38,9 +39,11 @@ class CurationTableSpec extends SparkSpec {
     "source-mix" -> ("0.5:0.5", "0.7:0.5"),
     "mix-source-col" -> ("domain", "site"))
 
+  /** What a run persists of its flags: the bucket lineage its state rows
+    * record and its stage token. */
   private def keys(args: Map[String, String]): (String, String) = {
     val f = new RunPipeline.RunFlags(required ++ args)
-    (f.lineage, f.stageToken)
+    (f.bucketLineage, f.stageToken)
   }
 
   test("the table runs the stages in the documented curation order") {
@@ -75,11 +78,17 @@ class CurationTableSpec extends SparkSpec {
       assert(changed._1 != base._1 && changed._2 != base._2, s"--$flag")
     }
     // flags that shape the correction, not the staged rows: lineage only
-    for ((flag, v) <- Seq("vocab" -> "/m/vocab", "corrector" -> "null", "min-freq" -> "3",
-        "buckets" -> "16", "group-size" -> "2", "shards" -> "4")) {
+    for ((flag, v) <- Seq("vocab" -> "/m/vocab", "corrector" -> "null", "min-freq" -> "3")) {
       val changed = keys(all + (flag -> v))
       assert(changed._1 != base._1 && changed._2 == base._2, s"--$flag")
     }
+    // flags a resume may change: neither; the export tail's `_spec` records
+    // --shards, and CheckpointedRun stamps --buckets on every state row (its
+    // refusal is CheckpointSpec's)
+    for ((flag, v) <- Seq("group-size" -> "2", "shards" -> "4", "buckets" -> "16"))
+      assert(keys(all + (flag -> v)) == base, s"--$flag")
+    def exportSpec(args: Map[String, String]) = new RunPipeline.RunFlags(required ++ args).exportSpec
+    assert(exportSpec(all + ("shards" -> "4")) != exportSpec(all))
   }
 
   test("--decontam-format alone changes the stage token") {

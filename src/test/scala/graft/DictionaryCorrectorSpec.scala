@@ -34,6 +34,12 @@ class DictionaryCorrectorSpec extends SparkSpec {
     assert(m.inferSentence("   ") == "")
   }
 
+  test("kernel: a null text gives null under both models") {
+    val vocab = Map("the" -> 5L, "cat" -> 5L)
+    assert(new DictionaryModel(vocab, 1L).inferSentence(null) == null)
+    assert(new NoisyChannelModel(vocab, 1L, DocGen.goodChars.length).inferSentence(null) == null)
+  }
+
   private lazy val docs = DocGen.docs(spark, 400).toDF().cache()
   private lazy val vocabDf = DictionaryCorrector.trainVocab(docs).cache()
 
@@ -64,19 +70,6 @@ class DictionaryCorrectorSpec extends SparkSpec {
     assert(kernel.keySet == relational.keySet)
     val diffs = kernel.collect { case (k, v) if relational(k) != v => (k, v, relational(k)) }
     assert(diffs.isEmpty, s"paths disagree on: ${diffs.take(5)}")
-    model.destroy()
-  }
-
-  test("token-map dataflow ≡ broadcast mapPartitions kernel on spans") {
-    val model = DictionaryCorrector.buildModel(spark, vocabDf, 2L)
-    val spans = CP.explodeSpans(docs, "noisy_spans")
-    val viaKernel = CP.correct(spans, DictionaryCorrector.corrector(model))
-      .collect().map(r => ((r.doc_id, r.offset), r)).toMap
-    val viaMap = DictionaryCorrector.correctSpansViaTokenMap(spans, model)
-      .collect().map(r => ((r.doc_id, r.offset), r)).toMap
-    assert(viaKernel.keySet == viaMap.keySet)
-    val diffs = viaKernel.collect { case (k, v) if viaMap(k) != v => (k, v, viaMap(k)) }
-    assert(diffs.isEmpty, s"paths disagree on: ${diffs.take(3)}")
     model.destroy()
   }
 

@@ -62,6 +62,12 @@ class PipelineSpec extends SparkSpec {
     assert(math.abs(m.percentPerfect - 0.25) < 1e-12)
   }
 
+  test("CER aggregator: a pair with a null side is a row that adds to neither sum") {
+    val m = Seq[(String, String)](("abc", "abc"), (null, "abc")).toDS()
+      .select(CerAggregator.column).head()
+    assert(m == CerMetrics(2L, 1L, 0.0))
+  }
+
   test("e2e: null corrector CER on noisy docs ≈ channel floor; perfect on clean docs") {
     val correctedNoisy = CP.correct(CP.explodeSpans(docsDf, "noisy_spans"), NullCorrector)
     val m = CP.cer(correctedNoisy, docsDf)

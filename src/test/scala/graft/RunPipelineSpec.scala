@@ -67,6 +67,27 @@ class RunPipelineSpec extends SparkSpec {
     assert(node.get("docs_in").asLong() == 10L)
   }
 
+  test("an out-of-range run-shape flag fails before any Spark work, naming the flag") {
+    val base = Files.createTempDirectory("runpipeline-shape").toString
+    val docs = DocGen.docs(spark, 10).toDF().select(col("doc_id"), col("noisy_spans").as("spans"))
+    docs.write.parquet(s"$base/in")
+    val ok = Map("input" -> s"$base/in", "output" -> s"$base/out", "corrector" -> "null",
+      "buckets" -> "2", "group-size" -> "2", "shards" -> "2", "pack" -> "64")
+    for ((flag, v) <- Seq("buckets" -> "0", "buckets" -> "-2", "group-size" -> "0",
+        "shards" -> "0", "pack" -> "0")) {
+      val e = intercept[IllegalArgumentException](RunPipeline.run(spark, ok + (flag -> v)))
+      assert(e.getMessage.contains(s"--$flag"), e.getMessage)
+      assert(new java.io.File(base).list().toSeq == Seq("in"), s"--$flag $v left an output or a stage")
+    }
+    for ((nBuckets, groupSize, name) <- Seq((0, 1, "nBuckets"), (1, 0, "groupSize"))) {
+      val e = intercept[IllegalArgumentException](graft.pipeline.CheckpointedRun.run(spark, docs, docs,
+        graft.correct.NullCorrector, s"$base/out", s"$base/state", "shape", spansCol = "spans",
+        nBuckets = nBuckets, groupSize = groupSize))
+      assert(e.getMessage.contains(name), e.getMessage)
+    }
+    assert(new java.io.File(base).list().toSeq == Seq("in"))
+  }
+
   test("--stage-telemetry: per-stage null-CER rows match directly-computed populations") {
     import graft.model.Span
     val base = Files.createTempDirectory("runpipeline-tel").toString
