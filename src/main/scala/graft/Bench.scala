@@ -11,8 +11,10 @@ import graft.pipeline.CorrectionPipeline
  *
  *  1. Headline SparkEntry queries over `SPARK_GRAFT_SF_DIR` at
  *     `local[SPARK_GRAFT_CPUS]` (per-query wall seconds).
- *  2. The flagship correction pipeline (deterministic interleaved docs with
- *     pathological skew → noisy-channel correction → salted reassembly → CER)
+ *  2. The explode form of the correction pipeline (deterministic interleaved
+ *     docs with pathological skew → noisy-channel correction → salted
+ *     reassembly → CER; production corrects in place in each doc row,
+ *     `CheckpointedRun.run`, and is not what this times)
  *     run at TWO parallelism levels, local[N] and local[4N] (N = cpus/4) —
  *     the sandbox evidence for the north rule's cluster-scaling criterion:
  *     scaling efficiency = throughput(4N) / (4 × throughput(N)) ≥ 0.8.
@@ -72,8 +74,10 @@ object Bench {
   }
 
   /** One full pipeline run over synthetic HTML pages (pathological skew on).
-    * Timed section = the production job: main-content extraction →
-    * simulated-OCR noise → correction kernel → salted reassembly → sink.
+    * Timed section = the explode composition, not the production job
+    * (which corrects in place per doc row): main-content extraction →
+    * simulated-OCR noise → explode → correction kernel → salted
+    * reassembly → sink.
     * Input materialization, model training/broadcast (one-off at production
     * scale) and the CER evaluation job are measured separately.
     * Returns (nTextSpans, jobSec, cer, pctPerfect). */

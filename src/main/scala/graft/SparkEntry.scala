@@ -75,8 +75,9 @@ object SparkEntry {
   /** Flagship query on sf=0.001 scale: the full engine at its BEST path —
     * synthesize HTML pages, extract main content (boilerplate strip), pass
     * text spans through the simulated-OCR channel, correct with the
-    * north-star noisy-channel kernel (trie + exact channel-weighted
-    * alignment + segmentation decoding — CER ≈ 0.035 vs 0.057 for the
+    * north-star noisy-channel kernel (delete-index candidate search for
+    * single words and split sides + exact channel-weighted alignment +
+    * segmentation decoding — CER ≈ 0.035 vs 0.057 for the
     * dictionary corrector), reassemble in span order, and emit per-doc span
     * sequences. */
   def entry(spark: SparkSession): DataFrame = {

@@ -93,8 +93,10 @@ object DeleteIndex {
   val MaxRadius = 3
 
   /** Most entries an index may hold (2^24 entries, a 64 MiB entry array).
-    * A vocabulary whose [[entryCount]] is above it gets no index, and the
-    * trie serves every width. */
+    * [[build]] steps down to the largest radius whose [[entryCount]] fits
+    * it (at the bench vocabulary's word lengths about 70, 28 and 8 entries
+    * per word at radius 3, 2 and 1); a vocabulary over it even at radius 1
+    * gets no index, and the trie serves every width. */
   val Budget: Long = 1L << 24
 
   /** Exact entry count of the index over `words`: Σ_w Σ_{k <= radius} C(|w|, k)
@@ -114,12 +116,17 @@ object DeleteIndex {
     sum
   }
 
-  /** The index over `vocab`'s words at `radius` (at most [[MaxRadius]]),
-    * or None when its [[entryCount]] exceeds [[Budget]]. */
-  def build(vocab: Map[String, Long], radius: Int): Option[DeleteIndex] = {
-    require(radius >= 0 && radius <= MaxRadius, s"radius $radius")
-    val total = entryCount(vocab.keys, radius)
-    if (total > Budget) return None
+  /** The index over `vocab`'s words at the largest radius from `maxRadius`
+    * (1 to [[MaxRadius]]) down to 1 whose [[entryCount]] fits [[Budget]],
+    * or None when none does. */
+  def build(vocab: Map[String, Long], maxRadius: Int): Option[DeleteIndex] = {
+    require(maxRadius >= 1 && maxRadius <= MaxRadius, s"radius $maxRadius")
+    (maxRadius to 1 by -1).iterator
+      .map(r => (r, entryCount(vocab.keys, r)))
+      .collectFirst { case (r, total) if total <= Budget => buildAt(vocab, r, total) }
+  }
+
+  private def buildAt(vocab: Map[String, Long], radius: Int, total: Long): DeleteIndex = {
     val words = vocab.keys.filter(w => w.codePointCount(0, w.length) <= MaxToken + radius)
       .toArray.sorted
     val freqs = words.map(vocab)
@@ -149,7 +156,7 @@ object DeleteIndex {
       }
       id += 1
     }
-    Some(new DeleteIndex(words, freqs, lens, entries, bucketStart, fpBits, radius))
+    new DeleteIndex(words, freqs, lens, entries, bucketStart, fpBits, radius)
   }
 
   // Polynomial hash mod 2^64 over code points; a deletion variant's hash is

@@ -18,7 +18,8 @@ import org.apache.spark.sql.functions.col
  * the first few million distinct tokens, so "stop inserting at the cap" keeps
  * the hit rate of an LRU without its per-hit bookkeeping or contention —
  * lookups stay lock-free reads, and past the cap the kernel simply computes
- * (bounded work per token via the trie/length-band search).
+ * (bounded work per token: delete-index lookups, trie walks only for what
+ * the index does not serve, and the length-band fallback scan).
  */
 object Memo {
   /** ~1M entries ≈ tens of MB of strings — negligible vs executor heap. */

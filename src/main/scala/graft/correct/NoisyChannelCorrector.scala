@@ -20,15 +20,15 @@ import graft.gen.NoiseChannel
  * then [[NoisyChannelModel.MaxWidth]] = 3) and stops at the first radius
  * with candidates: nearly all OCR errors sit at distance 1-2.
  *
- * Which path serves which search:
- *  - widths 1 to 3 for tokens of at most 64 code points:
+ * Every neighbourhood search, single words and both sides of a split, goes
+ * through [[candidatesWithin]]:
+ *  - widths up to the index's radius for tokens of at most 64 code points:
  *    the symmetric-delete [[DeleteIndex]], exact by construction (see its
- *    scaladoc), so its candidate set equals the trie walk's;
- *  - tokens over 64 code points, and vocabularies whose index would exceed
- *    [[DeleteIndex.Budget]] (2^24 entries, counted before building): the
- *    [[TokenTrie]] walk;
- *  - the split hypothesis: one forward and one reversed trie walk
- *    ([[TokenTrie.prefixNeighborhoods]]);
+ *    scaladoc), so its candidate set equals the trie walk's. The radius is
+ *    the largest of 3, 2 and 1 whose entry count fits
+ *    [[DeleteIndex.Budget]] (2^24 entries, counted before building);
+ *  - wider searches, tokens over 64 code points, and vocabularies over the
+ *    radius-1 budget: the [[TokenTrie]] walk;
  *  - no candidate within width 3 and no split: the nearest-word scan of
  *    [[DictionaryModel]].
  * Every candidate set is selected by the full (score, word) order, so the
@@ -43,18 +43,14 @@ final class NoisyChannelModel(
 
   @transient private lazy val pruned: Map[String, Long] =
     vocab.filter(_._2 >= minFrequency)
+  /** Built on the executor at first use: only searches the index does not
+    * serve reach it. */
   @transient lazy val trie: TokenTrie = TokenTrie.build(pruned)
-  /** Built on the executor like the trie, never broadcast; None over
-    * [[DeleteIndex.Budget]]. */
+  /** Built on the executor like the trie, never broadcast; at the largest
+    * radius up to [[MaxWidth]] that fits [[DeleteIndex.Budget]], None when
+    * not even radius 1 fits. */
   @transient private[graft] lazy val index: Option[DeleteIndex] =
     DeleteIndex.build(pruned, MaxWidth)
-  /** Code-point-reversed vocabulary trie (round 7): suffix neighborhoods of
-    * a token are prefix neighborhoods of its reversal — OSA distance is
-    * reversal-invariant (an edit script read right-to-left is a valid
-    * script of the reversed pair at the same cost; adjacent swaps stay
-    * adjacent), property-fuzzed in NoisyChannelCorrectorSpec. */
-  @transient private lazy val trieRev: TokenTrie =
-    TokenTrie.build(pruned.map { case (w, f) => (NoisyChannelModel.reverseCp(w), f) })
   @transient private lazy val totalFreq: Double =
     math.max(pruned.valuesIterator.sum.toDouble, 1.0)
   @transient private lazy val fallback: DictionaryModel =
@@ -165,7 +161,8 @@ final class NoisyChannelModel(
   /**
    * Segmentation hypothesis: the channel deletes/substitutes spaces, merging
    * adjacent words into one OOV token ("thecat", "thexcat"). Try every split
-   * point, look each side up within edit radius 1, and score the TWO-WORD
+   * point, look each side up within edit radius 1 ([[candidatesWithin]]:
+   * the index serves both sides whenever it exists), and score the TWO-WORD
    * clean string with the exact alignment DP (the deleted space is just one
    * more edit in the script) × both word priors. This is the decoding role
    * the north_star assigns to beam search, done exactly: the candidate space
@@ -174,58 +171,13 @@ final class NoisyChannelModel(
   private[graft] def splitCandidate(token: String): (String, Double) = {
     val cps = token.codePoints().toArray
     if (cps.length < 5) return null
-    // Round 7: ONE forward trie walk yields the width-1 neighborhood of
-    // every left prefix, one walk of the reversed trie over the reversed
-    // token yields every right suffix's (prefix neighborhoods of the
-    // reversal) — replacing ~2·|token| separate width-1 searches, the
-    // measured bulk of the beyond-width-2 path. Candidate SETS per split
-    // point are identical to the per-prefix searches
-    // (TokenTrie.prefixNeighborhoods scaladoc + spec); the argmax below
-    // selects by the full (score, clean-string) order, so per-set
-    // iteration order cannot change the winner. Witness:
-    // [[splitCandidateScan]].
-    val lefts = trie.prefixNeighborhoods(token, 1)
-    var rights: Array[scala.collection.mutable.ArrayBuffer[(String, Long, Int)]] = null
     var best: String = null
     var bestScore = Double.MinValue
     var i = 2
     while (i <= cps.length - 2) {
-      val lc = lefts(i)
+      val lc = candidatesWithin(new String(cps, 0, i), 1)
       if (lc.nonEmpty) {
-        if (rights == null)
-          rights = trieRev.prefixNeighborhoods(
-            NoisyChannelModel.reverseCp(new String(cps, 0, cps.length)), 1)
-        val rc = rights(cps.length - i)
-        lc.foreach { case (lw, lf, _) =>
-          rc.foreach { case (rwRev, rf, _) =>
-            val clean = lw + " " + NoisyChannelModel.reverseCp(rwRev)
-            val score = channelLogProbCp(cps, clean) +
-              math.log(lf / totalFreq) + math.log(rf / totalFreq)
-            if (score > bestScore || (score == bestScore && (best == null || clean < best))) {
-              bestScore = score; best = clean
-            }
-          }
-        }
-      }
-      i += 1
-    }
-    if (best == null) null else (best, bestScore)
-  }
-
-  /** Per-split-point search restatement of [[splitCandidate]] (the
-    * pre-round-7 shape) — kept as the equivalence witness. */
-  private[graft] def splitCandidateScan(token: String): (String, Double) = {
-    val cps = token.codePoints().toArray
-    if (cps.length < 5) return null
-    var best: String = null
-    var bestScore = Double.MinValue
-    var i = 2
-    while (i <= cps.length - 2) {
-      val left = new String(cps, 0, i)
-      val right = new String(cps, i, cps.length - i)
-      val lc = trie.searchWithin(left, 1)
-      if (lc.nonEmpty) {
-        val rc = trie.searchWithin(right, 1)
+        val rc = candidatesWithin(new String(cps, i, cps.length - i), 1)
         lc.foreach { case (lw, lf, _) =>
           rc.foreach { case (rw, rf, _) =>
             val clean = lw + " " + rw
@@ -269,15 +221,6 @@ final class NoisyChannelModel(
 object NoisyChannelModel {
   /** The widest single-word search before the dictionary fallback. */
   val MaxWidth = 3
-
-  /** Code-point reversal (surrogate-pair safe). */
-  private[correct] def reverseCp(s: String): String = {
-    val cp = s.codePoints().toArray
-    val sb = new java.lang.StringBuilder(s.length)
-    var i = cp.length - 1
-    while (i >= 0) { sb.appendCodePoint(cp(i)); i -= 1 }
-    sb.toString
-  }
 
   /** Collect + broadcast the vocabulary, pruned at `minFrequency`, as a
     * kernel model ([[TokenModel.broadcast]]). */

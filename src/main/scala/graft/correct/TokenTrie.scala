@@ -13,11 +13,12 @@ import scala.collection.mutable
  * (BASELINE.json north_star: "broadcast dictionary trie with
  * Levenshtein-automaton candidate generation").
  *
- * In [[NoisyChannelModel]] the [[DeleteIndex]] serves widths 1 to 3 for
- * tokens of at most 64 code points; the trie serves the split hypothesis
- * ([[prefixNeighborhoods]]), longer tokens, wider searches, and
- * vocabularies whose index would exceed [[DeleteIndex.Budget]]. It is also
- * the reference the index's candidate sets are spec-checked against.
+ * In [[NoisyChannelModel]] the [[DeleteIndex]] serves every search up to
+ * its radius for tokens of at most 64 code points, split sides included;
+ * the trie is built only for what the index does not serve: widths above
+ * the radius, longer tokens, and vocabularies over the radius-1
+ * [[DeleteIndex.Budget]]. It is also the reference the index's candidate
+ * sets are spec-checked against.
  */
 final class TokenTrie private (root: TokenTrie.Node, val maxDepth: Int) extends Serializable {
 
@@ -101,95 +102,13 @@ final class TokenTrie private (root: TokenTrie.Node, val maxDepth: Int) extends 
     dfs(root, 0)
     out
   }
-
-  /**
-   * The width-`maxDist` neighborhoods of EVERY token prefix in ONE walk
-   * (round 7): `result(L)` equals `searchWithin(token.take(L), maxDist)`
-   * as a SET, for every prefix length L in [0, |token|]. The banded DP row
-   * at trie depth d holds the OSA distance of the d-length trie prefix to
-   * every token prefix j in the band (cell (d, j) depends only on cells
-   * (<= d, <= j), so it IS the pair's distance regardless of what follows)
-   * — one DFS collects word nodes for every in-band column instead of
-   * column n only, replacing the O(|token|) separate prefix searches the
-   * segmentation hypothesis used to issue. Any word within `maxDist` of
-   * prefix L satisfies |len(word) - L| <= maxDist, so the band always
-   * contains the qualifying columns; the subtree prune (in-band minimum)
-   * is the union of the per-prefix walks' prunes. Per-output-order differs
-   * from per-prefix searchWithin (still deterministic: DFS order) — every
-   * consumer selects by a full ordering, so only SET equality matters
-   * (spec-asserted against per-prefix searchWithin).
-   */
-  def prefixNeighborhoods(token: String, maxDist: Int): Array[mutable.ArrayBuffer[(String, Long, Int)]] = {
-    val t = token.codePoints().toArray
-    val n = t.length
-    val W = maxDist
-    val outs = Array.fill(n + 1)(mutable.ArrayBuffer.empty[(String, Long, Int)])
-    val depthCap = math.min(maxDepth, n + W)
-    val rows = TokenTrie.rowCache.get().acquire(depthCap + 2, n + 1)
-    var j = 0
-    val hi0 = math.min(n, W)
-    while (j <= hi0) { rows(0)(j) = j; j += 1 }
-    val chars = new Array[Int](depthCap + 2)
-
-    def dfs(node: TokenTrie.Node, d: Int): Unit = {
-      if (d + 1 > depthCap) return
-      val row = rows(d)
-      val parentRow = if (d >= 1) rows(d - 1) else null
-      val nodeChar = if (d >= 1) chars(d) else -1
-      val e = d + 1
-      val loE = math.max(0, e - W); val hiE = math.min(n, e + W)
-      val loD = math.max(0, d - W); val hiD = math.min(n, d + W)
-      val loP = math.max(0, d - 1 - W); val hiP = math.min(n, d - 1 + W)
-      var i = 0
-      while (i < node.childChars.length) {
-        val ch = node.childChars(i)
-        val child = node.childNodes(i)
-        val childRow = rows(e)
-        var minV = Int.MaxValue / 4
-        var jj = loE
-        while (jj <= hiE) {
-          var v = Int.MaxValue / 4
-          if (jj == 0) v = row(0) + 1
-          else {
-            if (jj - 1 >= loE) { val ins = childRow(jj - 1) + 1; if (ins < v) v = ins }
-            if (jj >= loD && jj <= hiD) { val del = row(jj) + 1; if (del < v) v = del }
-            if (jj - 1 >= loD && jj - 1 <= hiD) {
-              val sub = row(jj - 1) + (if (ch == t(jj - 1)) 0 else 1)
-              if (sub < v) v = sub
-            }
-            if (jj >= 2 && nodeChar != -1 && ch == t(jj - 2) && nodeChar == t(jj - 1) &&
-                jj - 2 >= loP && jj - 2 <= hiP) {
-              val swap = parentRow(jj - 2) + 1
-              if (swap < v) v = swap
-            }
-          }
-          childRow(jj) = v
-          if (v < minV) minV = v
-          if (child.word != null && v <= maxDist)
-            outs(jj) += ((child.word, child.freq, v))
-          jj += 1
-        }
-        if (minV <= maxDist) {
-          chars(e) = ch
-          dfs(child, e)
-        }
-        i += 1
-      }
-    }
-    if (root.word != null) {
-      var L = 0
-      val hiR = math.min(n, maxDist)
-      while (L <= hiR) { outs(L) += ((root.word, root.freq, L)); L += 1 }
-    }
-    dfs(root, 0)
-    outs
-  }
 }
 
 object TokenTrie {
   /** Per-thread DP-row workspace, grown on demand and reused across searches
-    * — segmentation-aware inference issues ~2·len width-1 searches per merged
-    * token, so per-search allocation shows up as GC pressure at scale. */
+    * — without an index, segmentation-aware inference issues ~2·len width-1
+    * searches per merged token, so per-search allocation shows up as GC
+    * pressure at scale. */
   private final class RowWorkspace {
     private var rows: Array[Array[Int]] = Array.empty
     def acquire(nRows: Int, rowLen: Int): Array[Array[Int]] = {

@@ -54,10 +54,11 @@ case class FpDedupEvent(text_fp: String, doc_id: String, event: String, n_dups: 
  *    (`mapPartitions` over whole docs, spans corrected in place) — no
  *    explode/regroup, so the streaming query needs no shuffle or state for
  *    correction itself and span order is trivially preserved. This is the
- *    same kernel slot as the batch path (equivalence-tested in
- *    StreamingSpec); the batch pipeline keeps the explode→reassemble form
- *    because batch can afford the shuffle and gains per-span parallelism for
- *    pathological documents.
+ *    same doc-level loop, [[Corrector.correctDocs]], that the production
+ *    batch path (`CheckpointedRun.run`) runs in place in each doc row; the
+ *    explode→reassemble form (`CorrectionPipeline.run`) is kept as the
+ *    equivalence witness (StreamingSpec) and for the traced benchmark's
+ *    layer timings.
  *  - Deduplication uses `dropDuplicatesWithinWatermark` on the content
  *    fingerprint — bounded state, the streaming analog of D1.
  *  - Sessionization uses event-time `session_window` aggregation with a
